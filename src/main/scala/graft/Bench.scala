@@ -2,26 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // static conf, default 100: the full query suite generates several
-      // hundred codegen classes, so the default LRU recompiles hot
-      // stages mid-suite — later queries pay Janino time that isolated
-      // runs of the same query don't
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
-    // Warm-up: pay JVM/codegen/scan-setup cost outside the timed region
-    // so the first query's number isn't session startup. Uses only the
-    // configured sfDir (no hardcoded dataset path).
-    spark.range(100000).selectExpr("sum(id % 7)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession.local(GraftSession.cpus)
+    GraftSession.warmUp(spark, sfDir)
     // Sink via the noop data source: every projection/expression executes
     // (a bare count() lets Catalyst prune unused deterministic projections,
     // so projection-heavy queries would never run their hot loops).
@@ -62,13 +45,8 @@ object Bench {
     // Fixed name order: HashMap iteration reshuffles whenever the query
     // set changes, silently moving queries relative to session warmup —
     // sorted order keeps per-query numbers comparable across rounds.
-    // SPARK_GRAFT_ONLY=q52_dup_clusters[,q65_...] narrows the run for
-    // local iteration; the driver never sets it, so round benches are
-    // always the full suite.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+      .filter { case (n, _) => GraftSession.selects(n) }
       .map {
       case (name, fn) =>
         val (a, b) = (once(name, fn), once(name, fn))

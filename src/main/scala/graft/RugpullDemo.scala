@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.domain.Rugpull
@@ -51,15 +50,8 @@ object RugpullDemo {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("rugpull-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus)
     import spark.implicits._
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
 
     val dir = Files.createTempDirectory("rugpull-demo")
     writeBlocks(dir)

@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke: replicates the driver's t1 check (entry() rows > 0 on
   * sf0.001) and prints the result head so a human can eyeball it. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
+    val spark = GraftSession.local(GraftSession.cpus)
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(10, truncate = false)

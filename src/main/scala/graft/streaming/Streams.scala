@@ -445,12 +445,6 @@ object Streams {
       .start()
   }
 
-  /** Watermarked stream–stream interval join: each left event pairs with
-    * right events of the same key whose event time is within
-    * [leftTs - lookback, leftTs]. Both sides need watermarks so the
-    * engine can bound join state — the scale property that matters with
-    * unbounded streams. Columns: left(key, lts, ...), right(key, rts,
-    * ...); caller ensures distinct names apart from the key. */
   /** Balance observation for the streaming drain monitor. */
   case class BalanceEvent(key: String, ts: Long, balance: Double)
 
@@ -677,6 +671,12 @@ object Streams {
       }
   }
 
+  /** Watermarked stream–stream interval join: each left event pairs with
+    * right events of the same key whose event time is within
+    * [leftTs - lookback, leftTs]. Both sides need watermarks so the
+    * engine can bound join state — the scale property that matters with
+    * unbounded streams. Columns: left(key, lts, ...), right(key, rts,
+    * ...); caller ensures distinct names apart from the key. */
   def intervalJoin(left: DataFrame, right: DataFrame, keyCol: String,
                    leftTs: String, rightTs: String, lookback: String,
                    watermark: String): DataFrame = {

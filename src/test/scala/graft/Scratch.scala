@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
@@ -27,18 +27,9 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // UTC like every other entry point: Tables.events' NTZ-vintage
-      // cast is timezone-dependent, and probe numbers must be produced
-      // under the same clock Bench/Verify use
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(spark)
-    spark.range(100000).selectExpr("sum(id % 7)").collect()
+    val d = GraftSession.sfDir
+    val spark = GraftSession.local(GraftSession.cpus)
+    GraftSession.warmUp(spark, d)
     // A/B knob for the traversal Bloom pushdown (probe-only): the
     // production default engages only in the sort-merge regime; set
     // GRAFT_BLOOM_FORCE=1 to force it on in the hash regime for a

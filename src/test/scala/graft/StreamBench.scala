@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming-flagship throughput probe (test scope, like [[Scratch]]):
@@ -38,13 +38,9 @@ object StreamBench {
     // shuffle stage — a real per-block deployment sizes this to the
     // block, not to the batch backfill (where AQE coalesces anyway)
     val shufP = if (sustained || args.length < 3) 8 else args(2).toInt
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", shufP.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", shufP.toString)
     import spark.implicits._
-    GraftFunctions.register(spark)
     spark.range(100000).selectExpr("sum(id % 7)").collect() // warm
 
     // --- deterministic block synthesis (no RNG: round-tripable) -----

@@ -12,6 +12,11 @@ object TestBridge {
   def optimizerRules(ext: SparkSessionExtensions, spark: SparkSession) =
     ext.buildOptimizerRules(spark)
 
+  /** Blocks until every posted listener event has been delivered
+    * (`listenerBus` is private[spark]). */
+  def drainListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Per-operator metrics of the LAST completed SQL execution: lines of
     * "nodeName | metric=value, ..." in plan-graph order (UI-less stand-in
     * for the SQL tab, for the optimization-round profilers;

@@ -102,6 +102,13 @@ object Graph {
   private case class PlannedAdj(adj: DataFrame, rows: Long,
                                 scratch: Option[String], buckets: Long)
 
+  /** Local-mode scratch base for the auto-engaged disk adjacency: the
+    * first non-blank entry of `spark.local.dir`, which may list several
+    * comma-separated directories, else `java.io.tmpdir`. */
+  private[graft] def localScratchDir(localDir: Option[String]): String =
+    localDir.iterator.flatMap(_.split(',')).map(_.trim).find(_.nonEmpty)
+      .getOrElse(System.getProperty("java.io.tmpdir", "/tmp"))
+
   /** Plan the traversal adjacency: the in-memory hash-partitioned
     * checkpoint (default), or the opt-in disk-bucketed parquet layout
     * (see [[AdjScratchKey]]). The disk path writes STRAIGHT from the
@@ -153,8 +160,7 @@ object Graph {
     val scratch = scratchConf.orElse {
       if (estRows < AdjDiskMinRows) None
       else if (spark.sparkContext.isLocal)
-        Some(spark.conf.getOption("spark.local.dir")
-          .getOrElse(System.getProperty("java.io.tmpdir", "/tmp")))
+        Some(localScratchDir(spark.conf.getOption("spark.local.dir")))
       else {
         System.err.println(
           s"graft: adjacency estimated at ~$estRows rows exceeds the " +

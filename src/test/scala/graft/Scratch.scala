@@ -509,7 +509,7 @@ object Scratch {
       * touched per round all scale 10×, so linear growth is the pass
       * criterion for the "per-round cost ∝ touched edges" claim. */
     /** Shared traversal-probe model (q149 BFS / q166 SSSP): the
-      * product basket-pair graph (mirrors SparkEntry.cappedBaskets —
+      * product basket-pair graph (mirrors GraphQueries.cappedBaskets —
       * no pre-distinct, collect_set dedups), disconnected replica
       * copies with the SAME 10 seeds suffixed into every replica, so
       * reachable set / frontier / touched edges all scale exactly

@@ -26,6 +26,17 @@ class GraphSpec extends SparkSpec {
     r
   }
 
+  test("disk adjacency scratch base: first non-blank spark.local.dir " +
+      "entry, else java.io.tmpdir") {
+    val tmp = System.getProperty("java.io.tmpdir", "/tmp")
+    assert(Graph.localScratchDir(Some("/a,/b")) === "/a")
+    assert(Graph.localScratchDir(Some(" /a ")) === "/a")
+    assert(Graph.localScratchDir(Some("/a")) === "/a")
+    assert(Graph.localScratchDir(Some(" , /b")) === "/b")
+    assert(Graph.localScratchDir(None) === tmp)
+    assert(Graph.localScratchDir(Some(" ")) === tmp)
+  }
+
   test("pageRank matches reference on a seeded digraph WITH sinks") {
     val rnd = new scala.util.Random(11)
     // 30 nodes, ~90 random edges; nodes 27..29 get no out-edges (sinks)

@@ -1,5 +1,7 @@
 package graft.functions
 
+import Bytes._
+
 /** REAL sample decode for a COMPRESSED audio format that needs no codec
   * library: IMA/DVI ADPCM inside RIFF/WAVE (wFormatTag 0x11). Each
   * 4-bit nibble encodes a quantized delta against a running predictor;
@@ -56,11 +58,6 @@ object AdpcmWav {
                       meanAmp: Double, rms: Double, peak: Int,
                       lastSample: Int)
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def le32(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
-
   /** Advance the state machine by one nibble; returns packed
     * (pred, idx). Shared by decode and the spec's reference replay. */
   @inline private def stepState(pred: Int, idx: Int, n: Int): (Int, Int) = {
@@ -80,26 +77,8 @@ object AdpcmWav {
     * decodePartitions injection point). Corrupt payloads are DATA
     * (None), never exceptions. */
   def decode(b: Array[Byte]): Option[Features] = {
-    if (b == null || b.length < 44) return None
-    if (u8(b, 0) != 'R' || u8(b, 1) != 'I' || u8(b, 2) != 'F' ||
-      u8(b, 3) != 'F' || u8(b, 8) != 'W' || u8(b, 9) != 'A' ||
-      u8(b, 10) != 'V' || u8(b, 11) != 'E') return None
-    // chunk walk: order-independent, Long cursor (a corrupt uint32
-    // chunk size must not wrap an Int cursor past the length guard)
-    var fmtAt = -1; var fmtSize = 0L; var dataAt = -1; var dataLen = 0L
-    var i = 12L
-    while (i + 8 <= b.length && (fmtAt < 0 || dataAt < 0)) {
-      val at = i.toInt
-      val size = le32(b, at + 4).toLong & 0xffffffffL
-      val id = (u8(b, at), u8(b, at + 1), u8(b, at + 2), u8(b, at + 3))
-      if (id == ('f'.toInt, 'm'.toInt, 't'.toInt, ' '.toInt)) {
-        fmtAt = at; fmtSize = size
-      } else if (id == ('d'.toInt, 'a'.toInt, 't'.toInt, 'a'.toInt)) {
-        dataAt = at + 8
-        dataLen = math.min(size, b.length.toLong - dataAt)
-      }
-      i += 8 + size + (size & 1)
-    }
+    if (b == null || b.length < 44 || !Riff.isWave(b)) return None
+    val Riff.WaveChunks(fmtAt, fmtSize, dataAt, dataLen) = Riff.waveChunks(b)
     if (fmtAt < 0 || dataAt < 0) return None
     // IMA ADPCM fmt is 20 bytes: 16 base + cbSize(2) + samplesPerBlock(2)
     if (fmtSize < 20 || fmtAt + 28 > b.length) return None
@@ -163,28 +142,20 @@ object AdpcmWav {
     val spb = 1 + (blockAlign - 4) * 2
     val dataLen = nBlocks * blockAlign
     val b = new Array[Byte](48 + dataLen)
-    def put16(i: Int, v: Int): Unit = {
-      b(i) = (v & 0xff).toByte; b(i + 1) = ((v >> 8) & 0xff).toByte
-    }
-    def put32(i: Int, v: Int): Unit = {
-      put16(i, v & 0xffff); put16(i + 2, (v >> 16) & 0xffff)
-    }
-    def putId(i: Int, s: String): Unit =
-      s.indices.foreach(j => b(i + j) = s(j).toByte)
-    putId(0, "RIFF"); put32(4, 40 + dataLen); putId(8, "WAVE")
-    putId(12, "fmt "); put32(16, 20)
-    put16(20, 0x11)                        // IMA ADPCM
-    put16(22, 1); put32(24, sampleRate)    // mono
-    put32(28, sampleRate * blockAlign / math.max(1, spb)) // approx byte rate
-    put16(32, blockAlign)
-    put16(34, 4)                           // bits per (compressed) sample
-    put16(36, 2)                           // cbSize
-    put16(38, spb)                         // wSamplesPerBlock
-    putId(40, "data"); put32(44, dataLen)
+    putId(b, 0, "RIFF"); put32(b, 4, 40 + dataLen); putId(b, 8, "WAVE")
+    putId(b, 12, "fmt "); put32(b, 16, 20)
+    put16(b, 20, 0x11)                     // IMA ADPCM
+    put16(b, 22, 1); put32(b, 24, sampleRate) // mono
+    put32(b, 28, sampleRate * blockAlign / math.max(1, spb)) // approx byte rate
+    put16(b, 32, blockAlign)
+    put16(b, 34, 4)                        // bits per (compressed) sample
+    put16(b, 36, 2)                        // cbSize
+    put16(b, 38, spb)                      // wSamplesPerBlock
+    putId(b, 40, "data"); put32(b, 44, dataLen)
     var blk = 0
     while (blk < nBlocks) {
       val base = 48 + blk * blockAlign
-      put16(base, pred0(blk) & 0xffff)
+      put16(b, base, pred0(blk) & 0xffff)
       b(base + 2) = (math.max(0, math.min(88, idx0(blk))) & 0xff).toByte
       b(base + 3) = 0
       var j = 0

@@ -1,5 +1,7 @@
 package graft.functions
 
+import Bytes._
+
 /** REAL pixel decode for the one raster format that needs no codec
   * library: uncompressed 24-bit BMP (BITMAPINFOHEADER, BI_RGB). This
   * upgrades the multimodal pixel tier from "deterministic fake" to an
@@ -20,12 +22,6 @@ object BmpPixels {
     * the Rec.601 weighting). */
   case class Features(width: Int, height: Int, meanR: Double,
                       meanG: Double, meanB: Double, meanLuma: Double)
-
-  private def le16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def le32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-      ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
 
   /** Decode a 24bpp BI_RGB BMP to pixel statistics; None for anything
     * else (other depths/compressions need a real codec library — the
@@ -72,17 +68,11 @@ object BmpPixels {
     val rowSize = ((w * 3 + 3) / 4) * 4
     val size = 54 + rowSize * h
     val b = new Array[Byte](size)
-    def put16(i: Int, v: Int): Unit = {
-      b(i) = (v & 0xff).toByte; b(i + 1) = ((v >> 8) & 0xff).toByte
-    }
-    def put32(i: Int, v: Int): Unit = {
-      put16(i, v & 0xffff); put16(i + 2, (v >> 16) & 0xffff)
-    }
     b(0) = 'B'; b(1) = 'M'
-    put32(2, size); put32(10, 54); put32(14, 40)
-    put32(18, w); put32(22, h)                    // bottom-up
-    put16(26, 1); put16(28, 24); put32(30, 0)
-    put32(34, rowSize * h)
+    put32(b, 2, size); put32(b, 10, 54); put32(b, 14, 40)
+    put32(b, 18, w); put32(b, 22, h)              // bottom-up
+    put16(b, 26, 1); put16(b, 28, 24); put32(b, 30, 0)
+    put32(b, 34, rowSize * h)
     for (y <- 0 until h; x <- 0 until w) {
       val (r, g, bl) = px(x, y)
       // bottom-up storage: image row y lands at file row h-1-y

@@ -1,5 +1,7 @@
 package graft.functions
 
+import Bytes.{BitReader, BitWriter, ParseEx, bail}
+
 /** REAL sample decode for LOSSLESS compressed audio: FLAC — 1–8
   * channels at every standard depth the frame header can code
   * (8/12/16/20/24/32-bit), subframes CONSTANT, VERBATIM,
@@ -51,10 +53,6 @@ object FlacAudio {
                       meanAmp: Double, rms: Double, peak: Int,
                       lastSample: Int, bitsPerSample: Int = 16)
 
-  /** Internal parse-abort signal; never escapes [[decode]]. */
-  private final class ParseEx extends RuntimeException(null, null, false, false)
-  private def bail(): Nothing = throw new ParseEx
-
   private def crc8(b: Array[Byte], from: Int, until: Int): Int = {
     var crc = 0
     var i = from
@@ -85,54 +83,6 @@ object FlacAudio {
       i += 1
     }
     crc
-  }
-
-  /** MSB-first bit reader over a byte range; every read is bounds-
-    * checked and aborts the parse (→ None) on exhaustion. */
-  private final class BitReader(b: Array[Byte], startByte: Int,
-                                endByte: Int) {
-    private var bit = startByte * 8L
-    private val endBit = endByte * 8L
-    def bytePos: Int = ((bit + 7) / 8).toInt
-    def aligned: Boolean = bit % 8 == 0
-    def readBits(n: Int): Long = {
-      if (n == 0) return 0L
-      if (bit + n > endBit) bail()
-      var v = 0L
-      var k = 0
-      while (k < n) {
-        val by = (bit >> 3).toInt
-        val off = 7 - (bit & 7).toInt
-        v = (v << 1) | ((b(by) >> off) & 1)
-        bit += 1; k += 1
-      }
-      v
-    }
-    def readSigned(n: Int): Int = {
-      val v = readBits(n)
-      ((v << (64 - n)) >> (64 - n)).toInt // sign-extend
-    }
-    // Long-domain signed read: decorrelated stereo carries the side
-    // channel at bps+1, which at a 32-bit depth is 33 bits — past the
-    // Int sample domain, so subframe samples decode as Long throughout
-    def readSignedL(n: Int): Long = {
-      val v = readBits(n)
-      (v << (64 - n)) >> (64 - n)
-    }
-    def readUnary(): Int = {
-      var q = 0
-      while ({ if (bit >= endBit) bail(); true } &&
-        ((b((bit >> 3).toInt) >> (7 - (bit & 7).toInt)) & 1) == 0) {
-        bit += 1; q += 1
-      }
-      bit += 1 // consume the terminating 1
-      q
-    }
-    def alignToByte(): Unit = {
-      // padding bits must be zero per spec; a nonzero pad means the
-      // stream is out of sync
-      while (bit % 8 != 0) { if (readBits(1) != 0L) bail() }
-    }
   }
 
   private val FixedCoef: Array[Array[Int]] = Array(
@@ -440,25 +390,6 @@ object FlacAudio {
       }
     } else bail() // reserved subframe types (2-7, 13-31)
     samples
-  }
-
-  /** MSB-first bit writer (fixture side). */
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0; private var nbits = 0
-    def writeBits(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >>> i) & 1L).toInt
-        nbits += 1
-        if (nbits == 8) { out.write(cur); cur = 0; nbits = 0 }
-        i -= 1
-      }
-    }
-    def writeUnary(q: Int): Unit = { writeBits(0, q); writeBits(1, 1) }
-    def alignZero(): Unit =
-      if (nbits > 0) { out.write(cur << (8 - nbits)); cur = 0; nbits = 0 }
-    def bytes: Array[Byte] = { require(nbits == 0); out.toByteArray }
   }
 
   /** FIXTURE synthesis (bounded; test/oracle side only): a conformant

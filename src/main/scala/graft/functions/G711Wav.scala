@@ -1,5 +1,7 @@
 package graft.functions
 
+import Bytes._
+
 /** REAL sample decode for the PERCEPTUAL/companded audio tier: ITU-T
   * G.711 μ-law and A-law inside RIFF/WAVE (wFormatTag 7 and 6 — the
   * telephony codecs every voice corpus contains). G.711 is lossy
@@ -52,35 +54,12 @@ object G711Wav {
     if ((a & 0x80) != 0) mag else -mag
   }
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def le32(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
-
   /** Decode a G.711 WAV payload (format 6/7, 8-bit) to expanded-sample
     * statistics; None for PCM/other formats (WavPcm's domain) and for
     * corrupt payloads — data, never exceptions, at 100 TB. */
   def decode(b: Array[Byte]): Option[Features] = {
-    if (b == null || b.length < 46) return None
-    if (u8(b, 0) != 'R' || u8(b, 1) != 'I' || u8(b, 2) != 'F' ||
-      u8(b, 3) != 'F' || u8(b, 8) != 'W' || u8(b, 9) != 'A' ||
-      u8(b, 10) != 'V' || u8(b, 11) != 'E') return None
-    // order-independent chunk walk, Long cursor (the WavPcm lesson:
-    // a corrupt uint32 size must not wrap an Int cursor past a guard)
-    var fmtAt = -1; var fmtSize = 0L; var dataAt = -1; var dataLen = 0L
-    var i = 12L
-    while (i + 8 <= b.length && (fmtAt < 0 || dataAt < 0)) {
-      val at = i.toInt
-      val size = le32(b, at + 4).toLong & 0xffffffffL
-      val id = (u8(b, at), u8(b, at + 1), u8(b, at + 2), u8(b, at + 3))
-      if (id == ('f'.toInt, 'm'.toInt, 't'.toInt, ' '.toInt)) {
-        fmtAt = at; fmtSize = size
-      } else if (id == ('d'.toInt, 'a'.toInt, 't'.toInt, 'a'.toInt)) {
-        dataAt = at + 8
-        dataLen = math.min(size, b.length.toLong - dataAt)
-      }
-      i += 8 + size + (size & 1)
-    }
+    if (b == null || b.length < 46 || !Riff.isWave(b)) return None
+    val Riff.WaveChunks(fmtAt, fmtSize, dataAt, dataLen) = Riff.waveChunks(b)
     if (fmtAt < 0 || dataAt < 0) return None
     if (fmtSize < 16 || fmtAt + 24 > b.length) return None
     val audioFormat = le16(b, fmtAt + 8)
@@ -120,24 +99,16 @@ object G711Wav {
     val dataLen = nFrames * channels
     val pad = dataLen & 1
     val b = new Array[Byte](58 + dataLen + pad)
-    def put16(i: Int, v: Int): Unit = {
-      b(i) = (v & 0xff).toByte; b(i + 1) = ((v >> 8) & 0xff).toByte
-    }
-    def put32(i: Int, v: Int): Unit = {
-      put16(i, v & 0xffff); put16(i + 2, (v >> 16) & 0xffff)
-    }
-    def putId(i: Int, s: String): Unit =
-      s.indices.foreach(j => b(i + j) = s(j).toByte)
-    putId(0, "RIFF"); put32(4, 50 + dataLen + pad); putId(8, "WAVE")
-    putId(12, "fmt "); put32(16, 18)      // extended fmt for non-PCM
-    put16(20, if (mu) 7 else 6)           // WAVE_FORMAT_MULAW / _ALAW
-    put16(22, channels); put32(24, sampleRate)
-    put32(28, sampleRate * channels)      // byte rate (1 byte/sample)
-    put16(32, channels)                   // block align
-    put16(34, 8)                          // bits per sample
-    put16(36, 0)                          // cbSize
-    putId(38, "fact"); put32(42, 4); put32(46, nFrames)
-    putId(50, "data"); put32(54, dataLen)
+    putId(b, 0, "RIFF"); put32(b, 4, 50 + dataLen + pad); putId(b, 8, "WAVE")
+    putId(b, 12, "fmt "); put32(b, 16, 18) // extended fmt for non-PCM
+    put16(b, 20, if (mu) 7 else 6)        // WAVE_FORMAT_MULAW / _ALAW
+    put16(b, 22, channels); put32(b, 24, sampleRate)
+    put32(b, 28, sampleRate * channels)   // byte rate (1 byte/sample)
+    put16(b, 32, channels)                // block align
+    put16(b, 34, 8)                       // bits per sample
+    put16(b, 36, 0)                       // cbSize
+    putId(b, 38, "fact"); put32(b, 42, 4); put32(b, 46, nFrames)
+    putId(b, 50, "data"); put32(b, 54, dataLen)
     var p = 58
     var t = 0
     while (t < nFrames) {

@@ -1,5 +1,8 @@
 package graft.functions
 
+import Bytes.{ParseEx, bail, rasterFits}
+import Bytes.Checked._
+
 /** REAL pixel decode for GIF — the LZW half of the classic-compression
   * spectrum. With PNG (DEFLATE), FLAC (Rice), IMA ADPCM (delta-PCM)
   * and JPEG (DCT via the JDK codec) this completes the family: every
@@ -30,15 +33,6 @@ object GifPixels {
 
   case class Features(width: Int, height: Int, meanR: Double,
                       meanG: Double, meanB: Double, ordCk: Long)
-
-  private final class ParseEx extends RuntimeException(null, null, false, false)
-  private def bail(): Nothing = throw new ParseEx
-
-  private def u8(b: Array[Byte], i: Int): Int = {
-    if (i < 0 || i >= b.length) bail()
-    b(i) & 0xff
-  }
-  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
 
   /** Decode the first frame; None on anything outside the supported
     * profile or any structural damage. */
@@ -73,7 +67,8 @@ object GifPixels {
               val n = 2 << (ipacked & 0x7)
               pal = readPalette(b, i, n); i += 3 * n
             }
-            if (pal == null || w <= 0 || h <= 0) return None
+            // the raster ceiling bounds w * h before anything allocates
+            if (pal == null || !rasterFits(w, h)) return None
             val minCode = u8(b, i); i += 1
             if (minCode < 2 || minCode > 8) return None
             // concatenate the length-prefixed data sub-blocks

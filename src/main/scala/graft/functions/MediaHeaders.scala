@@ -1,5 +1,7 @@
 package graft.functions
 
+import Bytes._
+
 /** Dependency-free REAL header parsers for common media containers.
   * Pixel/sample decode needs native codecs (absent in this environment,
   * and out of scope for a query engine); container METADATA does not —
@@ -22,14 +24,6 @@ object MediaHeaders {
   final case class MediaInfo(format: String, width: Int, height: Int,
                              channels: Int)
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def be16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
-  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def be32(b: Array[Byte], i: Int): Int =
-    (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
-  private def le32(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
-
   private def startsWith(b: Array[Byte], sig: Array[Int]): Boolean =
     b.length >= sig.length && sig.indices.forall(i => u8(b, i) == sig(i))
 
@@ -37,7 +31,6 @@ object MediaHeaders {
   private val PngSig = Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
   private val Gif87 = "GIF87a".map(_.toInt).toArray
   private val Gif89 = "GIF89a".map(_.toInt).toArray
-  private val Riff = "RIFF".map(_.toInt).toArray
 
   /** PNG: 8-byte signature, then the IHDR chunk at a fixed offset —
     * width/height big-endian at 16/20, color type at 25 mapping to the
@@ -108,31 +101,18 @@ object MediaHeaders {
   }
 
   /** WAV: RIFF/WAVE container, then a WALK of the chunk list to the
-    * `fmt ` chunk (real files often lead with JUNK/bext/LIST chunks —
+    * first `fmt ` chunk (real files often lead with JUNK/bext/LIST chunks —
     * assuming fmt sits first would read those bytes as garbage
     * metadata). Chunks are [id 4][size 4][payload size, word-aligned].
     * Reported as width = sample rate, height = bits per sample. */
   private def wav(b: Array[Byte]): Option[MediaInfo] = {
-    if (b.length < 36 || !startsWith(b, Riff) ||
-      u8(b, 8) != 'W' || u8(b, 9) != 'A' ||
-      u8(b, 10) != 'V' || u8(b, 11) != 'E') return None
-    // walk with LONG indices: the uint32 size field of a corrupt chunk
-    // can be ~2^31, and Int stepping would wrap negative — passing the
-    // loop guard and crashing the task instead of returning None
-    var i = 12L
-    while (i + 8 <= b.length) {
-      val at = i.toInt
-      val size = le32(b, at + 4).toLong & 0xffffffffL // uint32
-      if (u8(b, at) == 'f' && u8(b, at + 1) == 'm' &&
-        u8(b, at + 2) == 't' && u8(b, at + 3) == ' ') {
-        return if (size >= 16 && i + 8 + 16 <= b.length)
-          Some(MediaInfo("wav", le32(b, at + 12), le16(b, at + 22),
-            le16(b, at + 10)))
-        else None
-      }
-      i += 8 + size + (size & 1) // chunks are word-aligned
-    }
-    None
+    if (b.length < 36 || !Riff.isWave(b)) return None
+    val wave = Riff.waveChunks(b, needData = false)
+    val at = wave.fmtAt
+    if (at >= 0 && wave.fmtSize >= 16 && at + 24 <= b.length)
+      Some(MediaInfo("wav", le32(b, at + 12), le16(b, at + 22),
+        le16(b, at + 10)))
+    else None
   }
 
   /** Try every known container; None for unknown/corrupt payloads. */

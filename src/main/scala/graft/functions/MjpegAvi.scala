@@ -1,5 +1,9 @@
 package graft.functions
 
+import java.awt.image.Raster
+
+import Bytes._
+
 /** REAL frame decode for a CODED video format: Motion-JPEG inside the
   * RIFF/AVI container. MJPEG codes every frame as an independent
   * baseline JPEG, so with [[JpegPixels]] (the JDK's own `javax.imageio`
@@ -37,54 +41,30 @@ object MjpegAvi {
   case class Features(nFrames: Int, width: Int, height: Int,
                       channels: Int, meanLuma: Double, motion: Double)
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def le32(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
-  private def fourCc(b: Array[Byte], i: Int): String =
-    new String(Array(b(i), b(i + 1), b(i + 2), b(i + 3)), "US-ASCII")
-
   /** Collect the payload ranges of every video-frame chunk ('##dc' /
-    * '##db') under the 'movi' LIST, descending one level into 'rec '
-    * groups. Returns (offset, length) pairs in stream order. */
+    * '##db') under the 'movi' LIST, descending into 'rec ' groups
+    * inside it (depth-bounded, [[Riff.AviMaxDepth]]). Returns
+    * (offset, length) pairs in stream order. */
   private def frameChunks(b: Array[Byte]): Seq[(Int, Int)] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    def isFrameId(id: String): Boolean =
-      id.length == 4 && id(0).isDigit && id(1).isDigit &&
-        id(2) == 'd' && (id(3) == 'c' || id(3) == 'b')
-    def walk(from: Long, to: Long, depth: Int): Unit = {
-      var i = from
-      while (i + 8 <= to) {
-        val at = i.toInt
-        val id = fourCc(b, at)
-        val size = le32(b, at + 4).toLong & 0xffffffffL
-        val end = math.min(to, at + 8 + size)
-        if (id == "LIST" && i + 12 <= to) {
-          val listType = fourCc(b, at + 8)
-          // movi at top level; 'rec ' one level inside movi
-          if (listType == "movi" || (listType == "rec " && depth > 0))
-            walk(at + 12L, end, depth + 1)
-        } else if (depth > 0 && isFrameId(id) && at + 8 + size <= b.length)
+    Riff.walkAvi(b)((lt, inMovi) => lt == Riff.Movi || (lt == Riff.Rec && inMovi)) {
+      (at, id, size, inMovi) =>
+        if (inMovi && Riff.isFrameId(id, dib = true) && at + 8 + size <= b.length)
           out += ((at + 8, size.toInt))
-        i += 8 + size + (size & 1)
-      }
     }
-    if (b.length >= 12 && fourCc(b, 0) == "RIFF" && fourCc(b, 8) == "AVI ")
-      walk(12L, math.min(b.length.toLong, 8L + (le32(b, 4).toLong & 0xffffffffL)), 0)
     out.toSeq
   }
 
-  /** Decode an MJPEG AVI payload to frame statistics; None for
-    * non-AVI/frameless/corrupt payloads or dimension-inconsistent
-    * streams (corrupt rows are data at scale, not exceptions). */
-  def decode(b: Array[Byte]): Option[Features] = {
+  /** Decode each frame chunk through the JDK JPEG codec and hand its
+    * raster to `f`, stopping at the first frame that does not decode,
+    * changes dimensions or that `f` rejects. The clip's (width, height)
+    * when every frame passed; None for non-AVI or frameless payloads. */
+  private def eachFrame(b: Array[Byte])(f: Raster => Boolean)
+      : Option[(Int, Int)] = {
     if (b == null || b.length < 24) return None
     val frames = frameChunks(b)
     if (frames.isEmpty) return None
-    var w = -1; var h = -1; var ch = -1
-    var lumaTotal = 0L      // scaled by 1000 so RGB luma stays integral
-    var motionTotal = 0L
-    var prevSum = 0L
-    var nf = 0
+    var w = -1; var h = -1
     val it = frames.iterator
     while (it.hasNext) {
       val (off, len) = it.next()
@@ -95,39 +75,56 @@ object MjpegAvi {
       if (img == null) return None
       if (w < 0) { w = img.getWidth; h = img.getHeight }
       else if (img.getWidth != w || img.getHeight != h) return None
-      val raster = img.getRaster
+      if (!f(img.getRaster)) return None
+    }
+    if (w <= 0 || h <= 0) None else Some((w, h))
+  }
+
+  /** Decode an MJPEG AVI payload to frame statistics; None for
+    * non-AVI/frameless/corrupt payloads or dimension-inconsistent
+    * streams (corrupt rows are data at scale, not exceptions). */
+  def decode(b: Array[Byte]): Option[Features] = {
+    var ch = -1
+    var lumaTotal = 0L      // scaled by 1000 so RGB luma stays integral
+    var motionTotal = 0L
+    var prevSum = 0L
+    var nf = 0
+    eachFrame(b) { raster =>
       val bands = raster.getNumBands
       val frameCh = if (bands >= 3) 3 else 1
-      if (ch < 0) ch = frameCh else if (ch != frameCh) return None
-      // per-frame luma sum ×1000: exact integers for gray (s*1000) and
-      // for RGB via integer Rec.601 milli-weights (299/587/114)
-      var s = 0L
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          s +=
-            (if (bands >= 3)
-              299L * raster.getSample(x, y, 0) +
-                587L * raster.getSample(x, y, 1) +
-                114L * raster.getSample(x, y, 2)
-            else 1000L * raster.getSample(x, y, 0))
-          x += 1
+      if (ch < 0) ch = frameCh
+      ch == frameCh && {
+        // per-frame luma sum ×1000: exact integers for gray (s*1000) and
+        // for RGB via integer Rec.601 milli-weights (299/587/114)
+        var s = 0L
+        var y = 0
+        while (y < raster.getHeight) {
+          var x = 0
+          while (x < raster.getWidth) {
+            s +=
+              (if (bands >= 3)
+                299L * raster.getSample(x, y, 0) +
+                  587L * raster.getSample(x, y, 1) +
+                  114L * raster.getSample(x, y, 2)
+              else 1000L * raster.getSample(x, y, 0))
+            x += 1
+          }
+          y += 1
         }
-        y += 1
+        lumaTotal += s
+        if (nf > 0) motionTotal += math.abs(s - prevSum)
+        prevSum = s
+        nf += 1
+        true
       }
-      lumaTotal += s
-      if (nf > 0) motionTotal += math.abs(s - prevSum)
-      prevSum = s
-      nf += 1
+    }.map { case (w, h) =>
+      val nPix = nf.toLong * w * h
+      val meanLuma = lumaTotal.toDouble / (nPix * 1000L)
+      val motion =
+        if (nf < 2) 0.0
+        else motionTotal.toDouble / ((nf - 1).toLong * w * h * 1000L)
+      Features(nf, w, h, ch, meanLuma, motion)
     }
-    if (w <= 0 || h <= 0) return None
-    val nPix = nf.toLong * w * h
-    val meanLuma = lumaTotal.toDouble / (nPix * 1000L)
-    val motion =
-      if (nf < 2) 0.0
-      else motionTotal.toDouble / ((nf - 1).toLong * w * h * 1000L)
-    Some(Features(nf, w, h, ch, meanLuma, motion))
   }
 
   /** Per-frame GRAYSCALE pixel sums — the multi-ROW decode surface
@@ -138,36 +135,21 @@ object MjpegAvi {
     * frames (RGB goes through [[decode]]'s aggregate path — per-frame
     * RGB rows would force a lossy luma weighting here). */
   def grayFrameSums(b: Array[Byte]): Option[(Int, Int, Seq[Long])] = {
-    if (b == null || b.length < 24) return None
-    val frames = frameChunks(b)
-    if (frames.isEmpty) return None
-    var w = -1; var h = -1
     val sums = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val it = frames.iterator
-    while (it.hasNext) {
-      val (off, len) = it.next()
-      val payload = java.util.Arrays.copyOfRange(b, off, off + len)
-      val img =
-        try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-        catch { case _: Exception => null }
-      if (img == null) return None
-      if (w < 0) { w = img.getWidth; h = img.getHeight }
-      else if (img.getWidth != w || img.getHeight != h) return None
-      val raster = img.getRaster
-      if (raster.getNumBands != 1) return None
-      var s = 0L
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) { s += raster.getSample(x, y, 0); x += 1 }
-        y += 1
+    eachFrame(b) { raster =>
+      raster.getNumBands == 1 && {
+        var s = 0L
+        var y = 0
+        while (y < raster.getHeight) {
+          var x = 0
+          while (x < raster.getWidth) { s += raster.getSample(x, y, 0); x += 1 }
+          y += 1
+        }
+        sums += s
+        true
       }
-      sums += s
-    }
-    if (w <= 0 || h <= 0) None else Some((w, h, sums.toSeq))
+    }.map { case (w, h) => (w, h, sums.toSeq) }
   }
-
-  private def be(s: String): Array[Byte] = s.getBytes("US-ASCII")
 
   /** FIXTURE synthesis (bounded; test/oracle side only): a minimal
     * valid MJPEG AVI of grayscale frames whose 8×8 blocks are each the
@@ -182,40 +164,10 @@ object MjpegAvi {
     val (w, h) = (wBlocks * 8, hBlocks * 8)
     val jpegs = (0 until nFrames).map(f =>
       JpegPixels.encodeGrayBlocks(wBlocks, hBlocks, (bx, by) => block(f, bx, by)))
-    val bos = new java.io.ByteArrayOutputStream()
-    def i32(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-        ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    def i16(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    def chunk(id: String, payload: Array[Byte]): Array[Byte] = {
-      val pad = payload.length & 1
-      val out = new Array[Byte](8 + payload.length + pad)
-      System.arraycopy(be(id), 0, out, 0, 4)
-      System.arraycopy(i32(payload.length), 0, out, 4, 4)
-      System.arraycopy(payload, 0, out, 8, payload.length)
-      out
-    }
-    def list(listType: String, payload: Array[Byte]): Array[Byte] =
-      chunk("LIST", be(listType) ++ payload)
-    // avih: 56-byte main header — µs/frame at 25 fps, dims, frame count
-    val avih = chunk("avih", i32(40000) ++ i32(0) ++ i32(0) ++ i32(0x10) ++
-      i32(nFrames) ++ i32(0) ++ i32(1) ++ i32(0) ++ i32(w) ++ i32(h) ++
-      i32(0) ++ i32(0) ++ i32(0) ++ i32(0))
-    // strh: 'vids'/'MJPG', scale 1 rate 25, length nFrames, rcFrame
-    val strh = chunk("strh", be("vids") ++ be("MJPG") ++ i32(0) ++
-      i16(0) ++ i16(0) ++ i32(0) ++ i32(1) ++ i32(25) ++ i32(0) ++
-      i32(nFrames) ++ i32(0) ++ i32(-1) ++ i32(0) ++
-      i16(0) ++ i16(0) ++ i16(w) ++ i16(h))
     // strf: BITMAPINFOHEADER, biCompression 'MJPG', 24 bpp
-    val strf = chunk("strf", i32(40) ++ i32(w) ++ i32(h) ++ i16(1) ++
-      i16(24) ++ be("MJPG") ++ i32(w * h * 3) ++ i32(0) ++ i32(0) ++
-      i32(0) ++ i32(0))
-    val hdrl = list("hdrl", avih ++ list("strl", strh ++ strf))
-    val movi = list("movi",
-      jpegs.map(j => chunk("00dc", j)).foldLeft(Array.emptyByteArray)(_ ++ _))
-    val body = be("AVI ") ++ hdrl ++ movi
-    bos.write(be("RIFF")); bos.write(i32(body.length)); bos.write(body)
-    bos.toByteArray
+    val (i32, i16) = (le32Bytes _, le16Bytes _)
+    Riff.aviFile("MJPG", w, h, i32(40) ++ i32(w) ++ i32(h) ++ i16(1) ++
+      i16(24) ++ ascii("MJPG") ++ i32(w * h * 3) ++ i32(0) ++ i32(0) ++
+      i32(0) ++ i32(0), jpegs)
   }
 }

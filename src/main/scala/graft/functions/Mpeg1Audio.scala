@@ -1,5 +1,7 @@
 package graft.functions
 
+import Bytes.{BitReader, BitWriter, ParseEx, bail}
+
 /** MPEG-1 Audio (ISO/IEC 11172-3) Layer I — REAL bitstream decode to
   * the SUBBAND-SAMPLE tier, in exact integer arithmetic:
   *
@@ -115,10 +117,6 @@ object Mpeg1Audio {
                       nActive: Long, sumAbsFp: Long, peakFp: Long,
                       lastFp: Long)
 
-  private final class ParseEx extends RuntimeException(
-    null, null, false, false)
-  private def bail(): Nothing = throw new ParseEx
-
   /** ISO 11172-3 §2.4.3.1 CRC-16: generator X^16 + X^15 + X^2 + 1
     * (0x8005 msb-first), initial state 0xFFFF, fed the PROTECTED
     * bits — header bits 16..31 plus, for Layer I, the bit-allocation
@@ -139,25 +137,6 @@ object Mpeg1Audio {
       }
     }
     def value: Int = c
-  }
-
-  /** MSB-first bit reader over a byte range. */
-  private final class BitReader(b: Array[Byte], from: Int, until: Int) {
-    private var pos = from.toLong * 8
-    private val end = until.toLong * 8
-    def bits(n: Int): Int = {
-      if (pos + n > end) bail()
-      var v = 0
-      var i = 0
-      while (i < n) {
-        val byteIdx = (pos >> 3).toInt
-        val bitIdx = 7 - (pos & 7).toInt
-        v = (v << 1) | ((b(byteIdx) >> bitIdx) & 1)
-        pos += 1
-        i += 1
-      }
-      v
-    }
   }
 
   /** One parsed Layer I frame: the intensity bound, the per-(channel,
@@ -574,27 +553,6 @@ object Mpeg1Audio {
       }
     }
 
-  /** MSB-first bit writer (fixture synthesis). */
-  private final class BitWriter {
-    private val buf = collection.mutable.ArrayBuffer.empty[Byte]
-    private var cur = 0
-    private var nBits = 0
-    def put(v: Int, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        nBits += 1
-        if (nBits == 8) { buf += cur.toByte; cur = 0; nBits = 0 }
-        i -= 1
-      }
-    }
-    def padToBytes(total: Int): Array[Byte] = {
-      if (nBits > 0) { buf += (cur << (8 - nBits)).toByte; cur = 0; nBits = 0 }
-      while (buf.length < total) buf += 0.toByte
-      buf.toArray
-    }
-  }
-
   /** Synthesize a conformant Layer I frame sequence from closed-form
     * allocation / scalefactor / code generators (the q326 fixture
     * pattern: the encoder writes the exact bit layout the decoder
@@ -632,21 +590,21 @@ object Mpeg1Audio {
       val w = new BitWriter
       val crc = if (withCrc) new Crc16 else null
       def hdr16(v: Int, n: Int): Unit = { // header bits 16-31: protected
-        w.put(v, n); if (crc != null) crc.feed(v, n)
+        w.writeBits(v, n); if (crc != null) crc.feed(v, n)
       }
-      w.put(0xfff, 12); w.put(1, 1) // sync, ID=MPEG-1
-      w.put(3, 2) // layer I
-      w.put(if (withCrc) 0 else 1, 1) // protection_bit: 0 = CRC present
+      w.writeBits(0xfff, 12); w.writeBits(1, 1) // sync, ID=MPEG-1
+      w.writeBits(3, 2) // layer I
+      w.writeBits(if (withCrc) 0 else 1, 1) // protection_bit: 0 = CRC present
       hdr16(brIdx, 4); hdr16(fsIdx, 2)
       hdr16(pad, 1) // padding
       hdr16(0, 1) // private
       hdr16(mode, 2); hdr16(modeExt, 2)
       hdr16(0, 1); hdr16(1, 1) // copyright, original
       hdr16(0, 2) // emphasis
-      if (withCrc) w.put(0, 16) // CRC placeholder, patched below
+      if (withCrc) w.writeBits(0, 16) // CRC placeholder, patched below
       for (sb <- 0 until 32) {
         def putA(v: Int): Unit = {
-          w.put(v, 4); if (crc != null) crc.feed(v, 4)
+          w.writeBits(v, 4); if (crc != null) crc.feed(v, 4)
         }
         if (sb < bound || nCh == 1)
           for (ch <- 0 until nCh) putA(allocCode(ch, sb) & 0xf)
@@ -655,18 +613,18 @@ object Mpeg1Audio {
       for (sb <- 0 until 32; ch <- 0 until nCh) {
         val a = if (sb < bound || nCh == 1) allocCode(ch, sb)
           else allocCode(0, sb)
-        if (a != 0) w.put(scfIdx(ch, sb) % 63, 6)
+        if (a != 0) w.writeBits(scfIdx(ch, sb) % 63, 6)
       }
       for (t <- 0 until 12; sb <- 0 until 32) {
         if (sb < bound || nCh == 1) {
           for (ch <- 0 until nCh) {
             val a = allocCode(ch, sb)
-            if (a != 0) w.put(code(f, t, ch, sb) & ((1 << (a + 1)) - 1),
+            if (a != 0) w.writeBits(code(f, t, ch, sb) & ((1 << (a + 1)) - 1),
               a + 1)
           }
         } else if (allocCode(0, sb) != 0) {
           val a = allocCode(0, sb)
-          w.put(code(f, t, 0, sb) & ((1 << (a + 1)) - 1), a + 1)
+          w.writeBits(code(f, t, 0, sb) & ((1 << (a + 1)) - 1), a + 1)
         }
       }
       val bytes = w.padToBytes(frameLen)
@@ -1167,20 +1125,20 @@ object Mpeg1Audio {
       val w = new BitWriter
       val crc = if (withCrc) new Crc16 else null
       def hdr16(v: Int, n: Int): Unit = {
-        w.put(v, n); if (crc != null) crc.feed(v, n)
+        w.writeBits(v, n); if (crc != null) crc.feed(v, n)
       }
-      w.put(0xfff, 12); w.put(1, 1) // sync, ID=MPEG-1
-      w.put(2, 2) // layer II
-      w.put(if (withCrc) 0 else 1, 1) // protection_bit: 0 = CRC present
+      w.writeBits(0xfff, 12); w.writeBits(1, 1) // sync, ID=MPEG-1
+      w.writeBits(2, 2) // layer II
+      w.writeBits(if (withCrc) 0 else 1, 1) // protection_bit: 0 = CRC present
       hdr16(brIdx, 4); hdr16(fsIdx, 2)
       hdr16(pad, 1); hdr16(0, 1) // padding, private
       hdr16(mode, 2); hdr16(modeExt, 2)
       hdr16(0, 1); hdr16(1, 1); hdr16(0, 2) // copyright, original, emph
-      if (withCrc) w.put(0, 16) // CRC placeholder, patched below
+      if (withCrc) w.writeBits(0, 16) // CRC placeholder, patched below
       for (sb <- 0 until sbLimit) {
         val nbal = L2Nbal(tab)(sb)
         def putA(v: Int): Unit = {
-          w.put(v, nbal); if (crc != null) crc.feed(v, nbal)
+          w.writeBits(v, nbal); if (crc != null) crc.feed(v, nbal)
         }
         if (sb < bound || nCh == 1)
           for (ch <- 0 until nCh) putA(allocIdx(ch, sb) & ((1 << nbal) - 1))
@@ -1189,17 +1147,17 @@ object Mpeg1Audio {
       for (sb <- 0 until sbLimit; ch <- 0 until nCh)
         if (clsAt(ch, sb) != 0) {
           val sv = scfsiOf(ch, sb) & 3
-          w.put(sv, 2); if (crc != null) crc.feed(sv, 2)
+          w.writeBits(sv, 2); if (crc != null) crc.feed(sv, 2)
         }
       for (sb <- 0 until sbLimit; ch <- 0 until nCh) {
         if (clsAt(ch, sb) != 0) {
           (scfsiOf(ch, sb) & 3) match {
-            case 0 => for (p <- 0 to 2) w.put(scfIdx(ch, sb, p) % 63, 6)
-            case 1 => w.put(scfIdx(ch, sb, 0) % 63, 6)
-              w.put(scfIdx(ch, sb, 2) % 63, 6)
-            case 2 => w.put(scfIdx(ch, sb, 0) % 63, 6)
-            case _ => w.put(scfIdx(ch, sb, 0) % 63, 6)
-              w.put(scfIdx(ch, sb, 1) % 63, 6)
+            case 0 => for (p <- 0 to 2) w.writeBits(scfIdx(ch, sb, p) % 63, 6)
+            case 1 => w.writeBits(scfIdx(ch, sb, 0) % 63, 6)
+              w.writeBits(scfIdx(ch, sb, 2) % 63, 6)
+            case 2 => w.writeBits(scfIdx(ch, sb, 0) % 63, 6)
+            case _ => w.writeBits(scfIdx(ch, sb, 0) % 63, 6)
+              w.writeBits(scfIdx(ch, sb, 1) % 63, 6)
           }
         }
       }
@@ -1214,9 +1172,9 @@ object Mpeg1Audio {
               val g = (code(f, gr, 0, s, sb) % st) +
                 st * ((code(f, gr, 1, s, sb) % st) +
                   st * (code(f, gr, 2, s, sb) % st))
-              w.put(g, ClsBits(k))
+              w.writeBits(g, ClsBits(k))
             } else for (i <- 0 until 3)
-              w.put(code(f, gr, i, s, sb) & ((1 << ClsBits(k)) - 1),
+              w.writeBits(code(f, gr, i, s, sb) & ((1 << ClsBits(k)) - 1),
                 ClsBits(k))
           }
         }

@@ -2,6 +2,8 @@ package graft.functions
 
 import java.util.zip.{CRC32, Deflater, Inflater}
 
+import Bytes.{be32, putBe32}
+
 /** REAL pixel decode for the second raster format that needs no codec
   * library: PNG, whose compression is zlib/DEFLATE — shipped in the
   * JDK (`java.util.zip.Inflater`). Supported profile: 8-bit depth,
@@ -28,10 +30,6 @@ object PngPixels {
 
   private val Sig = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
     .map(_.toByte)
-
-  private def be32(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) |
-      ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
 
   private def paeth(a: Int, b: Int, c: Int): Int = {
     val p = a + b - c
@@ -207,11 +205,7 @@ object PngPixels {
         (c >>> 8).toByte, c.toByte), 0, 4)
     }
     val ihdr = new Array[Byte](13)
-    def put32(a: Array[Byte], i: Int, v: Int): Unit = {
-      a(i) = (v >>> 24).toByte; a(i + 1) = (v >>> 16).toByte
-      a(i + 2) = (v >>> 8).toByte; a(i + 3) = v.toByte
-    }
-    put32(ihdr, 0, w); put32(ihdr, 4, h)
+    putBe32(ihdr, 0, w); putBe32(ihdr, 4, h)
     ihdr(8) = 8; ihdr(9) = (if (gray) 0 else 2).toByte
     ihdr(10) = 0; ihdr(11) = 0; ihdr(12) = 0
     chunk("IHDR", ihdr)

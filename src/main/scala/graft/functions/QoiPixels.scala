@@ -1,5 +1,8 @@
 package graft.functions
 
+import Bytes.{ParseEx, bail, rasterFits}
+import Bytes.Checked._
+
 /** REAL pixel decode for QOI ("Quite OK Image", the 2022 public
   * one-page spec at qoiformat.org) — the DICTIONARY-BY-HASH + DELTA
   * member of the compression spectrum: PNG covers DEFLATE, GIF covers
@@ -31,16 +34,6 @@ object QoiPixels {
   case class Features(width: Int, height: Int, meanR: Double,
                       meanG: Double, meanB: Double, ordCk: Long)
 
-  private final class ParseEx extends RuntimeException(null, null, false, false)
-  private def bail(): Nothing = throw new ParseEx
-
-  private def u8(b: Array[Byte], i: Int): Int = {
-    if (i < 0 || i >= b.length) bail()
-    b(i) & 0xff
-  }
-  private def be32(b: Array[Byte], i: Int): Int =
-    (u8(b, i) << 24) | (u8(b, i + 1) << 16) | (u8(b, i + 2) << 8) | u8(b, i + 3)
-
   private def hash(r: Int, g: Int, bl: Int, a: Int): Int =
     (r * 3 + g * 5 + bl * 7 + a * 11) % 64
 
@@ -53,8 +46,7 @@ object QoiPixels {
     try {
       val w = be32(b, 4); val h = be32(b, 8)
       val channels = u8(b, 12); val colorspace = u8(b, 13)
-      if (w <= 0 || h <= 0 || w > 4096 || h > 4096 ||
-        w.toLong * h > (1 << 22) || (channels != 3 && channels != 4) ||
+      if (!rasterFits(w, h) || (channels != 3 && channels != 4) ||
         colorspace > 1) return None
       val nPix = w * h
       // index table as packed r<<24|g<<16|b<<8|a, ZERO-init (spec)

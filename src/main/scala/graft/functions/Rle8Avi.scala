@@ -1,5 +1,7 @@
 package graft.functions
 
+import Bytes._
+
 /** REAL frame decode for INTER-FRAME-coded video: Microsoft RLE8
   * (BI_RLE8, biCompression=1) inside the RIFF/AVI container — the
   * classic Video-for-Windows delta codec. Unlike MJPEG (every frame
@@ -48,71 +50,50 @@ object Rle8Avi {
   final case class RowPatch(y: Int, run: Boolean, px: Int => Int)
       extends Frame
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def le32(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
-  private def fourCc(b: Array[Byte], i: Int): String =
-    new String(Array(b(i), b(i + 1), b(i + 2), b(i + 3)), "US-ASCII")
+  private val Strh = Riff.fourCc("strh")
+  private val Strf = Riff.fourCc("strf")
+  private val Vids = Riff.fourCc("vids")
+  private val Mrle = Riff.fourCc("MRLE")
 
   /** (width, height, frame chunk ranges) from the RIFF walk: the strf
     * BITMAPINFOHEADER (8 bpp, biCompression=1, bottom-up) bound to the
     * FIRST 'vids'/'MRLE' strh (a later audio/second-stream strf can
     * neither overwrite w/h nor reject the file), the compressed '##dc'
     * chunks under movi ('##db' is an UNCOMPRESSED DIB — never an RLE8
-    * frame). LIST nesting is DEPTH-BOUNDED: valid AVIs need 3 levels
-    * (RIFF → hdrl/movi → strl/'rec '), so the walk stops past depth 4
-    * rather than recursing into a crafted payload of thousands of
-    * nested LIST headers (a ~100 KB bomb would otherwise overflow the
-    * stack — 'data, never exceptions' includes adversarial bytes).
+    * frame). LIST nesting is depth-bounded ([[Riff.AviMaxDepth]]):
+    * 'data, never exceptions' includes adversarial bytes.
     * None unless both header and frames are present and valid. */
   private def container(b: Array[Byte]): Option[(Int, Int, Seq[(Int, Int)])] = {
     if (b == null || b.length < 24) return None
-    if (fourCc(b, 0) != "RIFF" || fourCc(b, 8) != "AVI ") return None
     var w = -1; var h = -1; var badFmt = false
     // strf binding state: the strf that counts is the one inside the
     // strl whose strh declares fccType='vids', handler='MRLE'; first
     // such stream wins and later strf chunks are ignored
     var expectVideoStrf = false; var bound = false
     val frames = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    def isFrameId(id: String): Boolean =
-      id.length == 4 && id(0).isDigit && id(1).isDigit &&
-        id(2) == 'd' && id(3) == 'c'
-    def walk(from: Long, to: Long, inMovi: Boolean, depth: Int): Unit = {
-      var i = from
-      while (i + 8 <= to) {
-        val at = i.toInt
-        val id = fourCc(b, at)
-        val size = le32(b, at + 4).toLong & 0xffffffffL
-        val end = math.min(to, at + 8 + size)
-        if (id == "LIST" && i + 12 <= to) {
-          val lt = fourCc(b, at + 8)
-          if (depth < 4) walk(at + 12L, end, inMovi || lt == "movi",
-            depth + 1)
-        } else if (id == "strh" && size >= 8 && at + 16 <= b.length) {
-          expectVideoStrf = !bound && fourCc(b, at + 8) == "vids" &&
-            fourCc(b, at + 12) == "MRLE"
-        } else if (id == "strf") {
-          // The FIRST strf after the vids/MRLE strh is that stream's
-          // format — consume the expectation even when it is too short
-          // to parse, so a stray later strf can't bind wrong w/h.
-          if (expectVideoStrf) {
-            if (size >= 40 && at + 48 <= b.length) {
-              if (le16(b, at + 8 + 14) != 8 || le32(b, at + 8 + 16) != 1)
-                badFmt = true // the MRLE stream's format is not 8bpp BI_RLE8
-              else {
-                w = le32(b, at + 8 + 4); h = le32(b, at + 8 + 8)
-              }
-            } else badFmt = true // truncated/undersized BITMAPINFOHEADER
-            bound = true; expectVideoStrf = false
-          }
-        } else if (inMovi && isFrameId(id) && at + 8 + size <= b.length)
-          frames += ((at + 8, size.toInt))
-        i += 8 + size + (size & 1)
-      }
+    val isAvi = Riff.walkAvi(b)((_, _) => true) { (at, id, size, inMovi) =>
+      if (id == Strh && size >= 8 && at + 16 <= b.length) {
+        expectVideoStrf = !bound && le32(b, at + 8) == Vids &&
+          le32(b, at + 12) == Mrle
+      } else if (id == Strf) {
+        // The FIRST strf after the vids/MRLE strh is that stream's
+        // format — consume the expectation even when it is too short
+        // to parse, so a stray later strf can't bind wrong w/h.
+        if (expectVideoStrf) {
+          if (size >= 40 && at + 48 <= b.length) {
+            if (le16(b, at + 8 + 14) != 8 || le32(b, at + 8 + 16) != 1)
+              badFmt = true // the MRLE stream's format is not 8bpp BI_RLE8
+            else {
+              w = le32(b, at + 8 + 4); h = le32(b, at + 8 + 8)
+            }
+          } else badFmt = true // truncated/undersized BITMAPINFOHEADER
+          bound = true; expectVideoStrf = false
+        }
+      } else if (inMovi && Riff.isFrameId(id, dib = false) &&
+        at + 8 + size <= b.length)
+        frames += ((at + 8, size.toInt))
     }
-    walk(12L, math.min(b.length.toLong, 8L + (le32(b, 4).toLong & 0xffffffffL)),
-      inMovi = false, depth = 1)
+    if (!isAvi) return None
     if (badFmt || w <= 0 || h <= 0 || w > 4096 || h > 4096 || frames.isEmpty)
       None
     else Some((w, h, frames.toSeq))
@@ -186,8 +167,6 @@ object Rle8Avi {
       Some(Features(nf, w, h, sumAll.toDouble / nPix, motion, ck))
   }
 
-  private def be(s: String): Array[Byte] = s.getBytes("US-ASCII")
-
   /** FIXTURE synthesis (bounded; test/oracle side only): a minimal
     * valid RLE8 AVI — grayscale identity palette, correct
     * avih/strh('vids'/'MRLE')/strf(BI_RLE8) header trio — whose first
@@ -248,44 +227,14 @@ object Rle8Avi {
       out.write(0); out.write(1) // EOB — untouched pixels persist
       out.toByteArray
     }
-    val payloads = frames.map(frameBytes)
-    val bos = new java.io.ByteArrayOutputStream()
-    def i32(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-        ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
-    def i16(v: Int): Array[Byte] =
-      Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-    def chunk(id: String, payload: Array[Byte]): Array[Byte] = {
-      val pad = payload.length & 1
-      val out = new Array[Byte](8 + payload.length + pad)
-      System.arraycopy(be(id), 0, out, 0, 4)
-      System.arraycopy(i32(payload.length), 0, out, 4, 4)
-      System.arraycopy(payload, 0, out, 8, payload.length)
-      out
-    }
-    def list(listType: String, payload: Array[Byte]): Array[Byte] =
-      chunk("LIST", be(listType) ++ payload)
-    val nFrames = frames.length
-    val avih = chunk("avih", i32(40000) ++ i32(0) ++ i32(0) ++ i32(0x10) ++
-      i32(nFrames) ++ i32(0) ++ i32(1) ++ i32(0) ++ i32(w) ++ i32(h) ++
-      i32(0) ++ i32(0) ++ i32(0) ++ i32(0))
-    val strh = chunk("strh", be("vids") ++ be("MRLE") ++ i32(0) ++
-      i16(0) ++ i16(0) ++ i32(0) ++ i32(1) ++ i32(25) ++ i32(0) ++
-      i32(nFrames) ++ i32(0) ++ i32(-1) ++ i32(0) ++
-      i16(0) ++ i16(0) ++ i16(w) ++ i16(h))
     // strf: BITMAPINFOHEADER (8 bpp, biCompression=1=BI_RLE8) + the
     // 256-entry grayscale identity palette 8-bit DIBs require
     val palette = Array.tabulate(256 * 4) { i =>
       (if (i % 4 == 3) 0 else i / 4).toByte
     }
-    val strf = chunk("strf", i32(40) ++ i32(w) ++ i32(h) ++ i16(1) ++
+    val (i32, i16) = (le32Bytes _, le16Bytes _)
+    Riff.aviFile("MRLE", w, h, i32(40) ++ i32(w) ++ i32(h) ++ i16(1) ++
       i16(8) ++ i32(1) ++ i32(w * h) ++ i32(0) ++ i32(0) ++
-      i32(256) ++ i32(0) ++ palette)
-    val hdrl = list("hdrl", avih ++ list("strl", strh ++ strf))
-    val movi = list("movi",
-      payloads.map(p => chunk("00dc", p)).foldLeft(Array.emptyByteArray)(_ ++ _))
-    val body = be("AVI ") ++ hdrl ++ movi
-    bos.write(be("RIFF")); bos.write(i32(body.length)); bos.write(body)
-    bos.toByteArray
+      i32(256) ++ i32(0) ++ palette, frames.map(frameBytes))
   }
 }

@@ -1,5 +1,7 @@
 package graft.functions
 
+import Bytes._
+
 /** REAL sample decode for the one audio format that needs no codec
   * library: RIFF/WAVE carrying 16-bit integer PCM. Together with
   * [[BmpPixels]] this converts two of the three multimodal tiers
@@ -24,39 +26,14 @@ object WavPcm {
   case class Features(sampleRate: Int, channels: Int, nFrames: Long,
                       meanAmp: Double, rms: Double, peak: Int)
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def le16(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
-  private def le32(b: Array[Byte], i: Int): Int =
-    u8(b, i) | (u8(b, i + 1) << 8) | (u8(b, i + 2) << 16) | (u8(b, i + 3) << 24)
-
   /** Decode 16-bit PCM WAV to sample statistics; None for anything else
     * (compressed/float WAV needs a codec — the decodePartitions
     * injection point). Corrupt payloads are DATA (None), never
     * exceptions — at 100 TB a bad row must not kill the task. */
   def decode(b: Array[Byte]): Option[Features] = {
-    if (b == null || b.length < 44) return None
-    if (u8(b, 0) != 'R' || u8(b, 1) != 'I' || u8(b, 2) != 'F' ||
-      u8(b, 3) != 'F' || u8(b, 8) != 'W' || u8(b, 9) != 'A' ||
-      u8(b, 10) != 'V' || u8(b, 11) != 'E') return None
-    // one chunk walk finds BOTH fmt and data; fmt may follow JUNK/LIST
-    // chunks and data may precede fmt in pathological writers, so the
-    // walk doesn't assume order. Long indices: a corrupt uint32 chunk
-    // size (~2^31) would wrap an Int cursor negative and pass the guard
-    // (the MediaHeaders.wav lesson applied here).
-    var fmtAt = -1; var fmtSize = 0L; var dataAt = -1; var dataLen = 0L
-    var i = 12L
-    while (i + 8 <= b.length && (fmtAt < 0 || dataAt < 0)) {
-      val at = i.toInt
-      val size = le32(b, at + 4).toLong & 0xffffffffL
-      val id = (u8(b, at), u8(b, at + 1), u8(b, at + 2), u8(b, at + 3))
-      if (id == ('f'.toInt, 'm'.toInt, 't'.toInt, ' '.toInt)) {
-        fmtAt = at; fmtSize = size
-      } else if (id == ('d'.toInt, 'a'.toInt, 't'.toInt, 'a'.toInt)) {
-        dataAt = at + 8
-        dataLen = math.min(size, b.length.toLong - dataAt)
-      }
-      i += 8 + size + (size & 1)
-    }
+    if (b == null || b.length < 44 || !Riff.isWave(b)) return None
+    // one order-independent walk finds BOTH fmt and data
+    val Riff.WaveChunks(fmtAt, fmtSize, dataAt, dataLen) = Riff.waveChunks(b)
     if (fmtAt < 0 || dataAt < 0) return None
     // the chunk's own declared size must cover the 16 PCM format bytes:
     // a short fmt chunk followed by other chunks would otherwise read
@@ -92,20 +69,9 @@ object WavPcm {
     * chunk-walk validation as [[decode]]; None on anything invalid. */
   def samples(b: Array[Byte]): Option[(Features, Array[Int])] =
     decode(b).map { f =>
-      // decode re-ran the walk; re-locate data with the same logic by
-      // scanning chunks once more (cheap relative to the sample pass)
-      var dataAt = -1; var dataLen = 0L
-      var i = 12L
-      while (i + 8 <= b.length && dataAt < 0) {
-        val at = i.toInt
-        val size = le32(b, at + 4).toLong & 0xffffffffL
-        if (u8(b, at) == 'd' && u8(b, at + 1) == 'a' &&
-          u8(b, at + 2) == 't' && u8(b, at + 3) == 'a') {
-          dataAt = at + 8
-          dataLen = math.min(size, b.length.toLong - dataAt)
-        }
-        i += 8 + size + (size & 1)
-      }
+      // decode validated the payload; samples read from the FIRST data
+      // chunk, so re-walk only as far as that
+      val dataAt = Riff.waveChunks(b, needFmt = false).dataAt
       val nSamples = (f.nFrames * f.channels).toInt
       val out = new Array[Int](nSamples)
       var k = 0; var p = dataAt
@@ -126,28 +92,20 @@ object WavPcm {
       "positive rate/channels, non-negative frames")
     val dataLen = nFrames * channels * 2
     val b = new Array[Byte](44 + dataLen)
-    def put16(i: Int, v: Int): Unit = {
-      b(i) = (v & 0xff).toByte; b(i + 1) = ((v >> 8) & 0xff).toByte
-    }
-    def put32(i: Int, v: Int): Unit = {
-      put16(i, v & 0xffff); put16(i + 2, (v >> 16) & 0xffff)
-    }
-    def putId(i: Int, s: String): Unit =
-      s.indices.foreach(j => b(i + j) = s(j).toByte)
-    putId(0, "RIFF"); put32(4, 36 + dataLen); putId(8, "WAVE")
-    putId(12, "fmt "); put32(16, 16)
-    put16(20, 1)                      // PCM
-    put16(22, channels); put32(24, sampleRate)
-    put32(28, sampleRate * channels * 2) // byte rate
-    put16(32, channels * 2)           // block align
-    put16(34, 16)                     // bits per sample
-    putId(36, "data"); put32(40, dataLen)
+    putId(b, 0, "RIFF"); put32(b, 4, 36 + dataLen); putId(b, 8, "WAVE")
+    putId(b, 12, "fmt "); put32(b, 16, 16)
+    put16(b, 20, 1)                   // PCM
+    put16(b, 22, channels); put32(b, 24, sampleRate)
+    put32(b, 28, sampleRate * channels * 2) // byte rate
+    put16(b, 32, channels * 2)        // block align
+    put16(b, 34, 16)                  // bits per sample
+    putId(b, 36, "data"); put32(b, 40, dataLen)
     var p = 44
     var t = 0
     while (t < nFrames) {
       var c = 0
       while (c < channels) {
-        put16(p, sample(t, c) & 0xffff)
+        put16(b, p, sample(t, c) & 0xffff)
         p += 2; c += 1
       }
       t += 1

@@ -1,5 +1,7 @@
 package graft.functions
 
+import Bytes.u8
+
 /** REAL frame decode for the one video container that needs no codec
   * library: YUV4MPEG2 (`.y4m`) carrying uncompressed planar YCbCr
   * frames. Together with [[BmpPixels]] (image) and [[WavPcm]] (audio)
@@ -26,8 +28,6 @@ object Y4mFrames {
   case class Features(width: Int, height: Int, fpsNum: Int, fpsDen: Int,
                       nFrames: Int, meanY: Double, meanCb: Double,
                       meanCr: Double, motion: Double)
-
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
 
   // chroma tag → (xShift-divisor, yShift-divisor) for the Cb/Cr planes
   private def subsampling(tag: String): Option[(Int, Int)] = tag match {

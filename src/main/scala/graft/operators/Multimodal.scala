@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -80,6 +82,21 @@ object Multimodal {
     transform(sequence(lit(0), lit(n - 1)),
       i => payload.substr(i * frameBytes + 1, lit(frameBytes)))
 
+  /** The one partition-local decode loop behind every `decode*`
+    * here: each (id, payload) row of `df` goes through `f`, which
+    * yields that row's output records (none for a payload its codec
+    * does not claim). Per-partition codec setup (e.g. a native handle)
+    * would go in this one place. */
+  private def perPayload[T <: Product : TypeTag](df: DataFrame,
+      idCol: String, payloadCol: String)
+      (f: (Long, Array[Byte]) => IterableOnce[T]): Dataset[T] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(col(idCol).cast("long"), col(payloadCol))
+      .as[(Long, Array[Byte])]
+      .mapPartitions(rows => rows.flatMap { case (id, bytes) => f(id, bytes) })
+  }
+
   /** Decoded media metadata record (the output contract of a codec). */
   case class MediaMeta(id: Long, width: Int, height: Int, channels: Int,
                        n_bytes: Int)
@@ -92,19 +109,11 @@ object Multimodal {
     */
   def decodePartitions(df: DataFrame, idCol: String, payloadCol: String)
                       (codec: Array[Byte] => (Int, Int, Int))
-      : Dataset[MediaMeta] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        // per-partition codec setup would go here (e.g. native handle)
-        rows.map { case (id, bytes) =>
-          val (w, h, c) = codec(bytes)
-          MediaMeta(id, w, h, c, bytes.length)
-        }
-      }
-  }
+      : Dataset[MediaMeta] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      val (w, h, c) = codec(bytes)
+      Some(MediaMeta(id, w, h, c, bytes.length))
+    }
 
   /** Decoded-or-not header record: `format` and the metadata are null
     * for payloads no parser recognizes (corrupt rows are DATA at scale,
@@ -122,20 +131,13 @@ object Multimodal {
     * pipeline; pixel-level features still need [[decodePartitions]] with
     * an injected native codec. */
   def decodeHeaders(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[HeaderMeta] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes) =>
-          val info = graft.functions.MediaHeaders.parse(bytes)
-          HeaderMeta(id, info.map(_.format), info.map(_.width),
-            info.map(_.height), info.map(_.channels),
-            if (bytes == null) 0 else bytes.length)
-        }
-      }
-  }
+      : Dataset[HeaderMeta] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      val info = graft.functions.MediaHeaders.parse(bytes)
+      Some(HeaderMeta(id, info.map(_.format), info.map(_.width),
+        info.map(_.height), info.map(_.channels),
+        if (bytes == null) 0 else bytes.length))
+    }
 
   /** Decoded pixel-feature record for payloads the pure-JVM BMP codec
     * handles; non-BMP/corrupt payloads are dropped (route them to
@@ -151,19 +153,12 @@ object Multimodal {
     * libffmpeg/libjpeg still go through [[decodePartitions]]'s injected
     * codec with the same batch shape. */
   def decodeBmpFeatures(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[BmpFeatureRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.BmpPixels.decode(bytes).map(f =>
-            BmpFeatureRow(id, f.width, f.height, f.meanR, f.meanG,
-              f.meanB, f.meanLuma))
-        }
-      }
-  }
+      : Dataset[BmpFeatureRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.BmpPixels.decode(bytes).map(f =>
+        BmpFeatureRow(id, f.width, f.height, f.meanR, f.meanG,
+          f.meanB, f.meanLuma))
+    }
 
   /** Decoded pixel-feature record for payloads the pure-JVM PNG codec
     * handles (8-bit gray/RGB, non-interlaced); other profiles and
@@ -179,19 +174,12 @@ object Multimodal {
     * codec-availability line, not a plumbing line. Partition-local,
     * same batch shape as the other decoders. */
   def decodePngFeatures(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[PngFeatureRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.PngPixels.decode(bytes).map(f =>
-            PngFeatureRow(id, f.width, f.height, f.channels, f.meanR,
-              f.meanG, f.meanB, f.meanLuma))
-        }
-      }
-  }
+      : Dataset[PngFeatureRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.PngPixels.decode(bytes).map(f =>
+        PngFeatureRow(id, f.width, f.height, f.channels, f.meanR,
+          f.meanG, f.meanB, f.meanLuma))
+    }
 
   /** Decoded audio-feature record for payloads the pure-JVM PCM codec
     * handles; compressed/float audio and corrupt payloads are dropped
@@ -206,19 +194,12 @@ object Multimodal {
     * [[decodeBmpFeatures]] this leaves only video (and natively-coded
     * image/audio formats) on the fake tier. */
   def decodeWavFeatures(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[WavFeatureRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.WavPcm.decode(bytes).map(f =>
-            WavFeatureRow(id, f.sampleRate, f.channels, f.nFrames,
-              f.meanAmp, f.rms, f.peak))
-        }
-      }
-  }
+      : Dataset[WavFeatureRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.WavPcm.decode(bytes).map(f =>
+        WavFeatureRow(id, f.sampleRate, f.channels, f.nFrames,
+          f.meanAmp, f.rms, f.peak))
+    }
 
   /** SAMPLE-tier WAV decode: one row per clip with the interleaved
     * int16 samples as an array column — the DSP input tier (q269's
@@ -226,20 +207,12 @@ object Multimodal {
     * filter itself stays in whole-stage codegen). Invalid payloads
     * drop, same contract as [[decodeWavFeatures]]. */
   def decodeWavSamples(df: DataFrame, idCol: String, payloadCol: String)
-      : DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.WavPcm.samples(bytes).map { case (f, s) =>
-            (id, f.sampleRate, f.channels, s)
-          }
-        }
+      : DataFrame =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.WavPcm.samples(bytes).map { case (f, s) =>
+        (id, f.sampleRate, f.channels, s)
       }
-      .toDF("id", "sample_rate", "n_channels", "samples")
-  }
+    }.toDF("id", "sample_rate", "n_channels", "samples")
 
   /** Decoded video-frame-feature record for payloads the pure-JVM
     * YUV4MPEG2 codec handles; coded video (H.264/VP9/…) and corrupt
@@ -258,19 +231,12 @@ object Multimodal {
     * decode path; only natively-coded formats go through
     * [[decodePartitions]]'s injected codec. */
   def decodeY4mFeatures(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[Y4mFeatureRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.Y4mFrames.decode(bytes).map(f =>
-            Y4mFeatureRow(id, f.width, f.height, f.fpsNum, f.fpsDen,
-              f.nFrames, f.meanY, f.meanCb, f.meanCr, f.motion))
-        }
-      }
-  }
+      : Dataset[Y4mFeatureRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.Y4mFrames.decode(bytes).map(f =>
+        Y4mFeatureRow(id, f.width, f.height, f.fpsNum, f.fpsDen,
+          f.nFrames, f.meanY, f.meanCb, f.meanCr, f.motion))
+    }
 
   /** Decoded pixel-feature record for payloads the JDK's `javax.imageio`
     * JPEG codec handles; non-JPEG/corrupt payloads are dropped. */
@@ -288,19 +254,12 @@ object Multimodal {
     * arbitrary lossy JPEGs decode through the same path with
     * tolerance-gated spec coverage. */
   def decodeJpegFeatures(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[JpegFeatureRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.JpegPixels.decode(bytes).map(f =>
-            JpegFeatureRow(id, f.width, f.height, f.channels, f.meanR,
-              f.meanG, f.meanB, f.meanLuma))
-        }
-      }
-  }
+      : Dataset[JpegFeatureRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.JpegPixels.decode(bytes).map(f =>
+        JpegFeatureRow(id, f.width, f.height, f.channels, f.meanR,
+          f.meanG, f.meanB, f.meanLuma))
+    }
 
   /** Decoded audio-feature record for payloads the pure-JVM IMA ADPCM
     * codec handles; perceptual codecs (MP3/AAC) and corrupt payloads
@@ -318,19 +277,12 @@ object Multimodal {
     * codecs (MP3/AAC) remain on [[decodePartitions]]'s injected-codec
     * path. */
   def decodeAdpcmFeatures(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[AdpcmFeatureRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.AdpcmWav.decode(bytes).map(f =>
-            AdpcmFeatureRow(id, f.sampleRate, f.nBlocks, f.nSamples,
-              f.meanAmp, f.rms, f.peak, f.lastSample))
-        }
-      }
-  }
+      : Dataset[AdpcmFeatureRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.AdpcmWav.decode(bytes).map(f =>
+        AdpcmFeatureRow(id, f.sampleRate, f.nBlocks, f.nSamples,
+          f.meanAmp, f.rms, f.peak, f.lastSample))
+    }
 
   /** Decoded coded-video-feature record for payloads the pure-JVM
     * MJPEG/AVI path handles; inter-frame-coded video (H.264/VP9) and
@@ -347,19 +299,12 @@ object Multimodal {
     * injected-codec path — every modality now has BOTH an uncompressed
     * and a compressed/coded fake-free decode slice. */
   def decodeMjpegFeatures(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[MjpegFeatureRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.MjpegAvi.decode(bytes).map(f =>
-            MjpegFeatureRow(id, f.nFrames, f.width, f.height,
-              f.channels, f.meanLuma, f.motion))
-        }
-      }
-  }
+      : Dataset[MjpegFeatureRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.MjpegAvi.decode(bytes).map(f =>
+        MjpegFeatureRow(id, f.nFrames, f.width, f.height,
+          f.channels, f.meanLuma, f.motion))
+    }
 
   /** One decoded video FRAME row (the multi-row decode surface);
     * `luma_sum` is the exact integer pixel sum, so downstream
@@ -374,22 +319,15 @@ object Multimodal {
     * (no shuffle to explode), and the per-frame row count is bounded
     * by the container's own frame count. */
   def decodeMjpegFrames(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[MjpegFrameRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.MjpegAvi.grayFrameSums(bytes).toSeq.flatMap {
-            case (w, h, sums) =>
-              sums.iterator.zipWithIndex.map { case (s, i) =>
-                MjpegFrameRow(id, i, w, h, s)
-              }
+      : Dataset[MjpegFrameRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.MjpegAvi.grayFrameSums(bytes).toSeq.flatMap {
+        case (w, h, sums) =>
+          sums.iterator.zipWithIndex.map { case (s, i) =>
+            MjpegFrameRow(id, i, w, h, s)
           }
-        }
       }
-  }
+    }
 
   /** Decoded audio-feature record for payloads the pure-JVM FLAC
     * codec handles (mono/stereo 16-bit, CONSTANT/VERBATIM/FIXED/LPC
@@ -410,19 +348,12 @@ object Multimodal {
     * transform codecs (MP3/AAC) route to [[decodePartitions]]'s
     * injected codec, same batch shape. */
   def decodeFlacFeatures(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[FlacFeatureRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.FlacAudio.decode(bytes).map(f =>
-            FlacFeatureRow(id, f.sampleRate, f.nFrames, f.nSamples,
-              f.meanAmp, f.rms, f.peak, f.lastSample))
-        }
-      }
-  }
+      : Dataset[FlacFeatureRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.FlacAudio.decode(bytes).map(f =>
+        FlacFeatureRow(id, f.sampleRate, f.nFrames, f.nSamples,
+          f.meanAmp, f.rms, f.peak, f.lastSample))
+    }
 
   /** [[FlacFeatureRow]] plus the DECODED bit depth — the output
     * contract of the depth-tier decode (q314). */
@@ -437,19 +368,12 @@ object Multimodal {
     * of trusting container metadata. Same decoder and batch shape as
     * [[decodeFlacFeatures]]. */
   def decodeFlacDepthFeatures(df: DataFrame, idCol: String,
-                              payloadCol: String): Dataset[FlacDepthRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.FlacAudio.decode(bytes).map(f =>
-            FlacDepthRow(id, f.bitsPerSample, f.sampleRate, f.nFrames,
-              f.nSamples, f.meanAmp, f.rms, f.peak, f.lastSample))
-        }
-      }
-  }
+                              payloadCol: String): Dataset[FlacDepthRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.FlacAudio.decode(bytes).map(f =>
+        FlacDepthRow(id, f.bitsPerSample, f.sampleRate, f.nFrames,
+          f.nSamples, f.meanAmp, f.rms, f.peak, f.lastSample))
+    }
 
   /** Decoded pixel-feature record for payloads the pure-JVM GIF/LZW
     * codec handles; interlaced frames and corrupt payloads drop. */
@@ -465,19 +389,12 @@ object Multimodal {
     * position-weighted index checksum, so spatial layout is part of
     * the decode contract, not just channel moments. */
   def decodeGifFeatures(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[GifFeatureRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.GifPixels.decode(bytes).map(f =>
-            GifFeatureRow(id, f.width, f.height, f.meanR, f.meanG,
-              f.meanB, f.ordCk))
-        }
-      }
-  }
+      : Dataset[GifFeatureRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.GifPixels.decode(bytes).map(f =>
+        GifFeatureRow(id, f.width, f.height, f.meanR, f.meanG,
+          f.meanB, f.ordCk))
+    }
 
   /** Decoded pixel-feature record for payloads the pure-JVM QOI codec
     * handles; corrupt payloads drop. */
@@ -493,19 +410,12 @@ object Multimodal {
     * already real). `ord_ck` is a position-weighted channel checksum,
     * so spatial layout is part of the decode contract. */
   def decodeQoiFeatures(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[QoiFeatureRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.QoiPixels.decode(bytes).map(f =>
-            QoiFeatureRow(id, f.width, f.height, f.meanR, f.meanG,
-              f.meanB, f.ordCk))
-        }
-      }
-  }
+      : Dataset[QoiFeatureRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.QoiPixels.decode(bytes).map(f =>
+        QoiFeatureRow(id, f.width, f.height, f.meanR, f.meanG,
+          f.meanB, f.ordCk))
+    }
 
   /** Decoded audio-feature record for payloads the pure-JVM G.711
     * expander handles (μ-law / A-law WAV); PCM WAV routes through
@@ -525,19 +435,12 @@ object Multimodal {
     * [[decodePartitions]]'s injected path. Same batch shape as every
     * decoder here. */
   def decodeG711Features(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[G711FeatureRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.G711Wav.decode(bytes).map(f =>
-            G711FeatureRow(id, f.codec, f.sampleRate, f.channels,
-              f.nFrames, f.meanAmp, f.rms, f.peak, f.lastSample))
-        }
-      }
-  }
+      : Dataset[G711FeatureRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.G711Wav.decode(bytes).map(f =>
+        G711FeatureRow(id, f.codec, f.sampleRate, f.channels,
+          f.nFrames, f.meanAmp, f.rms, f.peak, f.lastSample))
+    }
 
   case class Mpeg1FeatureRow(id: Long, sample_rate: Int,
                              bitrate_kbps: Int, mode_code: Int,
@@ -559,20 +462,13 @@ object Multimodal {
     * [[decodePartitions]]'s injected path. Same batch shape as every
     * decoder here. */
   def decodeMpeg1Features(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[Mpeg1FeatureRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.Mpeg1Audio.decode(bytes).map(f =>
-            Mpeg1FeatureRow(id, f.sampleRate, f.bitrateKbps, f.modeCode,
-              f.nChannels, f.nFrames, f.nSamples, f.nActive, f.sumAbsFp,
-              f.peakFp, f.lastFp))
-        }
-      }
-  }
+      : Dataset[Mpeg1FeatureRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.Mpeg1Audio.decode(bytes).map(f =>
+        Mpeg1FeatureRow(id, f.sampleRate, f.bitrateKbps, f.modeCode,
+          f.nChannels, f.nFrames, f.nSamples, f.nActive, f.sumAbsFp,
+          f.peakFp, f.lastFp))
+    }
 
   case class Mpeg1PcmRow(id: Long, ch: Int, t: Int, sum_abs_pcm: Long,
                          peak_pcm: Long, last_pcm: Long)
@@ -588,72 +484,42 @@ object Multimodal {
     * [[graft.functions.Mpeg1Audio.WindowD]]) — plus MDCT-class
     * codecs. */
   def decodeMpeg1Pcm(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[Mpeg1PcmRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.Mpeg1Audio.decodePcm(bytes).toSeq.flatMap(_.map(
-            g => Mpeg1PcmRow(id, g.ch, g.t, g.sumAbs, g.peak, g.last)))
-        }
-      }
-  }
+      : Dataset[Mpeg1PcmRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.Mpeg1Audio.decodePcm(bytes).toSeq.flatMap(_.map(
+        g => Mpeg1PcmRow(id, g.ch, g.t, g.sumAbs, g.peak, g.last)))
+    }
 
   /** RAW-PCM-tier Layer I decode: one row per (clip, channel) with
     * the full synthesized 2^32-fixed-point PCM as an array column —
     * [[decodeWavSamples]]' analog for coded audio, so DSP stays in
     * whole-stage codegen downstream (q334's FIR downsample). */
   def decodeMpeg1PcmSamples(df: DataFrame, idCol: String,
-                            payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.Mpeg1Audio.decodePcmSamples(bytes).toSeq
-            .flatMap(_.map { case (ch, pcm) => (id, ch, pcm) })
-        }
-      }
-      .toDF("id", "ch", "pcm")
-  }
+                            payloadCol: String): DataFrame =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.Mpeg1Audio.decodePcmSamples(bytes).toSeq
+        .flatMap(_.map { case (ch, pcm) => (id, ch, pcm) })
+    }.toDF("id", "ch", "pcm")
 
   /** Layer II raw-PCM-tier decode ([[decodeMpeg1PcmSamples]]' exact
     * contract, 36 groups per frame): one row per (clip, channel) with
     * the full synthesized PCM array — q335's DSP input. */
   def decodeMpeg1L2PcmSamples(df: DataFrame, idCol: String,
-                              payloadCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.Mpeg1Audio.decodeL2PcmSamples(bytes).toSeq
-            .flatMap(_.map { case (ch, pcm) => (id, ch, pcm) })
-        }
-      }
-      .toDF("id", "ch", "pcm")
-  }
+                              payloadCol: String): DataFrame =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.Mpeg1Audio.decodeL2PcmSamples(bytes).toSeq
+        .flatMap(_.map { case (ch, pcm) => (id, ch, pcm) })
+    }.toDF("id", "ch", "pcm")
 
   /** Layer II through the same synthesis ([[decodeMpeg1Pcm]]'s
     * contract, 36 groups per frame), hash-oracled by q333. */
   def decodeMpeg1L2Pcm(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[Mpeg1PcmRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.Mpeg1Audio.decodeL2Pcm(bytes).toSeq.flatMap(
-            _.map(g =>
-              Mpeg1PcmRow(id, g.ch, g.t, g.sumAbs, g.peak, g.last)))
-        }
-      }
-  }
+      : Dataset[Mpeg1PcmRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.Mpeg1Audio.decodeL2Pcm(bytes).toSeq.flatMap(
+        _.map(g =>
+          Mpeg1PcmRow(id, g.ch, g.t, g.sumAbs, g.peak, g.last)))
+    }
 
   case class Mpeg1L2FeatureRow(id: Long, sample_rate: Int,
                                bitrate_kbps: Int, mode_code: Int,
@@ -671,21 +537,14 @@ object Multimodal {
     * table selection and the scfsi parse cross-engine. */
   def decodeMpeg1L2Features(df: DataFrame, idCol: String,
                             payloadCol: String)
-      : Dataset[Mpeg1L2FeatureRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.Mpeg1Audio.decodeL2(bytes).map(f =>
-            Mpeg1L2FeatureRow(id, f.sampleRate, f.bitrateKbps,
-              f.modeCode, f.nChannels, f.tabId, f.sbLimit, f.nFrames,
-              f.nSamples, f.nActive, f.nScf, f.sumAbsFp, f.peakFp,
-              f.lastFp))
-        }
-      }
-  }
+      : Dataset[Mpeg1L2FeatureRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.Mpeg1Audio.decodeL2(bytes).map(f =>
+        Mpeg1L2FeatureRow(id, f.sampleRate, f.bitrateKbps,
+          f.modeCode, f.nChannels, f.tabId, f.sbLimit, f.nFrames,
+          f.nSamples, f.nActive, f.nScf, f.sumAbsFp, f.peakFp,
+          f.lastFp))
+    }
 
   /** Decoded video-feature record for payloads the pure-JVM MS-RLE8
     * compositor handles; motion-compensated codecs (H.264/VP9) and
@@ -703,19 +562,12 @@ object Multimodal {
     * slice; only motion-compensated transform codecs remain on
     * [[decodePartitions]]'s injected path. */
   def decodeRle8Features(df: DataFrame, idCol: String, payloadCol: String)
-      : Dataset[Rle8FeatureRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          graft.functions.Rle8Avi.decode(bytes).map(f =>
-            Rle8FeatureRow(id, f.nFrames, f.width, f.height,
-              f.meanVal, f.motion, f.finalCk))
-        }
-      }
-  }
+      : Dataset[Rle8FeatureRow] =
+    perPayload(df, idCol, payloadCol) { (id, bytes) =>
+      graft.functions.Rle8Avi.decode(bytes).map(f =>
+        Rle8FeatureRow(id, f.nFrames, f.width, f.height,
+          f.meanVal, f.motion, f.finalCk))
+    }
 
   /** One routed row of a MIXED-format corpus decode: which pure-JVM
     * codec claimed the payload, how many primitive units it decoded
@@ -736,28 +588,22 @@ object Multimodal {
     * groupBy(fmt) — no per-format branches in the plan. */
   def routeMixedFeatures(df: DataFrame, idCol: String,
                          payloadCol: String): Dataset[RouteRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
     import graft.functions._
-    df.select(col(idCol).cast("long"), col(payloadCol))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, b) =>
-          BmpPixels.decode(b).map(f =>
-              RouteRow(id, "bmp", f.width.toLong * f.height, f.meanR))
-            .orElse(GifPixels.decode(b).map(f =>
-              RouteRow(id, "gif", f.width.toLong * f.height, f.meanR)))
-            .orElse(QoiPixels.decode(b).map(f =>
-              RouteRow(id, "qoi", f.width.toLong * f.height, f.meanR)))
-            .orElse(WavPcm.decode(b).map(f =>
-              RouteRow(id, "pcm", f.nFrames * f.channels, f.meanAmp)))
-            .orElse(G711Wav.decode(b).map(f =>
-              RouteRow(id, f.codec, f.nFrames * f.channels, f.meanAmp)))
-            .orElse(Rle8Avi.decode(b).map(f =>
-              RouteRow(id, "rle8",
-                f.nFrames.toLong * f.width * f.height, f.meanVal)))
-        }
-      }
+    perPayload(df, idCol, payloadCol) { (id, b) =>
+      BmpPixels.decode(b).map(f =>
+          RouteRow(id, "bmp", f.width.toLong * f.height, f.meanR))
+        .orElse(GifPixels.decode(b).map(f =>
+          RouteRow(id, "gif", f.width.toLong * f.height, f.meanR)))
+        .orElse(QoiPixels.decode(b).map(f =>
+          RouteRow(id, "qoi", f.width.toLong * f.height, f.meanR)))
+        .orElse(WavPcm.decode(b).map(f =>
+          RouteRow(id, "pcm", f.nFrames * f.channels, f.meanAmp)))
+        .orElse(G711Wav.decode(b).map(f =>
+          RouteRow(id, f.codec, f.nFrames * f.channels, f.meanAmp)))
+        .orElse(Rle8Avi.decode(b).map(f =>
+          RouteRow(id, "rle8",
+            f.nFrames.toLong * f.width * f.height, f.meanVal)))
+    }
   }
 
   /** STUB codec for environments without media libraries: deterministic

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.scalacheck.{Gen, Properties}
+import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
 /** Fuzz + roundtrip properties for the two round-7 coded-media
@@ -103,5 +103,25 @@ object AdpcmMjpegProps extends Properties("graft.adpcm_mjpeg") {
         math.abs(f.meanAmp - all.sum / n) < 1e-9 &&
         (all.isEmpty || (f.peak == all.map(math.abs).max &&
           f.lastSample == all.last))
+    }
+
+  // 10,000 nested LIST 'rec ' headers under movi (~120 KB): the shared
+  // depth-bounded AVI walk stops at Riff.AviMaxDepth instead of
+  // recursing once per header until the stack overflows
+  property("MJPEG decode returns None on a deeply nested LIST bomb") =
+    Prop {
+      val depth = 10000
+      val b = java.nio.ByteBuffer.allocate(24 + 12 * depth)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      b.put("RIFF".getBytes("ISO-8859-1")).putInt(16 + 12 * depth)
+        .put("AVI ".getBytes("ISO-8859-1"))
+      b.put("LIST".getBytes("ISO-8859-1")).putInt(4 + 12 * depth)
+        .put("movi".getBytes("ISO-8859-1"))
+      (depth - 1 to 0 by -1).foreach { k =>
+        b.put("LIST".getBytes("ISO-8859-1")).putInt(4 + 12 * k)
+          .put("rec ".getBytes("ISO-8859-1"))
+      }
+      val bomb = b.array()
+      MjpegAvi.decode(bomb).isEmpty && MjpegAvi.grayFrameSums(bomb).isEmpty
     }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.scalacheck.{Gen, Properties}
+import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
 /** Properties for the GIF/LZW codec pair. The encoder is validated by
@@ -141,4 +141,24 @@ object GifPixelsProps extends Properties("graft.gif") {
 
   property("decode never throws on truncated/byte-flipped real files") =
     forAll(damaged)(safe)
+
+  /** A 35-byte GIF whose image descriptor declares `w`×`h`: a 2-entry
+    * global palette, min code size 2, one 2-byte LZW sub-block. */
+  private def declaring(w: Int, h: Int): Array[Byte] = {
+    def le16(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
+    val out = "GIF89a".getBytes("ISO-8859-1") ++ le16(w) ++ le16(h) ++
+      Array[Byte](0x80.toByte, 0, 0) ++ Array[Byte](0, 0, 0, -1, -1, -1) ++
+      Array[Byte](0x2c, 0, 0, 0, 0) ++ le16(w) ++ le16(h) ++ Array[Byte](0) ++
+      Array[Byte](2, 2, 0x44, 0x01, 0, 0x3b)
+    assert(out.length == 35)
+    out
+  }
+
+  // w·h overflows Int (65535²) or asks for a 6.4 GB index buffer
+  // (40000²): both sit above the shared raster ceiling and must be
+  // rejected before anything is allocated
+  property("oversized declared dimensions decode to None, not an " +
+      "allocation failure") =
+    Prop(GifPixels.decode(declaring(65535, 65535)).isEmpty &&
+      GifPixels.decode(declaring(40000, 40000)).isEmpty)
 }

@@ -68,23 +68,23 @@ object Rugpull {
     */
   def tokenFlows(blocks: DataFrame, hot: DataFrame, watchlists: DataFrame,
                  prices: DataFrame): DataFrame = {
+    // One pass per block: the scan feeds a single chain of generators,
+    // a broadcast semi-join and two aggregates sharing one shuffle.
+    //
     // Per-block identity: blockTime alone is NOT unique (Solana emits
     // multiple blocks per second at second resolution). Without it, two
     // blocks sharing a blockTime would merge their tx0/tx1/... into one
-    // group — duplicate positional-map keys or silently fused balances.
-    // The id must also be DETERMINISTIC under re-evaluation: this plan
-    // branches (txs → hits, then txs ⋈ hits), and a non-deterministic id
-    // (monotonically_increasing_id) re-evaluates independently per branch,
-    // silently pairing hits with the wrong block after any upstream
-    // repartition. A content hash is stable across re-evaluation; two
-    // byte-identical blocks collapse into one group, which yields the
-    // identical (deduplicated) ledger rows — idempotent re-ingest.
+    // group — fused balances. A content hash of the parsed struct
+    // (xxhash64, no to_json of multi-MB blocks) keeps the grouping keys
+    // deterministic; two byte-identical blocks in one batch collapse into
+    // one group, and the set-based fold below turns them into the single
+    // block's ledger — idempotent re-ingest. It is computed before the
+    // transactions are exploded: in a select holding a generator the
+    // other expressions run after it, once per transaction.
     // The surrogate signature stays blockTime-txIdx-1 (reference
     // behavior, which tolerates signature collisions) but grouping keys
     // include __block_id.
-    // xxhash64 hashes the parsed struct natively — no to_json
-    // serialization of multi-MB blocks, which would run once per plan
-    // branch on the hot path.
+    val noAddrs = array().cast("array<string>")
     val txs = blocks
       .withColumn("__block_id", xxhash64(col("result.blockTime"),
         col("result.transactions")))
@@ -92,28 +92,31 @@ object Rugpull {
         col("__block_id"),
         col("result.blockTime").as("timestamp"),
         posexplode(col("result.transactions")).as(Seq("txIdx", "tx")))
-      .withColumn("allAddrs", concat(
-        coalesce(col("tx.transaction.message.accountKeys"),
-          array().cast("array<string>")),
-        coalesce(col("tx.meta.loadedAddresses.writable"),
-          array().cast("array<string>")),
-        coalesce(col("tx.meta.loadedAddresses.readonly"),
-          array().cast("array<string>"))))
 
     // Semi-join + positional lookup in ONE pass: explode addresses with
-    // their index, broadcast-join the hot list, and fold the hits back
-    // into a pos→addr map per tx. Transactions with no hit disappear at
-    // the inner join — the reference's early-exit filter, distributed.
-    val hotDim = broadcast(hot.select(col("addr").as("__hot_addr"))
-      .distinct())
-    val hits = txs.select(col("__block_id"), col("txIdx"),
-        posexplode(col("allAddrs")).as(Seq("pos", "addr")))
-      .join(hotDim, col("addr") === col("__hot_addr"), "inner")
-      .groupBy(col("__block_id"), col("txIdx"))
-      .agg(map_from_entries(collect_list(
-        struct(col("pos"), col("addr")))).as("hotAt"))
-
-    val hotTxs = txs.join(hits, Seq("__block_id", "txIdx"), "inner")
+    // their index (the balance arrays ride along), semi-join the
+    // broadcast hot list, and fold the hits back into a pos→addr map per
+    // tx. Transactions with no hit disappear at the semi-join — the
+    // reference's early-exit filter, distributed. A semi-join never
+    // duplicates a row, so the hot list needs no distinct(), and
+    // collect_set keeps a re-ingested block's positions unique. Every row
+    // of a group carries the same tx's balance arrays, so first() is
+    // exact.
+    val hotDim = broadcast(hot.select(col("addr").as("__hot_addr")))
+    val hotTxs = txs
+      .select(col("__block_id"), col("timestamp"), col("txIdx"),
+        col("tx.meta.preTokenBalances").as("pre"),
+        col("tx.meta.postTokenBalances").as("post"),
+        posexplode(concat(
+          coalesce(col("tx.transaction.message.accountKeys"), noAddrs),
+          coalesce(col("tx.meta.loadedAddresses.writable"), noAddrs),
+          coalesce(col("tx.meta.loadedAddresses.readonly"), noAddrs)))
+          .as(Seq("pos", "addr")))
+      .join(hotDim, col("addr") === col("__hot_addr"), "left_semi")
+      .groupBy(col("__block_id"), col("timestamp"), col("txIdx"))
+      .agg(map_from_entries(collect_set(struct(col("pos"), col("addr"))))
+          .as("hotAt"),
+        first(col("pre")).as("pre"), first(col("post")).as("post"))
 
     // Side-tagged balance entries with their within-array position (the
     // LWW ordering key). Missing uiAmountString ⇒ null ⇒ treated like the
@@ -131,8 +134,8 @@ object Rugpull {
 
     val entries = hotTxs.select(col("__block_id"), col("timestamp"),
         col("txIdx"), col("hotAt"),
-        explode(concat(side("pre", col("tx.meta.preTokenBalances")),
-          side("post", col("tx.meta.postTokenBalances")))).as("e"))
+        explode(concat(side("pre", col("pre")), side("post", col("post"))))
+          .as("e"))
       .select(col("__block_id"), col("timestamp"), col("txIdx"),
         Tagging.coalesceKey(col("hotAt")(col("e.accountIndex")),
           col("e.owner")).as("wallet"),
@@ -140,8 +143,9 @@ object Rugpull {
         col("e.entryIdx").as("entryIdx"), col("e.bal").as("bal"))
       .filter(col("wallet").isNotNull)
 
-    // O24: last-write-wins pre/post pivot — one hash aggregate with
-    // map-side combine (no window sort, no join).
+    // O24: last-write-wins pre/post pivot — one aggregate (no window
+    // sort, no join). Its keys extend the per-tx fold's, whose shuffle
+    // already clusters them, so it adds no exchange.
     val merged = entries
       .groupBy(col("__block_id"), col("timestamp"), col("txIdx"),
         col("wallet"), col("mint"))
@@ -156,12 +160,15 @@ object Rugpull {
       .withColumn("signature", Tagging.surrogateKey(col("timestamp"),
         col("txIdx"), lit("1")))
 
-    // Enrichment: four membership tags + two price attaches, all
-    // broadcast left joins against tiny dims (O29/O30).
-    def tag(df: DataFrame, kind: String, keyCol: String,
-            outName: String): DataFrame =
-      Tagging.isinTagJoin(df, keyCol,
-        watchlists.filter(col("kind") === kind), "addr", outName)
+    // Enrichment (O29/O30): four membership tags, each an IN-subquery
+    // the planner runs as a broadcast existence join (no distinct() over
+    // the dim, so no per-batch aggregation job), and two price attaches
+    // as broadcast left joins (a duplicate price row duplicates the
+    // ledger row).
+    def tag(kind: String, key: String): Column =
+      when(col(key).isin(
+        watchlists.filter(col("kind") === kind).select(col("addr"))),
+        col(key))
 
     def price(df: DataFrame, sideName: String, outName: String)
         : DataFrame = {
@@ -173,18 +180,14 @@ object Rugpull {
         .drop(s"__pv_$sideName")
     }
 
-    val tagged = price(price(
-      tag(tag(tag(tag(merged,
-        "BASE_VAULTS", "wallet", "baseVault"),
-        "QUOTE_VAULTS", "wallet", "quoteVault"),
-        "BASE_MINTS", "mint", "baseMint"),
-        "QUOTE_MINTS", "mint", "quoteMint"),
-      "base", "base_price"), "quote", "quote_price")
-
-    tagged.select(col("timestamp"), col("wallet"), col("signature"),
-      col("mint"), col("pre_balance"), col("post_balance"),
-      col("baseVault"), col("quoteVault"), col("baseMint"),
-      col("quoteMint"), col("base_price"), col("quote_price"))
+    price(price(merged, "base", "base_price"), "quote", "quote_price")
+      .select(col("timestamp"), col("wallet"), col("signature"),
+        col("mint"), col("pre_balance"), col("post_balance"),
+        tag("BASE_VAULTS", "wallet").as("baseVault"),
+        tag("QUOTE_VAULTS", "wallet").as("quoteVault"),
+        tag("BASE_MINTS", "mint").as("baseMint"),
+        tag("QUOTE_MINTS", "mint").as("quoteMint"),
+        col("base_price"), col("quote_price"))
   }
 
   /** Pool-detection filter (O33): a tx qualifies if its joined log text

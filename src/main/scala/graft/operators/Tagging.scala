@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Scalar tagging / key-derivation operators.
@@ -17,25 +17,14 @@ object Tagging {
   /** Membership tag: `col` if it is in `members`, else NULL.
     *
     * Use for small literal sets (the isin turns into an In/InSet expression,
-    * evaluated locally per row — no shuffle, no join). For large sets use
-    * [[isinTagJoin]] which broadcasts a dimension instead.
+    * evaluated locally per row — no shuffle, no join). A watch-list held as
+    * a dimension DataFrame tags with `when(col.isin(dim), col)` instead,
+    * which plans as a broadcast existence join (see
+    * [[graft.domain.Rugpull.tokenFlows]]).
     */
   def isinTag(col: Column, members: Seq[String]): Column =
     if (members.isEmpty) lit(null).cast("string")
     else when(col.isin(members: _*), col)
-
-  /** Membership tag against a (possibly large) single-column dimension via a
-    * broadcast LEFT OUTER join — the scale path when the watch-list doesn't
-    * fit in a literal InSet. Output column `outName` holds the key when it is
-    * a member, NULL otherwise.
-    */
-  def isinTagJoin(df: DataFrame, keyCol: String, dim: DataFrame,
-                  dimCol: String, outName: String): DataFrame = {
-    val d = dim.select(col(dimCol).as("__tag_key")).distinct()
-    df.join(broadcast(d), df(keyCol) === col("__tag_key"), "left_outer")
-      .withColumn(outName, col("__tag_key"))
-      .drop("__tag_key")
-  }
 
   /** Empty/blank string → NULL coercion (the reference appends SQL NULL when
     * a balance string_view is empty; we preserve that semantic rule). */

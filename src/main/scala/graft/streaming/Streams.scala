@@ -25,9 +25,11 @@ object Streams {
     *
     * `blocksPerTrigger` is the latency/throughput dial: 1 (default)
     * reproduces the reference's per-block cadence (its mailbox hands the
-    * parser one block at a time) and pays a fixed per-trigger cost
-    * (source listing, incremental planning, per-batch dim broadcast —
-    * measured ~0.6 s/block on this box, see StreamBench); larger values
+    * parser one block at a time) and pays a fixed per-trigger cost:
+    * source listing, offset and commit logs, re-planning the flagship,
+    * and its 9 Spark jobs — one scan-and-shuffle job that parses each
+    * block once, one result job, and seven broadcasts of the dimension
+    * tables (hot list, four watch-lists, two price tables). Larger values
     * amortize that cost across blocks, and ≤ 0 removes the cap entirely
     * (each trigger takes everything available — the backfill shape).
     */

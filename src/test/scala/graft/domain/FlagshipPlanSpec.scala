@@ -1,0 +1,54 @@
+package graft.domain
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.graft.TestBridge
+
+import graft.SparkSpec
+
+/** Guards the executed plan of the flagship per micro-batch: each block's
+  * JSON is scanned once, the ledger needs one shuffle, and the constant
+  * dimension tables cost no aggregation (a `distinct` over a dim is one
+  * shuffle job plus one broadcast job on every trigger). */
+class FlagshipPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  test("tokenFlows: one scan, one shuffle, no dimension aggregate, " +
+    "at most 9 jobs") {
+    val dir = Files.createTempDirectory("graft-plan-shape")
+    FlagshipCorpus.writeBlocks(dir,
+      FlagshipCorpus.blockLines(20261017L).take(2), 1)
+    val (hot, watchlists, prices) = FlagshipCorpus.dims(spark)
+    val ledger = Rugpull.tokenFlows(
+      Rugpull.parseBlocks(spark, dir.toString), hot, watchlists, prices)
+
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    TestBridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val rows = try ledger.collect() finally {
+      TestBridge.drainListeners(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(rows.nonEmpty)
+
+    val plan = ledger.queryExecution.executedPlan
+    def scans(p: SparkPlan) = collect(p) { case s: FileSourceScanExec => s }
+    assert(scans(plan).length === 1, plan)
+    assert(collect(plan) { case s: ShuffleExchangeExec => s }.length === 1,
+      plan)
+    val dimAggs = collect(plan) {
+      case a: BaseAggregateExec if scans(a).isEmpty => a
+    }
+    assert(dimAggs.isEmpty, plan)
+    assert(jobs.get() <= 9, s"${jobs.get()} jobs")
+  }
+}

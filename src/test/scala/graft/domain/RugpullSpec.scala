@@ -63,9 +63,10 @@ class RugpullSpec extends SparkSpec {
     s"""{"result":{"blockTime":1700000000,"transactions":[${txs.mkString(",")}]}}"""
   }
 
-  private lazy val ledger: DataFrame = {
+  /** The ledger of one file holding `lines`, against the fixture dims. */
+  private def flows(lines: String*): DataFrame = {
     val dir = Files.createTempDirectory("graft-blocks").toFile
-    Files.writeString(dir.toPath.resolve("b0.json"), blockJson)
+    Files.writeString(dir.toPath.resolve("b0.json"), lines.mkString("\n"))
     val blocks = Rugpull.parseBlocks(spark, dir.getAbsolutePath)
     val hot = Seq("VAULT_A", "VAULT_Q").toDF("addr")
     val watchlists = Seq(
@@ -75,8 +76,10 @@ class RugpullSpec extends SparkSpec {
     val prices = Seq(
       ("VAULT_A", "base", 1.25), ("VAULT_Q", "quote", 0.5))
       .toDF("vault", "side", "price_usd")
-    Rugpull.tokenFlows(blocks, hot, watchlists, prices).cache()
+    Rugpull.tokenFlows(blocks, hot, watchlists, prices)
   }
+
+  private lazy val ledger: DataFrame = flows(blockJson).cache()
 
   test("non-hot transactions are filtered (semi-join)") {
     assert(ledger.filter($"wallet" === "W9").count() === 0)
@@ -205,6 +208,11 @@ class RugpullSpec extends SparkSpec {
     // reference behavior; the rows themselves must not merge or crash)
     assert(out.length === 2)
     assert(out.map(_.getAs[String]("wallet")).toSet === Set("WA", "WB"))
+  }
+
+  test("a block ingested twice in one batch yields its ledger once") {
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(flows(blockJson, blockJson)) === rows(ledger))
   }
 
   test("malformed and empty block lines degrade to zero rows, no crash") {

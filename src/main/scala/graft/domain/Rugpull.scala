@@ -1,7 +1,13 @@
 package graft.domain
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType}
 
 import graft.operators.Tagging
 
@@ -51,14 +57,19 @@ object Rugpull {
     *
     * Semantics preserved from the reference:
     *  - tx qualifies iff any address in accountKeys ∪ writable ∪ readonly
-    *    is watch-listed (hash semi-join, O20);
+    *    is watch-listed (set lookup, O20);
     *  - accountIndex addresses the concatenation accountKeys ++ writable
-    *    ++ readonly (positional lookup join, O22);
+    *    ++ readonly (positional lookup, O22);
     *  - row key = hot-address-at-index if present else balance owner (O23);
     *  - duplicate (wallet, mint) within a side: LAST occurrence wins (O24);
     *  - empty balance string ⇒ SQL NULL; row emitted iff either side
     *    non-empty (O25);
     *  - signature = blockTime-txIdx-1 (O26).
+    *
+    * The three dimensions are read to the driver once per call and enter
+    * the plan as literal lookups, so each must be broadcast-sized: one
+    * whose planner estimate passes `spark.sql.maxBroadcastTableSize` is
+    * refused before any job runs.
     *
     * @param blocks      parsed block DataFrame (schema [[BlockSchema.block]])
     * @param hot         watch-list dimension: column `addr`
@@ -67,9 +78,72 @@ object Rugpull {
     * @param prices      dimension (vault, side ∈ {base, quote}, price_usd)
     */
   def tokenFlows(blocks: DataFrame, hot: DataFrame, watchlists: DataFrame,
-                 prices: DataFrame): DataFrame = {
-    // One pass per block: the scan feeds a single chain of generators,
-    // a broadcast semi-join and two aggregates sharing one shuffle.
+                 prices: DataFrame): DataFrame =
+    tokenFlows(blocks, Dims.read(hot, watchlists, prices))
+
+  /** [[tokenFlows]]'s dimensions as driver-side lookups. Equal values
+    * mean equal contents: [[graft.streaming.Streams.tokenFlowsStream]]
+    * keys its kept plan on them.
+    *
+    * @param hot       hot addresses, distinct and sorted
+    * @param tags      watch-list kind → its addresses, distinct and sorted
+    * @param prices    side → vault → its prices in read order (a duplicate
+    *                  price row repeats the ledger row). Java lists compare
+    *                  values with `equals`, bit-exact for doubles; Scala's
+    *                  `==` has 0.0 == -0.0 and NaN != NaN.
+    * @param priceType the dimension's `price_usd` type
+    */
+  private[graft] final case class Dims(
+      hot: Seq[String],
+      tags: Map[String, Seq[String]],
+      prices: Map[String, Map[String, java.util.List[Any]]],
+      priceType: DataType)
+
+  private[graft] object Dims {
+    def read(hot: DataFrame, watchlists: DataFrame, prices: DataFrame)
+        : Dims = {
+      // a NULL key never matched a join: drop the row
+      def keyed(rows: Seq[Row], keys: Int) =
+        rows.filter(r => (0 until keys).forall(!r.isNullAt(_)))
+      def addrs(rows: Seq[Row], i: Int) =
+        rows.map(_.getString(i)).distinct.sorted
+      val tagRows = keyed(collect("watchlists", watchlists, "kind", "addr"), 2)
+      val priceRows =
+        keyed(collect("prices", prices, "vault", "side", "price_usd"), 2)
+      Dims(
+        addrs(keyed(collect("hot", hot, "addr"), 1), 0),
+        tagRows.groupBy(_.getString(0))
+          .map { case (kind, rs) => kind -> addrs(rs, 1) },
+        priceRows.groupBy(_.getString(1)).map { case (side, rs) =>
+          side -> rs.groupBy(_.getString(0))
+            .map { case (vault, ps) => vault -> ps.map(_.get(2)).asJava }
+        },
+        prices.schema("price_usd").dataType)
+    }
+
+    /** `cols` of `dim` on the driver, refused before any job runs when the
+      * planner's estimate for `dim` passes the broadcast limit. An unknown
+      * estimate (a stat-less source reports `spark.sql.defaultSizeInBytes`)
+      * proceeds. */
+    private def collect(name: String, dim: DataFrame, cols: String*)
+        : Seq[Row] = {
+      val qe = dim.queryExecution
+      val conf = qe.sparkSession.sessionState.conf
+      val size = qe.optimizedPlan.stats.sizeInBytes
+      require(size >= conf.defaultSizeInBytes ||
+          size <= conf.maxBroadcastTableSizeInBytes,
+        s"tokenFlows: the $name dimension is estimated at $size bytes, " +
+          "over spark.sql.maxBroadcastTableSize " +
+          s"(${conf.maxBroadcastTableSizeInBytes} bytes)")
+      dim.select(cols.map(col): _*).collect().toSeq
+    }
+  }
+
+  /** [[tokenFlows]] over dimensions already read. */
+  private[graft] def tokenFlows(blocks: DataFrame, dims: Dims): DataFrame = {
+    // One pass per block: the scan feeds a single chain of generators, a
+    // hot-address filter and two aggregates sharing one shuffle. The
+    // dimensions are literals in the plan: no join, no broadcast.
     //
     // Per-block identity: blockTime alone is NOT unique (Solana emits
     // multiple blocks per second at second resolution). Without it, two
@@ -93,16 +167,13 @@ object Rugpull {
         col("result.blockTime").as("timestamp"),
         posexplode(col("result.transactions")).as(Seq("txIdx", "tx")))
 
-    // Semi-join + positional lookup in ONE pass: explode addresses with
-    // their index (the balance arrays ride along), semi-join the
-    // broadcast hot list, and fold the hits back into a pos→addr map per
-    // tx. Transactions with no hit disappear at the semi-join — the
-    // reference's early-exit filter, distributed. A semi-join never
-    // duplicates a row, so the hot list needs no distinct(), and
-    // collect_set keeps a re-ingested block's positions unique. Every row
-    // of a group carries the same tx's balance arrays, so first() is
-    // exact.
-    val hotDim = broadcast(hot.select(col("addr").as("__hot_addr")))
+    // Hot filter + positional lookup in ONE pass: explode addresses with
+    // their index (the balance arrays ride along), keep the hot ones (an
+    // IN-set test per address), and fold the hits back into a pos→addr map
+    // per tx. Transactions with no hit disappear at the filter — the
+    // reference's early-exit filter, distributed. collect_set keeps a
+    // re-ingested block's positions unique. Every row of a group carries
+    // the same tx's balance arrays, so first() is exact.
     val hotTxs = txs
       .select(col("__block_id"), col("timestamp"), col("txIdx"),
         col("tx.meta.preTokenBalances").as("pre"),
@@ -112,7 +183,7 @@ object Rugpull {
           coalesce(col("tx.meta.loadedAddresses.writable"), noAddrs),
           coalesce(col("tx.meta.loadedAddresses.readonly"), noAddrs)))
           .as(Seq("pos", "addr")))
-      .join(hotDim, col("addr") === col("__hot_addr"), "left_semi")
+      .filter(col("addr").isin(dims.hot: _*))
       .groupBy(col("__block_id"), col("timestamp"), col("txIdx"))
       .agg(map_from_entries(collect_set(struct(col("pos"), col("addr"))))
           .as("hotAt"),
@@ -160,34 +231,31 @@ object Rugpull {
       .withColumn("signature", Tagging.surrogateKey(col("timestamp"),
         col("txIdx"), lit("1")))
 
-    // Enrichment (O29/O30): four membership tags, each an IN-subquery
-    // the planner runs as a broadcast existence join (no distinct() over
-    // the dim, so no per-batch aggregation job), and two price attaches
-    // as broadcast left joins (a duplicate price row duplicates the
-    // ledger row).
+    // Enrichment (O29/O30): four membership tags, each an IN-set test,
+    // and two price lookups in a vault → prices map literal typed like the
+    // dimension's price_usd. explode_outer gives a wallet without a price
+    // one row with a NULL price, and one with several prices a row each.
     def tag(kind: String, key: String): Column =
-      when(col(key).isin(
-        watchlists.filter(col("kind") === kind).select(col("addr"))),
-        col(key))
+      Tagging.isinTag(col(key), dims.tags.getOrElse(kind, Nil))
 
-    def price(df: DataFrame, sideName: String, outName: String)
-        : DataFrame = {
-      val p = prices.filter(col("side") === sideName)
-        .select(col("vault").as(s"__pv_$sideName"),
-          col("price_usd").as(outName))
-      df.join(broadcast(p),
-        df("wallet") === col(s"__pv_$sideName"), "left_outer")
-        .drop(s"__pv_$sideName")
+    val priceMap = MapType(StringType, ArrayType(dims.priceType))
+    def price(sideName: String): Column = {
+      val byVault = dims.prices.getOrElse(sideName, Map.empty)
+        .map { case (vault, ps) => vault -> ps.asScala.toSeq }
+      explode_outer(try_element_at(Bridge.column(Literal(
+        CatalystTypeConverters.createToCatalystConverter(priceMap)(byVault),
+        priceMap)), col("wallet")))
     }
 
-    price(price(merged, "base", "base_price"), "quote", "quote_price")
+    merged
       .select(col("timestamp"), col("wallet"), col("signature"),
         col("mint"), col("pre_balance"), col("post_balance"),
         tag("BASE_VAULTS", "wallet").as("baseVault"),
         tag("QUOTE_VAULTS", "wallet").as("quoteVault"),
         tag("BASE_MINTS", "mint").as("baseMint"),
         tag("QUOTE_MINTS", "mint").as("quoteMint"),
-        col("base_price"), col("quote_price"))
+        price("base").as("base_price"))
+      .withColumn("quote_price", price("quote"))
   }
 
   /** Pool-detection filter (O33): a tx qualifies if its joined log text

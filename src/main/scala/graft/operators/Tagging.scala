@@ -16,10 +16,9 @@ object Tagging {
 
   /** Membership tag: `col` if it is in `members`, else NULL.
     *
-    * Use for small literal sets (the isin turns into an In/InSet expression,
-    * evaluated locally per row — no shuffle, no join). A watch-list held as
-    * a dimension DataFrame tags with `when(col.isin(dim), col)` instead,
-    * which plans as a broadcast existence join (see
+    * The isin turns into an In/InSet expression, evaluated locally per row —
+    * no shuffle, no join. A broadcast-sized watch-list held as a dimension
+    * DataFrame is read to the driver first (see
     * [[graft.domain.Rugpull.tokenFlows]]).
     */
   def isinTag(col: Column, members: Seq[String]): Column =

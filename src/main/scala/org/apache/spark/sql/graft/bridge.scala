@@ -54,4 +54,14 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** [[ofRows]] over a plan known to be analysed — e.g. an analysed plan
+    * with one leaf swapped for a relation of the same output: marked so,
+    * the analyzer returns it as is instead of resolving it again. */
+  def ofAnalyzed(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : org.apache.spark.sql.DataFrame = {
+    plan.setAnalyzed()
+    ofRows(spark, plan)
+  }
 }

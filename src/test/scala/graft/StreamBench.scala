@@ -33,10 +33,11 @@ object StreamBench {
       if (sustained) (if (args.length > 4) args(4).toInt else 500)
       else if (args.length < 2) 500
       else args(1).toInt
-    // Micro-batch tuning knob: AQE is DISABLED under streaming, so a
-    // per-block trigger pays `shuffle.partitions` near-empty tasks per
-    // shuffle stage — a real per-block deployment sizes this to the
-    // block, not to the batch backfill (where AQE coalesces anyway)
+    // Micro-batch tuning knob: the shuffle partition count of each
+    // batch's flagship query. That query runs under AQE (Spark's "AQE is
+    // not supported in streaming" warning concerns the streaming plan,
+    // not the foreachBatch query), which coalesces near-empty reduce
+    // partitions
     val shufP = if (sustained || args.length < 3) 8 else args(2).toInt
     val spark = GraftSession.local(GraftSession.cpus)
     spark.conf.set("spark.sql.shuffle.partitions", shufP.toString)

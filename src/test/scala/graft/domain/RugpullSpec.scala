@@ -2,8 +2,10 @@ package graft.domain
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.TestBridge
+import org.apache.spark.sql.types.{DecimalType, StringType, StructField, StructType}
 
 import graft.SparkSpec
 
@@ -63,11 +65,15 @@ class RugpullSpec extends SparkSpec {
     s"""{"result":{"blockTime":1700000000,"transactions":[${txs.mkString(",")}]}}"""
   }
 
-  /** The ledger of one file holding `lines`, against the fixture dims. */
-  private def flows(lines: String*): DataFrame = {
+  /** Parsed blocks of one file holding `lines`. */
+  private def blocksOf(lines: String*): DataFrame = {
     val dir = Files.createTempDirectory("graft-blocks").toFile
     Files.writeString(dir.toPath.resolve("b0.json"), lines.mkString("\n"))
-    val blocks = Rugpull.parseBlocks(spark, dir.getAbsolutePath)
+    Rugpull.parseBlocks(spark, dir.getAbsolutePath)
+  }
+
+  /** The fixture's (hot, watchlists, prices). */
+  private def fixtureDims: (DataFrame, DataFrame, DataFrame) = {
     val hot = Seq("VAULT_A", "VAULT_Q").toDF("addr")
     val watchlists = Seq(
       ("BASE_VAULTS", "VAULT_A"), ("QUOTE_VAULTS", "VAULT_Q"),
@@ -76,7 +82,13 @@ class RugpullSpec extends SparkSpec {
     val prices = Seq(
       ("VAULT_A", "base", 1.25), ("VAULT_Q", "quote", 0.5))
       .toDF("vault", "side", "price_usd")
-    Rugpull.tokenFlows(blocks, hot, watchlists, prices)
+    (hot, watchlists, prices)
+  }
+
+  /** The ledger of one file holding `lines`, against the fixture dims. */
+  private def flows(lines: String*): DataFrame = {
+    val (hot, watchlists, prices) = fixtureDims
+    Rugpull.tokenFlows(blocksOf(lines: _*), hot, watchlists, prices)
   }
 
   private lazy val ledger: DataFrame = flows(blockJson).cache()
@@ -213,6 +225,62 @@ class RugpullSpec extends SparkSpec {
   test("a block ingested twice in one batch yields its ledger once") {
     def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
     assert(rows(flows(blockJson, blockJson)) === rows(ledger))
+  }
+
+  test("a DECIMAL price_usd keeps its type; duplicate prices repeat rows") {
+    val (hot, watchlists, _) = fixtureDims
+    val prices = Seq(("VAULT_A", "base", "1.25"), ("VAULT_A", "base", "1.3"),
+        ("VAULT_Q", "quote", "0.5"))
+      .toDF("vault", "side", "p")
+      .select($"vault", $"side", $"p".cast("decimal(10,4)").as("price_usd"))
+    val out = Rugpull.tokenFlows(blocksOf(blockJson), hot, watchlists, prices)
+    val priced = Set("base_price", "quote_price")
+    assert(out.schema.filterNot(f => priced(f.name)) ===
+      ledger.schema.filterNot(f => priced(f.name)))
+    priced.foreach(c => assert(out.schema(c) ===
+      StructField(c, DecimalType(10, 4), nullable = true)))
+    def key(r: Row) =
+      (0 to 9).map(i => String.valueOf(r.get(i))).mkString("|")
+    // every row of the double-priced ledger, VAULT_A's row once per price
+    val got = out.collect().groupBy(key)
+    assert(got.keySet === ledger.collect().map(key).toSet)
+    got.foreach { case (k, rs) =>
+      val base = rs.map(r => String.valueOf(r.getAs[java.math.BigDecimal](
+        "base_price"))).sorted.toSeq
+      assert(base === (if (k.contains("|VAULT_A|")) Seq("1.2500", "1.3000")
+        else Seq("null")), k)
+      assert(rs.forall(_.isNullAt(11)), k) // no VAULT_Q wallet row
+    }
+  }
+
+  test("a dimension estimated past the broadcast limit is refused before " +
+      "any job; an unknown estimate proceeds") {
+    val (_, watchlists, prices) = fixtureDims
+    val blocks = blocksOf(blockJson)
+    val huge = spark.range(0, 1L << 40).select($"id".cast("string").as("addr"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    TestBridge.drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val e = try intercept[IllegalArgumentException](
+        Rugpull.tokenFlows(blocks, huge, watchlists, prices))
+      finally {
+        TestBridge.drainListeners(spark)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    assert(e.getMessage.contains("the hot dimension"), e.getMessage)
+    assert(jobs.get() === 0)
+    // an RDD-backed dim has no estimate (defaultSizeInBytes): it is read
+    val rddHot = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row("VAULT_A"), Row("VAULT_Q"))),
+      StructType(Seq(StructField("addr", StringType))))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(Rugpull.tokenFlows(blocks, rddHot, watchlists, prices)) ===
+      rows(ledger))
   }
 
   test("malformed and empty block lines degrade to zero rows, no crash") {

@@ -698,6 +698,85 @@ class StreamsSpec extends SparkSpec {
     assert(rows(0).getAs[String]("pre_balance") === "3")
   }
 
+  /** A block whose one tx names `ADDR_t` and holds one balance. */
+  private def addrBlock(t: Int): String =
+    s"""{"result":{"blockTime":${1700000000 + t},"transactions":[
+      |{"transaction":{"message":{"accountKeys":["ADDR_$t"]}},
+      |"meta":{"preTokenBalances":[{"accountIndex":0,"mint":"M",
+      |"owner":"W","uiTokenAmount":{"uiAmountString":"$t"}}],
+      |"postTokenBalances":[]}}]}}""".stripMargin.replaceAll("\n", "")
+
+  /** (hot, watchlists) holding [[LiveDims]]' contents when read. */
+  private def liveDimFrames: (DataFrame, DataFrame) =
+    (spark.range(1).select(explode(LiveDims.hotUdf()).as("addr")),
+      spark.range(1).select(explode(LiveDims.watchUdf()).as("e"))
+        .select($"e._1".as("kind"), $"e._2".as("addr")))
+
+  test("tokenFlowsStream re-reads the dimensions every trigger (O9)") {
+    val dir = Files.createTempDirectory("graft-stream-dims").toFile
+    LiveDims.set(Seq("ADDR_0"), Nil)
+    val (hot, watchlists) = liveDimFrames
+    val prices = Seq.empty[(String, String, Double)]
+      .toDF("vault", "side", "price_usd")
+    var batches = Vector.empty[Seq[(String, String, String)]]
+    val q = Streams.tokenFlowsStream(spark, dir.getAbsolutePath, hot,
+        watchlists, prices,
+        trigger = org.apache.spark.sql.streaming.Trigger
+          .ProcessingTime("50 milliseconds")) { (df: DataFrame, _: Long) =>
+      batches :+= df.collect().toSeq.map(r => (r.getAs[String]("wallet"),
+        r.getAs[String]("baseVault"), r.getAs[String]("quoteMint")))
+    }
+    try {
+      dropFile(dir, "b0.json", addrBlock(0)); q.processAllAvailable()
+      // a new hot address and its base-vault tag land between triggers
+      LiveDims.set(Seq("ADDR_0", "ADDR_1"), Seq("BASE_VAULTS" -> "ADDR_1"))
+      dropFile(dir, "b1.json", addrBlock(1)); q.processAllAvailable()
+      LiveDims.set(Seq("ADDR_2"), Seq("QUOTE_MINTS" -> "M"))
+      dropFile(dir, "b2.json", addrBlock(2)); q.processAllAvailable()
+    } finally q.stop()
+    assert(batches === Vector(Seq(("ADDR_0", null, null)),
+      Seq(("ADDR_1", "ADDR_1", null)), Seq(("ADDR_2", null, "M"))))
+  }
+
+  test("tokenFlowsStream plans once: later triggers swap their batch into " +
+      "the first plan until a dimension changes") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    val dir = Files.createTempDirectory("graft-stream-plan").toFile
+    LiveDims.set((0 until 4).map(t => s"ADDR_$t"), Nil)
+    val (hot, watchlists) = liveDimFrames
+    val prices = Seq(("ADDR_1", "base", 2.0)).toDF("vault", "side", "price_usd")
+    var plans = Vector.empty[LogicalPlan]
+    var rows = Vector.empty[Seq[(String, String, Any)]]
+    val q = Streams.tokenFlowsStream(spark, dir.getAbsolutePath, hot,
+        watchlists, prices,
+        trigger = org.apache.spark.sql.streaming.Trigger
+          .ProcessingTime("50 milliseconds")) { (df: DataFrame, _: Long) =>
+      plans :+= df.queryExecution.analyzed
+      rows :+= df.collect().toSeq.map(r => (r.getAs[String]("wallet"),
+        r.getAs[String]("baseVault"), r.getAs[Any]("base_price")))
+    }
+    try {
+      (0 until 3).foreach { t =>
+        dropFile(dir, s"b$t.json", addrBlock(t)); q.processAllAvailable()
+      }
+      LiveDims.set((0 until 4).map(t => s"ADDR_$t"),
+        Seq("BASE_VAULTS" -> "ADDR_3"))
+      dropFile(dir, "b3.json", addrBlock(3)); q.processAllAvailable()
+    } finally q.stop()
+    assert(rows === Vector(Seq(("ADDR_0", null, null)),
+      Seq(("ADDR_1", null, 2.0)), Seq(("ADDR_2", null, null)),
+      Seq(("ADDR_3", "ADDR_3", null))))
+    def leaf(p: LogicalPlan) = { val Seq(l) = p.collectLeaves(); l }
+    // batch i's plan is batch 1's analysed plan over batch i's relation:
+    // same operators and expression ids (a rebuild mints new ids)
+    def reused(i: Int): Boolean = plans(i) ==
+      plans(0).transform { case p if p eq leaf(plans(0)) => leaf(plans(i)) }
+    assert(plans.map(leaf).distinct.length === 4) // a relation per batch
+    assert(reused(1), "batch 2 rebuilt its plan")
+    assert(reused(2), "batch 3 rebuilt its plan")
+    assert(!reused(3), "the changed watch-list kept the old plan")
+  }
+
   test("streamingDedup drops duplicate keys across micro-batches") {
     val dir = Files.createTempDirectory("graft-sdedup").toFile
     def write(name: String, lines: Seq[String]): Unit =
@@ -1352,4 +1431,23 @@ class StreamsSpec extends SparkSpec {
       } finally q.stop()
     }
   }
+}
+
+/** Hot list and watch-list whose contents a test changes between
+  * triggers: dimensions read through a nondeterministic UDF, so every
+  * read sees the current value. A top-level object, so the UDFs capture
+  * no test instance. */
+object LiveDims {
+  import java.util.concurrent.atomic.AtomicReference
+
+  private val hot = new AtomicReference(Seq.empty[String])
+  private val watch = new AtomicReference(Seq.empty[(String, String)])
+
+  def set(hotAddrs: Seq[String], kindAddr: Seq[(String, String)]): Unit = {
+    hot.set(hotAddrs)
+    watch.set(kindAddr)
+  }
+
+  val hotUdf = udf(() => hot.get).asNondeterministic()
+  val watchUdf = udf(() => watch.get).asNondeterministic()
 }

@@ -45,14 +45,15 @@ object GraftFunctions {
     "isqrt" -> ((args: Seq[Expression]) => IntSqrt(args.head)),
     "gunzip" -> ((args: Seq[Expression]) => Gunzip(args.head)))
 
-  /** Make all graft SQL functions, the custom planner strategy and the
-    * optimizer rule available in a live session (idempotent — safe to
-    * call once per suite on a shared session). */
+  /** Make all graft SQL functions, the custom planner strategy, the
+    * optimizer rule and [[Tables.events]]' nanos-as-long read available in
+    * a live session (idempotent — safe to call once per suite). */
   def register(spark: SparkSession): Unit = {
     builders.foreach { case (name, b) =>
       Bridge.registerTempFunction(spark, name, b)
     }
     graft.plans.TopKPerKey.ensureRegistered(spark)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
   }
 }
 

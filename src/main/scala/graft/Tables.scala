@@ -56,8 +56,8 @@ object Tables {
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
   /** events.ts has shipped in two physical layouts across generator
     * versions: TIMESTAMP(NANOS) (which Spark's vectorized reader rejects —
-    * read as a long via the legacy conf and convert losslessly; integer
-    * `div`, not `/`, so epoch-nanos never round through a double) and
+    * read as a long under the legacy conf `GraftFunctions.register` sets;
+    * integer `div`, not `/`, so epoch-nanos never round through a double) and
     * TIMESTAMP(MICROS) without UTC adjustment (which Spark reads as
     * TIMESTAMP_NTZ — cast to TimestampType so downstream time arithmetic
     * sees ONE type; sessions run UTC, so the cast is value-identity).
@@ -65,7 +65,6 @@ object Tables {
     * query code must run against either vintage of the dataset.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = load(s, d, "events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -13,14 +13,26 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
     assert(spark.sparkContext.getConf.get("spark.ui.enabled") === "false")
     assert(spark.sparkContext.uiWebUrl.isEmpty)
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
     assert(spark.sql("SELECT isqrt(17L) AS r").head().getLong(0) === 4L)
   }
 
-  test("GraftSession.scala is the only source file that builds a session") {
-    val builds = Files.walk(Paths.get("src")).iterator().asScala
+  private def sourcesContaining(root: String, text: String): Seq[String] =
+    Files.walk(Paths.get(root)).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
-      .filter(p => Files.readString(p).contains("SparkSession." + "builder()"))
-      .map(_.getFileName.toString).toSeq
-    assert(builds === Seq("GraftSession.scala"))
+      .filter(p => Files.readString(p).contains(text))
+      .map(_.getFileName.toString).toSeq.sorted
+
+  test("GraftSession.scala is the only source file that builds a session") {
+    assert(sourcesContaining("src", "SparkSession." + "builder()") ===
+      Seq("GraftSession.scala"))
+  }
+
+  // session conf is set where a session is set up (register), plus
+  // Graph's scoped AQE toggle; a query that sets conf changes every
+  // later query on the session
+  test("src/main sets session conf only in GraftExtensions and Graph") {
+    assert(sourcesContaining("src/main", "conf." + "set(") ===
+      Seq("GraftExtensions.scala", "Graph.scala"))
   }
 }

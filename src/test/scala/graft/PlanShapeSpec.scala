@@ -636,7 +636,7 @@ class PlanShapeSpec extends SparkSpec {
   // (q149's BFS rounds execute eagerly via localCheckpoint during
   // query construction, so its final plan is just the post-BFS
   // aggregate — the per-round join shape is exercised by GraphSpec
-  // and the Scratch replication probe instead.)
+  // and `Probe scale q149_bfs_hops` instead.)
   test("q148 Adamic-Adar: equi-joins only, never nested-loop") {
     val bad = collectAll(plan("q148_adamic_adar")) {
       case j: org.apache.spark.sql.execution.joins.CartesianProductExec =>

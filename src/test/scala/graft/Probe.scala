@@ -1,16 +1,18 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import java.security.MessageDigest
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.TestBridge
 
-/** Query probe for the optimization work (test scope, like [[Scratch]]):
-  * runs named declared queries on a [[GraftSession]] session over
+/** Query probe for the optimization work (test scope): runs named
+  * declared queries on a [[GraftSession]] session over
   * `SPARK_GRAFT_SF_DIR`. `<queries>` is a comma-separated name list, or
   * `all`.
   *
@@ -27,6 +29,12 @@ import org.apache.spark.sql.graft.TestBridge
   *   sbt "Test/runMain graft.Probe load"
   *     the fixed per-query cost: `read.parquet` resolution, DataFrame
   *     build (analysis) and build + execute, for a few cheap queries
+  *   sbt "Test/runMain graft.Probe scale <queries> [mults]"
+  *     the decade probe: for each multiplier (default `1,10`) writes the
+  *     tables replicated that many times (see [[replicate]]) to a temp
+  *     sf dir, runs each query there once warm and then best of 2, and
+  *     prints its wall time, row count, sorted-row digest and growth
+  *     over the previous multiplier
   */
 object Probe {
 
@@ -38,12 +46,6 @@ object Probe {
     } finally spark.stop()
   }
 
-  private case class Stage(name: String, submitted: Long,
-                           var completed: Long = 0L, var tasks: Int = 0,
-                           var taskTimeMs: Long = 0L,
-                           var shufReadMB: Double = 0,
-                           var shufWriteMB: Double = 0)
-
   /** Runs one mode on a live session and leaves the session running. */
   def run(spark: SparkSession, sfDir: String, args: Seq[String]): Unit = {
     def names(list: String): Seq[String] =
@@ -53,11 +55,11 @@ object Probe {
     // Builds `q`, applies `act` and returns its seconds; the query's
     // caches are released outside the timed region either way, so every
     // run is independent (as in Bench).
-    def timed(q: String)(act: DataFrame => Unit): Double = {
+    def timed(q: String, dir: String = sfDir)(act: DataFrame => Unit): Double = {
       val fn = SparkEntry.queries.getOrElse(q, sys.error(s"unknown query $q"))
       val t0 = System.nanoTime()
       try {
-        act(fn(spark, sfDir))
+        act(fn(spark, dir))
         (System.nanoTime() - t0) / 1e9
       } finally {
         SparkEntry.releaseScopedCaches()
@@ -125,56 +127,104 @@ object Probe {
             f"build+exec=${full * 1000}%.0f ms")
         }
 
+      case Seq("scale", list, mults @ _*) =>
+        val prevBest = mutable.Map[String, Double]()
+        for (m <- mults.headOption.fold(Seq(1, 10))(
+            _.split(',').map(_.trim.toInt).toSeq)) {
+          val dir = Files.createTempDirectory("graft-scale")
+          try {
+            replicate(spark, sfDir, m, dir.toString)
+            for (q <- names(list)) {
+              var rows = Array.empty[Row]
+              val best = (0 to 2).map(_ => timed(q, dir.toString) { df =>
+                rows = df.collect()
+              }).tail.min
+              val digest = MessageDigest.getInstance("SHA-256").digest(
+                rows.map(_.mkString("\u0001")).sorted.mkString("\n")
+                  .getBytes(UTF_8))
+                .take(8).map(b => f"$b%02x").mkString
+              val step = prevBest.get(q).fold("")(t => f"  ${best / t}%.1fx time")
+              prevBest(q) = best
+              println(f"[scale] $q%s ${m}x: $best%.2f s  rows=${rows.length}%d" +
+                s"  digest=$digest$step")
+            }
+          } finally {
+            org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+            Tables.invalidate()
+          }
+        }
+
       case _ => sys.error("usage: Probe profile <queries> [reps] | " +
         "ab <confKey> <offVal> <onVal> <queries> [reps] | " +
-        "explain <outDir> <tag> <queries> | load")
+        "explain <outDir> <tag> <queries> | load | scale <queries> [mults]")
     }
   }
 
   /** Runs each query `reps` times; the last run is measured with a
-    * listener recording each stage's wall span, tasks and task time. */
+    * recorder of each stage's wall span, tasks and task time. */
   private def profile(spark: SparkSession, names: Seq[String], reps: Int,
-                      sink: String => Double): Unit = {
-    val stages = mutable.LinkedHashMap[Int, Stage]()
-    var jobs = 0
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
-        stages(s.stageInfo.stageId) = Stage(
-          s.stageInfo.name.takeWhile(_ != '\n').take(90), System.nanoTime())
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        stages.get(s.stageInfo.stageId).foreach { st =>
-          st.completed = System.nanoTime()
-          st.tasks = s.stageInfo.numTasks
-          val m = s.stageInfo.taskMetrics
-          if (m != null) {
-            st.taskTimeMs = m.executorRunTime
-            st.shufReadMB = m.shuffleReadMetrics.totalBytesRead / 1e6
-            st.shufWriteMB = m.shuffleWriteMetrics.bytesWritten / 1e6
-          }
-        }
-    }
+                      sink: String => Double): Unit =
     for (q <- names; r <- 0 until reps) {
       if (r < reps - 1) {
         println(f"== $q%s rep$r (warm): wall=${sink(q)}%.2f s")
       } else {
-        stages.clear(); jobs = 0
-        spark.sparkContext.addSparkListener(listener)
-        val wall = try sink(q) finally {
-          TestBridge.drainListeners(spark)
-          spark.sparkContext.removeSparkListener(listener)
-        }
-        println(f"== $q%s rep$r: wall=$wall%.2f s  jobs=$jobs%d  " +
-          f"stages=${stages.size}%d")
-        for (st <- stages.values.toSeq.sortBy(st => st.submitted - st.completed)
-            .take(25)) {
-          val span = (st.completed - st.submitted) / 1e6
-          println(f"   $span%8.0f ms span  ${st.taskTimeMs}%7d ms task  " +
+        val run = TestBridge.recorded(spark)(sink(q))
+        println(f"== $q%s rep$r: wall=${run.value}%.2f s  jobs=${run.jobs}%d  " +
+          f"stages=${run.stages.size}%d")
+        for (st <- run.stages.sortBy(-_.spanMs).take(25)) {
+          println(f"   ${st.spanMs}%8.0f ms span  ${st.taskTimeMs}%7d ms task  " +
             f"${st.tasks}%4d tk  r${st.shufReadMB}%6.1f w${st.shufWriteMB}%6.1f MB  ${st.name}%s")
         }
         println(s"-- $q operator metrics (last execution):")
         TestBridge.lastExecMetrics(spark).foreach(l => println("   " + l))
       }
     }
+
+  /** Key families of the replicated tables: a foreign key shares its
+    * primary key's family, and no query joins two families. */
+  val keyFamilies: Seq[Seq[String]] = Seq(
+    Seq("c_custkey", "o_custkey"), Seq("o_orderkey", "l_orderkey"),
+    Seq("p_partkey", "l_partkey"), Seq("s_suppkey", "l_suppkey"),
+    Seq("doc_id"), Seq("vec_id"), Seq("event_id"), Seq("user_id"))
+  val replicated: Seq[String] = Seq("customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
+  val writtenOnce: Seq[String] = Seq("nation", "region")
+
+  /** Writes the tables of `sfDir` to `out`, each of [[replicated]] as
+    * `mult` copies. Copy k shifts every key by k · (1 + its family's max),
+    * so copies never join across. Documents stay exact copies (shingle df
+    * saturates: the worst case for text on purpose). Embeddings flip the
+    * sign of a per-copy hash-chosen set of dims: sims within a copy equal
+    * the originals while cross-copy sims scramble — exact vector copies
+    * would pair every copy with every other at sim 1.0, measuring data
+    * pathology, not the plan. Raw columns are written back as loaded, so
+    * the copy keeps the source's `events.ts` vintage. */
+  def replicate(spark: SparkSession, sfDir: String, mult: Int,
+                out: String): Unit = {
+    val frames = (replicated ++ writtenOnce)
+      .map(t => t -> Tables.load(spark, sfDir, t)).toMap
+    val keyMax: Map[String, Long] = replicated.flatMap { t =>
+      val keys = frames(t).columns.toSeq.filter(keyFamilies.flatten.contains)
+      val maxes = frames(t).select(
+        keys.map(c => coalesce(max(col(c)).cast("long"), lit(0L))): _*).head()
+      keys.zipWithIndex.map { case (c, i) => c -> maxes.getLong(i) }
+    }.toMap
+    val step: Map[String, Long] = keyFamilies.flatMap { fam =>
+      fam.map(_ -> (1 + fam.flatMap(keyMax.get).max))
+    }.toMap
+    for (t <- replicated) {
+      val df = frames(t)
+      (0 until mult).map { k =>
+        df.select(df.schema.fields.toSeq.map { f =>
+          val c = col(f.name)
+          (if (step.contains(f.name)) (c + lit(k * step(f.name))).cast(f.dataType)
+           else if (f.name == "embedding" && k > 0) transform(c, (x, i) =>
+             (x * when(pmod(xxhash64(i, lit(k)), lit(2)) === 0, 1.0f)
+               .otherwise(-1.0f)).cast("float"))
+           else c).as(f.name)
+        }: _*)
+      }.reduce(_ unionByName _).write.parquet(s"$out/$t.parquet")
+    }
+    writtenOnce.foreach(t => frames(t).write.parquet(s"$out/$t.parquet"))
   }
 }

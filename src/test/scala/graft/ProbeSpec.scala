@@ -1,7 +1,12 @@
 package graft
 
 import java.io.ByteArrayOutputStream
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.countDistinct
 
 class ProbeSpec extends SparkSpec {
 
@@ -23,5 +28,43 @@ class ProbeSpec extends SparkSpec {
       .map(_.group(1).toInt)
     assert(jobs.exists(_ >= 1), buf.toString("UTF-8"))
     assert(!spark.sparkContext.isStopped)
+  }
+
+  test("scale: 2x tables double every row and key family, and the mode " +
+      "prints one line per multiplier and removes its dirs") {
+    val out = Files.createTempDirectory("graft-probe-scale").toString
+    Probe.replicate(spark, sf, 2, out)
+    def base(t: String) = Tables.load(spark, sf, t)
+    def copy(t: String) = Tables.load(spark, out, t)
+    for (t <- Probe.replicated)
+      assert(copy(t).count() === 2 * base(t).count(), t)
+    for (t <- Probe.writtenOnce)
+      assert(copy(t).collect().toSet === base(t).collect().toSet, t)
+    for (t <- Probe.replicated; c <- Probe.keyFamilies.flatten
+         if base(t).columns.contains(c)) {
+      def distinct(df: DataFrame) =
+        df.agg(countDistinct(c)).head().getLong(0)
+      assert(distinct(copy(t)) === 2 * distinct(base(t)), s"$t.$c")
+    }
+    def joined(tbl: String => DataFrame) =
+      tbl("lineitem").join(tbl("orders"),
+        tbl("lineitem")("l_orderkey") === tbl("orders")("o_orderkey")).count()
+    assert(joined(copy) === 2 * joined(base))
+    org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(out).toFile)
+    Tables.invalidate()
+
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def scaleDirs() = Files.list(tmp).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("graft-scale")).toSet
+    val before = scaleDirs()
+    val buf = new ByteArrayOutputStream()
+    Console.withOut(buf) {
+      Probe.run(spark, sf, Seq("scale", "q01_pricing_summary", "1,2"))
+    }
+    val lines = buf.toString("UTF-8").linesIterator
+      .filter(_.startsWith("[scale]")).toSeq
+    assert(lines.map(_.split(' ')(2)) === Seq("1x:", "2x:"), lines)
+    assert(lines(1).contains("x time"), lines)
+    assert(scaleDirs() === before)
   }
 }

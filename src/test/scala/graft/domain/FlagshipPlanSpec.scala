@@ -1,9 +1,7 @@
 package graft.domain
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
@@ -27,18 +25,8 @@ class FlagshipPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val ledger = Rugpull.tokenFlows(
       Rugpull.parseBlocks(spark, dir.toString), hot, watchlists, prices)
 
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    TestBridge.drainListeners(spark)
-    spark.sparkContext.addSparkListener(listener)
-    val rows = try ledger.collect() finally {
-      TestBridge.drainListeners(spark)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    assert(rows.nonEmpty)
+    val run = TestBridge.recorded(spark)(ledger.collect())
+    assert(run.value.nonEmpty)
 
     val plan = ledger.queryExecution.executedPlan
     def scans(p: SparkPlan) = collect(p) { case s: FileSourceScanExec => s }
@@ -47,6 +35,6 @@ class FlagshipPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       plan)
     assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan)
     assert(collect(plan) { case b: BroadcastExchangeExec => b }.isEmpty, plan)
-    assert(jobs.get() <= 2, s"${jobs.get()} jobs")
+    assert(run.jobs <= 2, s"${run.jobs} jobs")
   }
 }

@@ -258,22 +258,13 @@ class RugpullSpec extends SparkSpec {
     val (_, watchlists, prices) = fixtureDims
     val blocks = blocksOf(blockJson)
     val huge = spark.range(0, 1L << 40).select($"id".cast("string").as("addr"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    TestBridge.drainListeners(spark)
-    spark.sparkContext.addSparkListener(listener)
-    val e = try intercept[IllegalArgumentException](
+    val refused = TestBridge.recorded(spark) {
+      intercept[IllegalArgumentException](
         Rugpull.tokenFlows(blocks, huge, watchlists, prices))
-      finally {
-        TestBridge.drainListeners(spark)
-        spark.sparkContext.removeSparkListener(listener)
-      }
+    }
+    val e = refused.value
     assert(e.getMessage.contains("the hot dimension"), e.getMessage)
-    assert(jobs.get() === 0)
+    assert(refused.jobs === 0)
     // an RDD-backed dim has no estimate (defaultSizeInBytes): it is read
     val rddHot = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row("VAULT_A"), Row("VAULT_Q"))),

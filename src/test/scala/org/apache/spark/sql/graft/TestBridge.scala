@@ -1,5 +1,10 @@
 package org.apache.spark.sql.graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 /** Test-only bridge: SparkSessionExtensions' build* accessors are
@@ -16,6 +21,49 @@ object TestBridge {
     * (`listenerBus` is private[spark]). */
   def drainListeners(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** One completed stage: name (first line), wall span from submission,
+    * task count, summed task run time and shuffle read/write MB. */
+  final case class StageSpan(name: String, spanMs: Double, tasks: Int,
+                             taskTimeMs: Long, shufReadMB: Double,
+                             shufWriteMB: Double)
+
+  /** A body's value with the jobs it started and the stages it
+    * completed, in completion order. */
+  final case class Recorded[A](value: A, jobs: Int, stages: Seq[StageSpan])
+
+  /** Runs `body` with one job and stage listener attached. The bus is
+    * drained before the listener is added and before it is removed, so
+    * the record holds exactly the body's jobs; the listener is removed
+    * also when the body throws. */
+  def recorded[A](spark: SparkSession)(body: => A): Recorded[A] = {
+    val jobs = new AtomicInteger
+    val submitted = mutable.Map[Int, Long]()
+    val stages = mutable.ArrayBuffer[StageSpan]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        submitted(e.stageInfo.stageId) = System.nanoTime()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val info = e.stageInfo
+        val m = Option(info.taskMetrics)
+        stages += StageSpan(info.name.takeWhile(_ != '\n').take(90),
+          submitted.get(info.stageId)
+            .fold(0.0)(t0 => (System.nanoTime() - t0) / 1e6),
+          info.numTasks, m.fold(0L)(_.executorRunTime),
+          m.fold(0.0)(_.shuffleReadMetrics.totalBytesRead / 1e6),
+          m.fold(0.0)(_.shuffleWriteMetrics.bytesWritten / 1e6))
+      }
+    }
+    drainListeners(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val value = try body finally {
+      drainListeners(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    Recorded(value, jobs.get(), stages.toSeq)
+  }
 
   /** Per-operator metrics of the LAST completed SQL execution: lines of
     * "nodeName | metric=value, ..." in plan-graph order (UI-less stand-in

@@ -730,19 +730,7 @@ object AnalyticsQueries {
     },
     // q145: decile boundaries via q50's rank = ceil(q·n) convention;
     // boundary ties fall to the lower bucket (strict >) on both sides
-    Some(
-      """WITH pos AS (SELECT DISTINCT o_custkey FROM orders
-        |             WHERE o_orderpriority = '1-URGENT'),
-        |ranked AS (
-        |  SELECT c_acctbal, row_number() OVER (ORDER BY c_acctbal) AS rn,
-        |    count(*) OVER () AS n
-        |  FROM customer),
-        |bounds AS (
-        |  SELECT c_acctbal AS b
-        |  FROM ranked, (VALUES (0.1),(0.2),(0.3),(0.4),(0.5),(0.6),
-        |                       (0.7),(0.8),(0.9)) qs(q)
-        |  WHERE rn = greatest(1, CAST(ceil(CAST(q AS DOUBLE) * n)
-        |    AS BIGINT))),
+    Some(urgentDecileOracleCtes + """,
         |dec AS (
         |  SELECT CASE WHEN p.o_custkey IS NULL THEN 0 ELSE 1 END AS y,
         |    10 - (SELECT count(*) FROM bounds WHERE c.c_acctbal > b)
@@ -1099,19 +1087,7 @@ object AnalyticsQueries {
     },
     // q162: q145's decile bounds; each threshold's confusion matrix
     // from the cumulative over the 10-row decile table
-    Some(
-      """WITH pos AS (SELECT DISTINCT o_custkey FROM orders
-        |             WHERE o_orderpriority = '1-URGENT'),
-        |ranked AS (
-        |  SELECT c_acctbal, row_number() OVER (ORDER BY c_acctbal) AS rn,
-        |    count(*) OVER () AS n
-        |  FROM customer),
-        |bounds AS (
-        |  SELECT c_acctbal AS b
-        |  FROM ranked, (VALUES (0.1),(0.2),(0.3),(0.4),(0.5),(0.6),
-        |                       (0.7),(0.8),(0.9)) qs(q)
-        |  WHERE rn = greatest(1, CAST(ceil(CAST(q AS DOUBLE) * n)
-        |    AS BIGINT))),
+    Some(urgentDecileOracleCtes + """,
         |dec AS (
         |  SELECT CASE WHEN p.o_custkey IS NULL THEN 0 ELSE 1 END AS y,
         |    10 - (SELECT count(*) FROM bounds WHERE c.c_acctbal > b)
@@ -3478,6 +3454,23 @@ object AnalyticsQueries {
     Percentiles.exactQuantiles(df.withColumn("__g", lit(1)), "__g",
         valCol, (1 to 9).map(_ / 10.0))
       .agg(sort_array(collect_list($"value")).as("__bs"))
+
+  /** [[urgentScored]]'s positives and [[decileBounds]] of acctbal in
+    * SQL, ending at the 9 bounds `b`: the shared oracle prefix of q145
+    * and q162. */
+  private val urgentDecileOracleCtes: String =
+    """WITH pos AS (SELECT DISTINCT o_custkey FROM orders
+      |             WHERE o_orderpriority = '1-URGENT'),
+      |ranked AS (
+      |  SELECT c_acctbal, row_number() OVER (ORDER BY c_acctbal) AS rn,
+      |    count(*) OVER () AS n
+      |  FROM customer),
+      |bounds AS (
+      |  SELECT c_acctbal AS b
+      |  FROM ranked, (VALUES (0.1),(0.2),(0.3),(0.4),(0.5),(0.6),
+      |                       (0.7),(0.8),(0.9)) qs(q)
+      |  WHERE rn = greatest(1, CAST(ceil(CAST(q AS DOUBLE) * n)
+      |    AS BIGINT)))""".stripMargin
 
   /** Decile 1 = top values: 10 − (#bounds strictly below x). Long so
     * the emitted column type matches the oracle's BIGINT exactly. */

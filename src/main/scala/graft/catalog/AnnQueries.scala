@@ -77,18 +77,7 @@ object AnnQueries {
         |        CAST(c.cvec AS DOUBLE[])) DESC, c.cell_id ASC) AS crk
         |  FROM q CROSS JOIN c),
         |probes AS (SELECT query_id, qv, cell_id FROM qc WHERE crk <= 3),
-        |scored AS (
-        |  SELECT p.query_id, s.vec_id AS neighbor_id,
-        |    list_cosine_similarity(CAST(s.embedding AS DOUBLE[]),
-        |      CAST(p.qv AS DOUBLE[])) AS sim
-        |  FROM assigned s JOIN probes p ON s.cell_id = p.cell_id
-        |  WHERE s.vec_id <> p.query_id),
-        |r AS (SELECT query_id, neighbor_id, sim, row_number() OVER (
-        |  PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rk
-        |  FROM scored)
-        |SELECT query_id, CAST(rk AS INT) AS rk, neighbor_id,
-        |  floor(sim * 10000 + 0.5) / 10000.0 AS sim
-        |FROM r WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin)),
+        |""".stripMargin + ivfScoredTopK)),
 
     // Embedding near-duplicate pairs: same-label blocking + exact cosine
     // threshold (the verification step of embedding dedup; oracle-able).
@@ -417,58 +406,7 @@ object AnnQueries {
     // q96: the full two-level IVF funnel (cell→coarse routing, per-point
     // coarse probes, candidate-restricted assignment and query probes)
     // reproduced in SQL
-    Some(
-      """WITH c AS (SELECT vec_id AS cell_id, embedding AS cvec
-        |  FROM embeddings WHERE vec_id % 50 = 0),
-        |g AS (SELECT vec_id AS gid, embedding AS gvec
-        |  FROM embeddings WHERE vec_id % 200 = 0),
-        |cg AS (
-        |  SELECT cell_id, cvec, gid FROM (
-        |    SELECT c.cell_id, c.cvec, g.gid,
-        |      row_number() OVER (PARTITION BY c.cell_id ORDER BY
-        |        list_cosine_similarity(CAST(c.cvec AS DOUBLE[]),
-        |          CAST(g.gvec AS DOUBLE[])) DESC, g.gid ASC) AS grn
-        |    FROM c CROSS JOIN g)
-        |  WHERE grn <= 2),
-        |pg AS (
-        |  SELECT vec_id, embedding, gid FROM (
-        |    SELECT e.vec_id, e.embedding, g.gid,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |        list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |          CAST(g.gvec AS DOUBLE[])) DESC, g.gid ASC) AS prn
-        |    FROM embeddings e CROSS JOIN g)
-        |  WHERE prn <= 2),
-        |cand AS (
-        |  SELECT DISTINCT p.vec_id, p.embedding, cg.cell_id, cg.cvec
-        |  FROM pg p JOIN cg ON p.gid = cg.gid),
-        |assigned AS (
-        |  SELECT vec_id, embedding, cell_id FROM (
-        |    SELECT vec_id, embedding, cell_id,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY
-        |        list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-        |          CAST(cvec AS DOUBLE[])) DESC, cell_id ASC) AS arn
-        |    FROM cand)
-        |  WHERE arn = 1),
-        |probes AS (
-        |  SELECT vec_id AS query_id, embedding AS qv, cell_id FROM (
-        |    SELECT vec_id, embedding, cell_id,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY
-        |        list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-        |          CAST(cvec AS DOUBLE[])) DESC, cell_id ASC) AS crk
-        |    FROM cand WHERE vec_id < 5)
-        |  WHERE crk <= 3),
-        |scored AS (
-        |  SELECT p.query_id, s.vec_id AS neighbor_id,
-        |    list_cosine_similarity(CAST(s.embedding AS DOUBLE[]),
-        |      CAST(p.qv AS DOUBLE[])) AS sim
-        |  FROM assigned s JOIN probes p ON s.cell_id = p.cell_id
-        |  WHERE s.vec_id <> p.query_id),
-        |r AS (SELECT query_id, neighbor_id, sim, row_number() OVER (
-        |  PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rk
-        |  FROM scored)
-        |SELECT query_id, CAST(rk AS INT) AS rk, neighbor_id,
-        |  floor(sim * 10000 + 0.5) / 10000.0 AS sim
-        |FROM r WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin)),
+    Some(ivfTwoLevelCtes + ",\n" + ivfScoredTopK)),
 
     // HYBRID RETRIEVAL (RRF) — the modern search stack in one query:
     // query-by-example over the doc corpus, lexical token-Jaccard via
@@ -733,21 +671,7 @@ object AnnQueries {
     // grid join replaces — row-for-row agreement proves the 3×3 cell
     // neighborhood loses no within-radius pair. Same Knuth-hash
     // coordinates, same IEEE-exact planar metric, same operation order.
-    Some(
-      """WITH c AS (
-        |  SELECT c_custkey, c_nationkey,
-        |    40.0 + ((c_custkey % 2147483647) * 2654435761 % 4294967296)
-        |      / 4294967296.0 * 10.0 AS lat,
-        |    -80.0 + (((c_custkey + 1000003) % 2147483647) * 2654435761
-        |      % 4294967296) / 4294967296.0 * 10.0 AS lon
-        |  FROM customer),
-        |s AS (
-        |  SELECT s_suppkey,
-        |    40.0 + (((s_suppkey + 500000) % 2147483647) * 2654435761
-        |      % 4294967296) / 4294967296.0 * 10.0 AS lat,
-        |    -80.0 + (((s_suppkey + 500000 + 1000003) % 2147483647)
-        |      * 2654435761 % 4294967296) / 4294967296.0 * 10.0 AS lon
-        |  FROM supplier),
+    Some(geoPointCtes("c_custkey, c_nationkey") + """,
         |w AS (
         |  SELECT c.c_custkey, c.c_nationkey,
         |    sqrt(((c.lat - s.lat) * 111.0) * ((c.lat - s.lat) * 111.0)
@@ -897,21 +821,7 @@ object AnnQueries {
     },
     // q258: q190's cross-join-filter world, argmin by (µkm, depot)
     // via row_number — the deterministic-tie mirror of min(struct)
-    Some(
-      """WITH c AS (
-        |  SELECT c_custkey,
-        |    40.0 + ((c_custkey % 2147483647) * 2654435761 % 4294967296)
-        |      / 4294967296.0 * 10.0 AS lat,
-        |    -80.0 + (((c_custkey + 1000003) % 2147483647) * 2654435761
-        |      % 4294967296) / 4294967296.0 * 10.0 AS lon
-        |  FROM customer),
-        |s AS (
-        |  SELECT s_suppkey,
-        |    40.0 + (((s_suppkey + 500000) % 2147483647) * 2654435761
-        |      % 4294967296) / 4294967296.0 * 10.0 AS lat,
-        |    -80.0 + (((s_suppkey + 500000 + 1000003) % 2147483647)
-        |      * 2654435761 % 4294967296) / 4294967296.0 * 10.0 AS lon
-        |  FROM supplier),
+    Some(geoPointCtes("c_custkey") + """,
         |w AS (
         |  SELECT c.c_custkey, s.s_suppkey,
         |    CAST(floor(sqrt(((c.lat - s.lat) * 111.0)
@@ -1096,21 +1006,7 @@ object AnnQueries {
     },
     // q293: the oracle ranks the cartesian + radius filter (q190's
     // model) with the identical (um, depot) tie order
-    Some(
-      """WITH c AS (
-        |  SELECT c_custkey,
-        |    40.0 + ((c_custkey % 2147483647) * 2654435761 % 4294967296)
-        |      / 4294967296.0 * 10.0 AS lat,
-        |    -80.0 + (((c_custkey + 1000003) % 2147483647) * 2654435761
-        |      % 4294967296) / 4294967296.0 * 10.0 AS lon
-        |  FROM customer),
-        |s AS (
-        |  SELECT s_suppkey,
-        |    40.0 + (((s_suppkey + 500000) % 2147483647) * 2654435761
-        |      % 4294967296) / 4294967296.0 * 10.0 AS lat,
-        |    -80.0 + (((s_suppkey + 500000 + 1000003) % 2147483647)
-        |      * 2654435761 % 4294967296) / 4294967296.0 * 10.0 AS lon
-        |  FROM supplier),
+    Some(geoPointCtes("c_custkey") + """,
         |w AS (
         |  SELECT c.c_custkey, s.s_suppkey,
         |    CAST(floor(sqrt(((c.lat - s.lat) * 111.0)
@@ -1173,21 +1069,7 @@ object AnnQueries {
     },
     // q295: DuckDB's floor(sqrt) seed + the same ±1 integer
     // correction = an independent exact isqrt
-    Some(
-      """WITH c AS (
-        |  SELECT c_custkey,
-        |    40.0 + ((c_custkey % 2147483647) * 2654435761 % 4294967296)
-        |      / 4294967296.0 * 10.0 AS lat,
-        |    -80.0 + (((c_custkey + 1000003) % 2147483647) * 2654435761
-        |      % 4294967296) / 4294967296.0 * 10.0 AS lon
-        |  FROM customer),
-        |s AS (
-        |  SELECT s_suppkey,
-        |    40.0 + (((s_suppkey + 500000) % 2147483647) * 2654435761
-        |      % 4294967296) / 4294967296.0 * 10.0 AS lat,
-        |    -80.0 + (((s_suppkey + 500000 + 1000003) % 2147483647)
-        |      * 2654435761 % 4294967296) / 4294967296.0 * 10.0 AS lon
-        |  FROM supplier),
+    Some(geoPointCtes("c_custkey") + """,
         |w AS (
         |  SELECT c.c_custkey, s.s_suppkey,
         |    CAST(floor(c.lat * 1000000) AS BIGINT)
@@ -1313,48 +1195,9 @@ object AnnQueries {
             .as("recall_at_5"))
         .orderBy($"query_id")
     },
-    // q320: q96's funnel CTEs verbatim + q26's exact scorer + an
-    // integer set intersection — recall@5 per query.
-    Some(
-      """WITH c AS (SELECT vec_id AS cell_id, embedding AS cvec
-        |  FROM embeddings WHERE vec_id % 50 = 0),
-        |g AS (SELECT vec_id AS gid, embedding AS gvec
-        |  FROM embeddings WHERE vec_id % 200 = 0),
-        |cg AS (
-        |  SELECT cell_id, cvec, gid FROM (
-        |    SELECT c.cell_id, c.cvec, g.gid,
-        |      row_number() OVER (PARTITION BY c.cell_id ORDER BY
-        |        list_cosine_similarity(CAST(c.cvec AS DOUBLE[]),
-        |          CAST(g.gvec AS DOUBLE[])) DESC, g.gid ASC) AS grn
-        |    FROM c CROSS JOIN g)
-        |  WHERE grn <= 2),
-        |pg AS (
-        |  SELECT vec_id, embedding, gid FROM (
-        |    SELECT e.vec_id, e.embedding, g.gid,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |        list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |          CAST(g.gvec AS DOUBLE[])) DESC, g.gid ASC) AS prn
-        |    FROM embeddings e CROSS JOIN g)
-        |  WHERE prn <= 2),
-        |cand AS (
-        |  SELECT DISTINCT p.vec_id, p.embedding, cg.cell_id, cg.cvec
-        |  FROM pg p JOIN cg ON p.gid = cg.gid),
-        |assigned AS (
-        |  SELECT vec_id, embedding, cell_id FROM (
-        |    SELECT vec_id, embedding, cell_id,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY
-        |        list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-        |          CAST(cvec AS DOUBLE[])) DESC, cell_id ASC) AS arn
-        |    FROM cand)
-        |  WHERE arn = 1),
-        |probes AS (
-        |  SELECT vec_id AS query_id, embedding AS qv, cell_id FROM (
-        |    SELECT vec_id, embedding, cell_id,
-        |      row_number() OVER (PARTITION BY vec_id ORDER BY
-        |        list_cosine_similarity(CAST(embedding AS DOUBLE[]),
-        |          CAST(cvec AS DOUBLE[])) DESC, cell_id ASC) AS crk
-        |    FROM cand WHERE vec_id < 5)
-        |  WHERE crk <= 3),
+    // q320: q96's two-level funnel (ivfTwoLevelCtes) + q26's exact
+    // scorer + an integer set intersection — recall@5 per query.
+    Some(ivfTwoLevelCtes + """,
         |scored AS (
         |  SELECT p.query_id, s.vec_id AS neighbor_id,
         |    list_cosine_similarity(CAST(s.embedding AS DOUBLE[]),
@@ -1910,4 +1753,85 @@ object AnnQueries {
         |WHERE f.fr = 1
         |ORDER BY f.src_id""".stripMargin))
   )
+
+  /** The two-level IVF funnel of q96 and q320 in SQL, ending at each
+    * query's probed cells: cells routed to their 2 nearest coarse
+    * centroids, per-point coarse probes, candidate-restricted
+    * assignment and the 3 probes per query. */
+  private val ivfTwoLevelCtes: String =
+    """WITH c AS (SELECT vec_id AS cell_id, embedding AS cvec
+      |  FROM embeddings WHERE vec_id % 50 = 0),
+      |g AS (SELECT vec_id AS gid, embedding AS gvec
+      |  FROM embeddings WHERE vec_id % 200 = 0),
+      |cg AS (
+      |  SELECT cell_id, cvec, gid FROM (
+      |    SELECT c.cell_id, c.cvec, g.gid,
+      |      row_number() OVER (PARTITION BY c.cell_id ORDER BY
+      |        list_cosine_similarity(CAST(c.cvec AS DOUBLE[]),
+      |          CAST(g.gvec AS DOUBLE[])) DESC, g.gid ASC) AS grn
+      |    FROM c CROSS JOIN g)
+      |  WHERE grn <= 2),
+      |pg AS (
+      |  SELECT vec_id, embedding, gid FROM (
+      |    SELECT e.vec_id, e.embedding, g.gid,
+      |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
+      |        list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
+      |          CAST(g.gvec AS DOUBLE[])) DESC, g.gid ASC) AS prn
+      |    FROM embeddings e CROSS JOIN g)
+      |  WHERE prn <= 2),
+      |cand AS (
+      |  SELECT DISTINCT p.vec_id, p.embedding, cg.cell_id, cg.cvec
+      |  FROM pg p JOIN cg ON p.gid = cg.gid),
+      |assigned AS (
+      |  SELECT vec_id, embedding, cell_id FROM (
+      |    SELECT vec_id, embedding, cell_id,
+      |      row_number() OVER (PARTITION BY vec_id ORDER BY
+      |        list_cosine_similarity(CAST(embedding AS DOUBLE[]),
+      |          CAST(cvec AS DOUBLE[])) DESC, cell_id ASC) AS arn
+      |    FROM cand)
+      |  WHERE arn = 1),
+      |probes AS (
+      |  SELECT vec_id AS query_id, embedding AS qv, cell_id FROM (
+      |    SELECT vec_id, embedding, cell_id,
+      |      row_number() OVER (PARTITION BY vec_id ORDER BY
+      |        list_cosine_similarity(CAST(embedding AS DOUBLE[]),
+      |          CAST(cvec AS DOUBLE[])) DESC, cell_id ASC) AS crk
+      |    FROM cand WHERE vec_id < 5)
+      |  WHERE crk <= 3)""".stripMargin
+
+  /** The IVF readout of q27 and q96 in SQL: every assigned point in a
+    * query's probed cells scored by cosine, top 5 per query. */
+  private val ivfScoredTopK: String =
+    """scored AS (
+      |  SELECT p.query_id, s.vec_id AS neighbor_id,
+      |    list_cosine_similarity(CAST(s.embedding AS DOUBLE[]),
+      |      CAST(p.qv AS DOUBLE[])) AS sim
+      |  FROM assigned s JOIN probes p ON s.cell_id = p.cell_id
+      |  WHERE s.vec_id <> p.query_id),
+      |r AS (SELECT query_id, neighbor_id, sim, row_number() OVER (
+      |  PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC) AS rk
+      |  FROM scored)
+      |SELECT query_id, CAST(rk AS INT) AS rk, neighbor_id,
+      |  floor(sim * 10000 + 0.5) / 10000.0 AS sim
+      |FROM r WHERE rk <= 5 ORDER BY query_id, rk""".stripMargin
+
+  /** The depot world of q190, q258, q293 and q295 in SQL: customers `c`
+    * (`custCols` plus lat/lon) and suppliers `s` at
+    * [[graft.operators.Geo.syntheticPoint]]'s Knuth-hash coordinates,
+    * supplier keys offset by 500000 as on the Spark side. */
+  private def geoPointCtes(custCols: String): String =
+    s"""WITH c AS (
+       |  SELECT $custCols,
+       |    40.0 + ((c_custkey % 2147483647) * 2654435761 % 4294967296)
+       |      / 4294967296.0 * 10.0 AS lat,
+       |    -80.0 + (((c_custkey + 1000003) % 2147483647) * 2654435761
+       |      % 4294967296) / 4294967296.0 * 10.0 AS lon
+       |  FROM customer),
+       |s AS (
+       |  SELECT s_suppkey,
+       |    40.0 + (((s_suppkey + 500000) % 2147483647) * 2654435761
+       |      % 4294967296) / 4294967296.0 * 10.0 AS lat,
+       |    -80.0 + (((s_suppkey + 500000 + 1000003) % 2147483647)
+       |      * 2654435761 % 4294967296) / 4294967296.0 * 10.0 AS lon
+       |  FROM supplier)""".stripMargin
 }

@@ -77,32 +77,7 @@ object DedupQueries {
         |      list_min(list_transform(gh, h ->
         |        ((2 * i + 1) * h + 7919 * i) % 1000000007))) AS sig
         |  FROM hs),
-        |bk AS (
-        |  SELECT doc_id, bx.band,
-        |    ((((sig[CAST(bx.band * 4 + 1 AS INT)] * 1000003
-        |        + sig[CAST(bx.band * 4 + 2 AS INT)]) % 1000000007)
-        |      * 1000003
-        |        + sig[CAST(bx.band * 4 + 3 AS INT)]) % 1000000007
-        |      * 1000003
-        |        + sig[CAST(bx.band * 4 + 4 AS INT)]) % 1000000007
-        |      * 1073741824 +
-        |    ((((sig[CAST(bx.band * 4 + 1 AS INT)] * 1000033
-        |        + sig[CAST(bx.band * 4 + 2 AS INT)]) % 1000000007)
-        |      * 1000033
-        |        + sig[CAST(bx.band * 4 + 3 AS INT)]) % 1000000007
-        |      * 1000033
-        |        + sig[CAST(bx.band * 4 + 4 AS INT)]) % 1000000007
-        |      AS bkey
-        |  FROM sg, unnest(range(0, 8)) bx(band)),
-        |pr AS (
-        |  SELECT doc_id, band, bkey FROM (
-        |    SELECT doc_id, band, bkey,
-        |      count(*) OVER (PARTITION BY band, bkey) AS bsz FROM bk) z
-        |  WHERE bsz > 1 AND bsz <= 64),
-        |pairs AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM pr a JOIN pr b ON a.band = b.band AND a.bkey = b.bkey
-        |    AND a.doc_id < b.doc_id),
+        |""".stripMargin + lshBandPairsCtes + """,
         |est AS (
         |  SELECT id_a, id_b,
         |    CAST(list_sum(list_transform(range(1, 33), i ->
@@ -282,44 +257,7 @@ object DedupQueries {
     // Same graph, same labels: candidates by rare-shingle co-occurrence,
     // exact-Jaccard edge filter, then reachability min-label via a
     // recursive CTE.
-    Some(
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents),
-        |shl AS (
-        |  SELECT doc_id, list_distinct([array_to_string(t[i:i+2], ' ')
-        |    for i in range(1, greatest(len(t) - 2, 1) + 1)]) AS gs
-        |  FROM toks),
-        |sh AS (SELECT doc_id, unnest(gs) AS g FROM shl),
-        |rare AS (SELECT g FROM sh GROUP BY g HAVING count(*) <= 10),
-        |cand AS (
-        |  SELECT DISTINCT sa.doc_id AS id_a, sb.doc_id AS id_b
-        |  FROM sh sa JOIN rare USING (g) JOIN sh sb USING (g)
-        |  WHERE sb.doc_id > sa.doc_id),
-        |inter AS (
-        |  SELECT p.id_a, p.id_b, count(*) AS ni FROM cand p
-        |  JOIN sh sa ON sa.doc_id = p.id_a
-        |  JOIN sh sb ON sb.doc_id = p.id_b AND sb.g = sa.g
-        |  GROUP BY 1, 2),
-        |sizes AS (SELECT doc_id, count(*) AS ns FROM sh GROUP BY 1),
-        |near AS (
-        |  SELECT p.id_a, p.id_b FROM cand p
-        |  JOIN inter USING (id_a, id_b)
-        |  JOIN sizes za ON za.doc_id = p.id_a
-        |  JOIN sizes zb ON zb.doc_id = p.id_b
-        |  WHERE floor((CAST(ni AS DOUBLE) / (za.ns + zb.ns - ni))
-        |    * 10000 + 0.5) / 10000.0 >= 0.5),
-        |edges AS (
-        |  SELECT id_a AS src, id_b AS dst FROM near
-        |  UNION SELECT id_b, id_a FROM near),
-        |nodes AS (SELECT DISTINCT src AS node FROM edges),
-        |cc AS (
-        |  SELECT node, node AS label FROM nodes
-        |  UNION
-        |  SELECT e.dst AS node, c.label
-        |  FROM cc c JOIN edges e ON e.src = c.node),
-        |labeled AS (SELECT node, min(label) AS cluster_id FROM cc
-        |  GROUP BY node)
+    Some(dupClusterOracleCtes + """
         |SELECT cluster_id, count(*) AS n_docs
         |FROM labeled GROUP BY cluster_id ORDER BY cluster_id""".stripMargin)),
 
@@ -393,44 +331,7 @@ object DedupQueries {
           $"weight_kept".as("tokens_kept"),
           $"weight_dropped".as("tokens_dropped"))
         .orderBy($"cluster_id")
-    }, Some(
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents),
-        |shl AS (
-        |  SELECT doc_id, list_distinct([array_to_string(t[i:i+2], ' ')
-        |    for i in range(1, greatest(len(t) - 2, 1) + 1)]) AS gs
-        |  FROM toks),
-        |sh AS (SELECT doc_id, unnest(gs) AS g FROM shl),
-        |rare AS (SELECT g FROM sh GROUP BY g HAVING count(*) <= 10),
-        |cand AS (
-        |  SELECT DISTINCT sa.doc_id AS id_a, sb.doc_id AS id_b
-        |  FROM sh sa JOIN rare USING (g) JOIN sh sb USING (g)
-        |  WHERE sb.doc_id > sa.doc_id),
-        |inter AS (
-        |  SELECT p.id_a, p.id_b, count(*) AS ni FROM cand p
-        |  JOIN sh sa ON sa.doc_id = p.id_a
-        |  JOIN sh sb ON sb.doc_id = p.id_b AND sb.g = sa.g
-        |  GROUP BY 1, 2),
-        |sizes AS (SELECT doc_id, count(*) AS ns FROM sh GROUP BY 1),
-        |near AS (
-        |  SELECT p.id_a, p.id_b FROM cand p
-        |  JOIN inter USING (id_a, id_b)
-        |  JOIN sizes za ON za.doc_id = p.id_a
-        |  JOIN sizes zb ON zb.doc_id = p.id_b
-        |  WHERE floor((CAST(ni AS DOUBLE) / (za.ns + zb.ns - ni))
-        |    * 10000 + 0.5) / 10000.0 >= 0.5),
-        |edges AS (
-        |  SELECT id_a AS src, id_b AS dst FROM near
-        |  UNION SELECT id_b, id_a FROM near),
-        |nodes AS (SELECT DISTINCT src AS node FROM edges),
-        |cc AS (
-        |  SELECT node, node AS label FROM nodes
-        |  UNION
-        |  SELECT e.dst AS node, c.label
-        |  FROM cc c JOIN edges e ON e.src = c.node),
-        |labeled AS (SELECT node, min(label) AS cluster_id FROM cc
-        |  GROUP BY node),
+    }, Some(dupClusterOracleCtes + """,
         |tk AS (
         |  SELECT doc_id,
         |    CASE WHEN length(trim(text)) = 0 THEN 0
@@ -568,46 +469,10 @@ object DedupQueries {
         .crossJoin(broadcast(leak))
         .orderBy($"split")
     },
-    // q74: q52's recursive-CTE clusters, singleton docs fall back to
-    // their own id, split arithmetic copied from q61's hash mirror.
-    Some(
-      """WITH RECURSIVE toks AS (
-        |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
-        |  FROM documents),
-        |shl AS (
-        |  SELECT doc_id, list_distinct([array_to_string(t[i:i+2], ' ')
-        |    for i in range(1, greatest(len(t) - 2, 1) + 1)]) AS gs
-        |  FROM toks),
-        |sh AS (SELECT doc_id, unnest(gs) AS g FROM shl),
-        |rare AS (SELECT g FROM sh GROUP BY g HAVING count(*) <= 10),
-        |cand AS (
-        |  SELECT DISTINCT sa.doc_id AS id_a, sb.doc_id AS id_b
-        |  FROM sh sa JOIN rare USING (g) JOIN sh sb USING (g)
-        |  WHERE sb.doc_id > sa.doc_id),
-        |inter AS (
-        |  SELECT p.id_a, p.id_b, count(*) AS ni FROM cand p
-        |  JOIN sh sa ON sa.doc_id = p.id_a
-        |  JOIN sh sb ON sb.doc_id = p.id_b AND sb.g = sa.g
-        |  GROUP BY 1, 2),
-        |sizes AS (SELECT doc_id, count(*) AS ns FROM sh GROUP BY 1),
-        |near AS (
-        |  SELECT p.id_a, p.id_b FROM cand p
-        |  JOIN inter USING (id_a, id_b)
-        |  JOIN sizes za ON za.doc_id = p.id_a
-        |  JOIN sizes zb ON zb.doc_id = p.id_b
-        |  WHERE floor((CAST(ni AS DOUBLE) / (za.ns + zb.ns - ni))
-        |    * 10000 + 0.5) / 10000.0 >= 0.5),
-        |edges AS (
-        |  SELECT id_a AS src, id_b AS dst FROM near
-        |  UNION SELECT id_b, id_a FROM near),
-        |nodes AS (SELECT DISTINCT src AS node FROM edges),
-        |cc AS (
-        |  SELECT node, node AS label FROM nodes
-        |  UNION
-        |  SELECT e.dst AS node, c.label
-        |  FROM cc c JOIN edges e ON e.src = c.node),
-        |labeled AS (SELECT node, min(label) AS cluster_id FROM cc
-        |  GROUP BY node),
+    // q74: q52's recursive-CTE clusters (dupClusterOracleCtes),
+    // singleton docs fall back to their own id, split arithmetic
+    // copied from q61's hash mirror.
+    Some(dupClusterOracleCtes + """,
         |allc AS (
         |  SELECT d.doc_id,
         |    CASE WHEN length(trim(d.text)) = 0 THEN 0
@@ -927,32 +792,7 @@ object DedupQueries {
         |    list_min(list_transform(gh, h ->
         |      ((2 * i + 1) * h + 7919 * i) % 1000000007))) AS sig
         |  FROM g),
-        |bk AS (
-        |  SELECT doc_id, bx.band,
-        |    ((((sig[CAST(bx.band * 4 + 1 AS INT)] * 1000003
-        |        + sig[CAST(bx.band * 4 + 2 AS INT)]) % 1000000007)
-        |      * 1000003
-        |        + sig[CAST(bx.band * 4 + 3 AS INT)]) % 1000000007
-        |      * 1000003
-        |        + sig[CAST(bx.band * 4 + 4 AS INT)]) % 1000000007
-        |      * 1073741824 +
-        |    ((((sig[CAST(bx.band * 4 + 1 AS INT)] * 1000033
-        |        + sig[CAST(bx.band * 4 + 2 AS INT)]) % 1000000007)
-        |      * 1000033
-        |        + sig[CAST(bx.band * 4 + 3 AS INT)]) % 1000000007
-        |      * 1000033
-        |        + sig[CAST(bx.band * 4 + 4 AS INT)]) % 1000000007
-        |      AS bkey
-        |  FROM sg, unnest(range(0, 8)) bx(band)),
-        |pr AS (
-        |  SELECT doc_id, band, bkey FROM (
-        |    SELECT doc_id, band, bkey,
-        |      count(*) OVER (PARTITION BY band, bkey) AS bsz FROM bk) z
-        |  WHERE bsz > 1 AND bsz <= 64),
-        |pairs AS (
-        |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-        |  FROM pr a JOIN pr b ON a.band = b.band AND a.bkey = b.bkey
-        |    AND a.doc_id < b.doc_id),
+        |""".stripMargin + lshBandPairsCtes + """,
         |sc AS (
         |  SELECT id_a, id_b,
         |    CAST(list_sum(list_transform(range(1, 33), i ->
@@ -1040,4 +880,79 @@ object DedupQueries {
         |  END AS near_dup
         |FROM hn ORDER BY doc_id""".stripMargin))
   )
+
+  /** q52's duplicate clusters in SQL, shared by q52, q65 and q74:
+    * word-3 shingles, rare-shingle (df <= 10) candidate pairs, exact
+    * Jaccard >= 0.5 edges, then min-label reachability through a
+    * recursive CTE, ending at `labeled` (node, cluster_id). */
+  private val dupClusterOracleCtes: String =
+    """WITH RECURSIVE toks AS (
+      |  SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
+      |  FROM documents),
+      |shl AS (
+      |  SELECT doc_id, list_distinct([array_to_string(t[i:i+2], ' ')
+      |    for i in range(1, greatest(len(t) - 2, 1) + 1)]) AS gs
+      |  FROM toks),
+      |sh AS (SELECT doc_id, unnest(gs) AS g FROM shl),
+      |rare AS (SELECT g FROM sh GROUP BY g HAVING count(*) <= 10),
+      |cand AS (
+      |  SELECT DISTINCT sa.doc_id AS id_a, sb.doc_id AS id_b
+      |  FROM sh sa JOIN rare USING (g) JOIN sh sb USING (g)
+      |  WHERE sb.doc_id > sa.doc_id),
+      |inter AS (
+      |  SELECT p.id_a, p.id_b, count(*) AS ni FROM cand p
+      |  JOIN sh sa ON sa.doc_id = p.id_a
+      |  JOIN sh sb ON sb.doc_id = p.id_b AND sb.g = sa.g
+      |  GROUP BY 1, 2),
+      |sizes AS (SELECT doc_id, count(*) AS ns FROM sh GROUP BY 1),
+      |near AS (
+      |  SELECT p.id_a, p.id_b FROM cand p
+      |  JOIN inter USING (id_a, id_b)
+      |  JOIN sizes za ON za.doc_id = p.id_a
+      |  JOIN sizes zb ON zb.doc_id = p.id_b
+      |  WHERE floor((CAST(ni AS DOUBLE) / (za.ns + zb.ns - ni))
+      |    * 10000 + 0.5) / 10000.0 >= 0.5),
+      |edges AS (
+      |  SELECT id_a AS src, id_b AS dst FROM near
+      |  UNION SELECT id_b, id_a FROM near),
+      |nodes AS (SELECT DISTINCT src AS node FROM edges),
+      |cc AS (
+      |  SELECT node, node AS label FROM nodes
+      |  UNION
+      |  SELECT e.dst AS node, c.label
+      |  FROM cc c JOIN edges e ON e.src = c.node),
+      |labeled AS (SELECT node, min(label) AS cluster_id FROM cc
+      |  GROUP BY node)""".stripMargin
+
+  /** The MinHash-LSH banding of q23 and q327 in SQL, from each doc's
+    * 32-position `sig`: dual-base (1000003/1000033) 60-bit band keys
+    * over 8 bands of 4 rows, buckets of size 2..64, and the distinct
+    * candidate `pairs` (id_a < id_b). */
+  private val lshBandPairsCtes: String =
+    """bk AS (
+      |  SELECT doc_id, bx.band,
+      |    ((((sig[CAST(bx.band * 4 + 1 AS INT)] * 1000003
+      |        + sig[CAST(bx.band * 4 + 2 AS INT)]) % 1000000007)
+      |      * 1000003
+      |        + sig[CAST(bx.band * 4 + 3 AS INT)]) % 1000000007
+      |      * 1000003
+      |        + sig[CAST(bx.band * 4 + 4 AS INT)]) % 1000000007
+      |      * 1073741824 +
+      |    ((((sig[CAST(bx.band * 4 + 1 AS INT)] * 1000033
+      |        + sig[CAST(bx.band * 4 + 2 AS INT)]) % 1000000007)
+      |      * 1000033
+      |        + sig[CAST(bx.band * 4 + 3 AS INT)]) % 1000000007
+      |      * 1000033
+      |        + sig[CAST(bx.band * 4 + 4 AS INT)]) % 1000000007
+      |      AS bkey
+      |  FROM sg, unnest(range(0, 8)) bx(band)),
+      |pr AS (
+      |  SELECT doc_id, band, bkey FROM (
+      |    SELECT doc_id, band, bkey,
+      |      count(*) OVER (PARTITION BY band, bkey) AS bsz FROM bk) z
+      |  WHERE bsz > 1 AND bsz <= 64),
+      |pairs AS (
+      |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      |  FROM pr a JOIN pr b ON a.band = b.band AND a.bkey = b.bkey
+      |    AND a.doc_id < b.doc_id)""".stripMargin
 }

@@ -78,29 +78,7 @@ object GraphQueries {
         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
         |e AS (SELECT cust AS src, supp AS dst FROM ed
         |  UNION ALL SELECT supp, cust FROM ed),
-        |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
-        |  FROM e GROUP BY 1),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM deg),
-        |r0 AS (SELECT src AS node, 1.0 / nn.n AS r
-        |  FROM deg CROSS JOIN nn),
-        |r1 AS (
-        |  SELECT e.dst AS node,
-        |    0.15 / max(nn.n) + 0.85 * sum(p.r / deg.deg) AS r
-        |  FROM e JOIN r0 p ON e.src = p.node
-        |  JOIN deg ON e.src = deg.src CROSS JOIN nn
-        |  GROUP BY e.dst),
-        |r2 AS (
-        |  SELECT e.dst AS node,
-        |    0.15 / max(nn.n) + 0.85 * sum(p.r / deg.deg) AS r
-        |  FROM e JOIN r1 p ON e.src = p.node
-        |  JOIN deg ON e.src = deg.src CROSS JOIN nn
-        |  GROUP BY e.dst),
-        |r3 AS (
-        |  SELECT e.dst AS node,
-        |    0.15 / max(nn.n) + 0.85 * sum(p.r / deg.deg) AS r
-        |  FROM e JOIN r2 p ON e.src = p.node
-        |  JOIN deg ON e.src = deg.src CROSS JOIN nn
-        |  GROUP BY e.dst)
+        |""".stripMargin + pageRank3OracleCtes + """
         |SELECT node,
         |  floor(r * 1000 * 1000000 + 0.5) / 1000000.0 AS rank_pm
         |FROM r3 ORDER BY rank_pm DESC, node LIMIT 20""".stripMargin)),
@@ -210,17 +188,7 @@ object GraphQueries {
     },
     // q131: same capped pair edges, same (deg, id) orientation — the
     // oracle pays the naive wedge join the engine's orientation bounds
-    Some(
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |capped AS (
-        |  SELECT l_orderkey, l_partkey FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY l_orderkey
-        |      ORDER BY l_partkey) AS rn FROM items) WHERE rn <= 5),
-        |edges AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM capped a JOIN capped b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    Some("WITH " + basketEdgeOracleCtes + """,
         |deg AS (
         |  SELECT n, count(*) AS deg FROM (
         |    SELECT a AS n FROM edges UNION ALL SELECT b FROM edges)
@@ -348,17 +316,7 @@ object GraphQueries {
     // q148: q131's capped basket graph; deg cap 2..50 on wedge
     // centers is part of the query contract; scores rounded BEFORE
     // the top-20 cut on both engines
-    Some(
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |capped AS (
-        |  SELECT l_orderkey, l_partkey FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY l_orderkey
-        |      ORDER BY l_partkey) AS rn FROM items) WHERE rn <= 5),
-        |edges AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM capped a JOIN capped b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    Some("WITH " + basketEdgeOracleCtes + """,
         |adj AS (
         |  SELECT a AS w, b AS n FROM edges
         |  UNION ALL SELECT b, a FROM edges),
@@ -406,17 +364,7 @@ object GraphQueries {
     },
     // q149: recursive walk capped at 4 steps; min(walk length) = hop
     // distance; UNION dedups (node, d) pairs so the recursion is finite
-    Some(
-      """WITH RECURSIVE items AS (
-        |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |capped AS (
-        |  SELECT l_orderkey, l_partkey FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY l_orderkey
-        |      ORDER BY l_partkey) AS rn FROM items) WHERE rn <= 5),
-        |edges AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM capped a JOIN capped b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    Some("WITH RECURSIVE " + basketEdgeOracleCtes + """,
         |adj AS (
         |  SELECT a AS w, b AS n FROM edges
         |  UNION ALL SELECT b, a FROM edges),
@@ -462,17 +410,7 @@ object GraphQueries {
     },
     // q166: the same bounded-hop DP unrolled — d_k(v) = cheapest walk
     // of <= k edges; integer weights keep it exact
-    Some(
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |capped AS (
-        |  SELECT l_orderkey, l_partkey FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY l_orderkey
-        |      ORDER BY l_partkey) AS rn FROM items) WHERE rn <= 5),
-        |edges AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM capped a JOIN capped b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    Some("WITH " + basketEdgeOracleCtes + """,
         |we AS (SELECT a, b, 1 + (a + b) % 5 AS w FROM edges),
         |adj AS (
         |  SELECT a AS s, b AS n, w FROM we
@@ -587,17 +525,7 @@ object GraphQueries {
           Seq($"coef".desc, $"part".asc), 20)
         .select($"part", $"degree", $"n_tri", $"coef")
         .orderBy($"coef".desc, $"part")
-    }, Some(
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |capped AS (
-        |  SELECT l_orderkey, l_partkey FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY l_orderkey
-        |      ORDER BY l_partkey) AS rn FROM items) WHERE rn <= 5),
-        |edges AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM capped a JOIN capped b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    }, Some("WITH " + basketEdgeOracleCtes + """,
         |deg AS (
         |  SELECT n, CAST(count(*) AS BIGINT) AS degree FROM (
         |    SELECT a AS n FROM edges UNION ALL SELECT b FROM edges)
@@ -637,17 +565,7 @@ object GraphQueries {
           count_distinct($"s").as("n_nodes"),
           Fns.roundU(corr($"__ds".cast("double"),
             $"__dt".cast("double")), 6).as("assortativity"))
-    }, Some(
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-        |capped AS (
-        |  SELECT l_orderkey, l_partkey FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY l_orderkey
-        |      ORDER BY l_partkey) AS rn FROM items) WHERE rn <= 5),
-        |edges AS (
-        |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
-        |  FROM capped a JOIN capped b
-        |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    }, Some("WITH " + basketEdgeOracleCtes + """,
         |dir AS (SELECT a AS s, b AS t FROM edges
         |        UNION ALL SELECT b, a FROM edges),
         |deg AS (SELECT s, CAST(count(*) AS BIGINT) AS d
@@ -821,29 +739,7 @@ object GraphQueries {
         |  FROM p2),
         |e AS (SELECT u AS src, v AS dst FROM e0
         |  UNION ALL SELECT v, u FROM e0),
-        |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
-        |  FROM e GROUP BY 1),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM deg),
-        |r0 AS (SELECT src AS node, 1.0 / nn.n AS r
-        |  FROM deg CROSS JOIN nn),
-        |r1 AS (
-        |  SELECT e.dst AS node,
-        |    0.15 / max(nn.n) + 0.85 * sum(p.r / deg.deg) AS r
-        |  FROM e JOIN r0 p ON e.src = p.node
-        |  JOIN deg ON e.src = deg.src CROSS JOIN nn
-        |  GROUP BY e.dst),
-        |r2 AS (
-        |  SELECT e.dst AS node,
-        |    0.15 / max(nn.n) + 0.85 * sum(p.r / deg.deg) AS r
-        |  FROM e JOIN r1 p ON e.src = p.node
-        |  JOIN deg ON e.src = deg.src CROSS JOIN nn
-        |  GROUP BY e.dst),
-        |r3 AS (
-        |  SELECT e.dst AS node,
-        |    0.15 / max(nn.n) + 0.85 * sum(p.r / deg.deg) AS r
-        |  FROM e JOIN r2 p ON e.src = p.node
-        |  JOIN deg ON e.src = deg.src CROSS JOIN nn
-        |  GROUP BY e.dst)
+        |""".stripMargin + pageRank3OracleCtes + """
         |SELECT node AS term,
         |  floor(r * 1000 * 1000000 + 0.5) / 1000000.0 AS rank_pm
         |FROM r3 ORDER BY rank_pm DESC, term LIMIT 20""".stripMargin)),
@@ -1164,4 +1060,49 @@ object GraphQueries {
       .select($"__items", posexplode($"__items").as(Seq("__i", "a")))
       .select($"a", explode(slice($"__items", $"__i" + 2,
         size($"__items"))).as("b"))
+
+  /** Three PageRank power iterations in SQL over an undirected edge
+    * set `e` (src, dst), shared by q121 and q261: uniform start, then
+    * (1-d)/N + d·Σ r/deg with d = 0.85, ending at `r3` (node, r). The
+    * edge sets have no sinks, so the dangling term is zero. */
+  private val pageRank3OracleCtes: String =
+    """deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
+      |  FROM e GROUP BY 1),
+      |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM deg),
+      |r0 AS (SELECT src AS node, 1.0 / nn.n AS r
+      |  FROM deg CROSS JOIN nn),
+      |r1 AS (
+      |  SELECT e.dst AS node,
+      |    0.15 / max(nn.n) + 0.85 * sum(p.r / deg.deg) AS r
+      |  FROM e JOIN r0 p ON e.src = p.node
+      |  JOIN deg ON e.src = deg.src CROSS JOIN nn
+      |  GROUP BY e.dst),
+      |r2 AS (
+      |  SELECT e.dst AS node,
+      |    0.15 / max(nn.n) + 0.85 * sum(p.r / deg.deg) AS r
+      |  FROM e JOIN r1 p ON e.src = p.node
+      |  JOIN deg ON e.src = deg.src CROSS JOIN nn
+      |  GROUP BY e.dst),
+      |r3 AS (
+      |  SELECT e.dst AS node,
+      |    0.15 / max(nn.n) + 0.85 * sum(p.r / deg.deg) AS r
+      |  FROM e JOIN r2 p ON e.src = p.node
+      |  JOIN deg ON e.src = deg.src CROSS JOIN nn
+      |  GROUP BY e.dst)""".stripMargin
+
+  /** [[cappedBaskets]] (cap 5) and [[basketPairs]]' distinct edges in
+    * SQL, for the co-purchase graph queries' oracles: one row per
+    * (order, part), the 5 lowest parts per order, and the distinct
+    * within-basket edges (a < b). */
+  private val basketEdgeOracleCtes: String =
+    """items AS (
+      |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+      |capped AS (
+      |  SELECT l_orderkey, l_partkey FROM (
+      |    SELECT *, row_number() OVER (PARTITION BY l_orderkey
+      |      ORDER BY l_partkey) AS rn FROM items) WHERE rn <= 5),
+      |edges AS (
+      |  SELECT DISTINCT a.l_partkey AS a, b.l_partkey AS b
+      |  FROM capped a JOIN capped b
+      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey)""".stripMargin
 }

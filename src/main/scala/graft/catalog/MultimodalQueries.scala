@@ -570,22 +570,7 @@ object MultimodalQueries {
         |  SELECT doc_id, f, i, s FROM warm
         |  UNION ALL
         |  SELECT doc_id, f, i, s FROM dec WHERE i >= o AND s IS NOT NULL),
-        |m AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_samples,
-        |    avg(CAST(s AS DOUBLE)) AS ma,
-        |    sqrt(avg(CAST(s AS DOUBLE) * s)) AS r,
-        |    CAST(max(abs(s)) AS INT) AS peak
-        |  FROM alls GROUP BY doc_id),
-        |l AS (
-        |  SELECT doc_id, s AS last_sample FROM alls
-        |  QUALIFY row_number() OVER (PARTITION BY doc_id
-        |    ORDER BY f DESC, i DESC) = 1)
-        |SELECT d.doc_id, d.sample_rate, d.nf AS n_frames, m.n_samples,
-        |  floor(ma * 10000 + 0.5) / 10000.0 AS mean_amp,
-        |  floor(r * 10000 + 0.5) / 10000.0 AS rms, m.peak,
-        |  l.last_sample
-        |FROM d JOIN m USING (doc_id) JOIN l USING (doc_id)
-        |ORDER BY doc_id""".stripMargin)),
+        |""".stripMargin + flacStatsOracle)),
 
     // SCENE-CUT DETECTION — the PER-FRAME multimodal decode surface
     // (one row per video frame, not one aggregate per clip), feeding
@@ -950,22 +935,7 @@ object MultimodalQueries {
         |  UNION ALL
         |  SELECT doc_id, f, i, s FROM dec
         |  WHERE i >= 2 AND s IS NOT NULL),
-        |m AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_samples,
-        |    avg(CAST(s AS DOUBLE)) AS ma,
-        |    sqrt(avg(CAST(s AS DOUBLE) * s)) AS r,
-        |    CAST(max(abs(s)) AS INT) AS peak
-        |  FROM alls GROUP BY doc_id),
-        |l AS (
-        |  SELECT doc_id, s AS last_sample FROM alls
-        |  QUALIFY row_number() OVER (PARTITION BY doc_id
-        |    ORDER BY f DESC, i DESC) = 1)
-        |SELECT d.doc_id, d.sample_rate, d.nf AS n_frames, m.n_samples,
-        |  floor(ma * 10000 + 0.5) / 10000.0 AS mean_amp,
-        |  floor(r * 10000 + 0.5) / 10000.0 AS rms, m.peak,
-        |  l.last_sample
-        |FROM d JOIN m USING (doc_id) JOIN l USING (doc_id)
-        |ORDER BY doc_id""".stripMargin)),
+        |""".stripMargin + flacStatsOracle)),
 
     // STEREO FLAC with inter-channel decorrelation — the remaining
     // structural half of real-world FLAC after q305's LPC: each doc
@@ -1529,19 +1499,7 @@ object MultimodalQueries {
     // (kind 2) share the channel-0 code above the intensity bound
     // but keep per-channel scalefactors — exactly the decoder's
     // sample loop. All columns integer-exact.
-    Some(s"""WITH d AS (
-        |  SELECT doc_id, CAST(doc_id % 3 AS INT) AS kind,
-        |    CAST(1 + doc_id % 2 AS INT) AS nfr,
-        |    CAST(CASE WHEN doc_id % 3 = 2 THEN (1 + doc_id % 4) * 4
-        |      ELSE 32 END AS INT) AS bound,
-        |    CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 2 END AS INT)
-        |      AS nch
-        |  FROM documents WHERE doc_id < 40),
-        |sbs AS (
-        |  SELECT doc_id, kind, nfr, bound, nch, sbx.sb,
-        |    CAST(2 + ((doc_id * 5 + sbx.sb * 7) % 8) AS INT) AS nb
-        |  FROM d, unnest(range(0, 32)) sbx(sb)
-        |  WHERE (doc_id + sbx.sb) % 3 <> 0),
+    Some(l1FixtureCtes + s""",
         |smp AS (
         |  SELECT s.doc_id, fx.f, tx.t, s.sb, chx.ch, s.nb,
         |    CAST((s.doc_id * 7 + s.sb * 11 + chx.ch * 3) % 63 AS INT)
@@ -1618,62 +1576,10 @@ object MultimodalQueries {
     // ungrouped mask to the codeword width, and scfsi picks the
     // effective scalefactor per 4-granule part. tab_id/sb_limit/n_scf
     // pin table selection and the scfsi parse cross-engine.
-    Some(s"""WITH d AS (
-        |  SELECT doc_id, CAST(doc_id % 3 AS INT) AS kind,
-        |    CAST(doc_id % 4 AS INT) AS v,
-        |    CAST((doc_id // 3) % 4 AS INT) AS ext,
-        |    CAST(1 + doc_id % 2 AS INT) AS nfr,
-        |    CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 2 END AS INT)
-        |      AS nch
-        |  FROM documents WHERE doc_id < 40),
-        |d2 AS (
-        |  SELECT d.*, v AS tab,
-        |    CAST(([27,30,8,12])[v + 1] AS INT) AS sblimit,
-        |    CAST(CASE WHEN kind = 2
-        |      THEN least((ext + 1) * 4, ([27,30,8,12])[v + 1])
-        |      ELSE ([27,30,8,12])[v + 1] END AS INT) AS bound
-        |  FROM d),
-        |slots AS (
-        |  SELECT d2.doc_id, d2.nfr, d2.nch, d2.tab, d2.bound, sbx.sb,
-        |    chx.ch,
-        |    ($q331Cls)[ ($q331Row)[tab * 30 + sbx.sb + 1] * 16
-        |      + 1 + ((doc_id * 5 + sbx.sb * 7 +
-        |          (CASE WHEN sbx.sb >= bound AND nch = 2 THEN 0
-        |            ELSE chx.ch END) * 3)
-        |        % (CASE ($q331Nbal)[tab * 30 + sbx.sb + 1]
-        |            WHEN 2 THEN 2 WHEN 3 THEN 6 ELSE 7 END)) + 1 ]
-        |      AS cls,
-        |    CAST((doc_id * 3 + sbx.sb * 5 + chx.ch * 7) % 4 AS INT)
-        |      AS scfsi
-        |  FROM d2, unnest(range(0, d2.sblimit)) sbx(sb),
-        |    unnest(range(0, d2.nch)) chx(ch)
-        |  WHERE (doc_id + sbx.sb) % 2 = 1),
-        |slots2 AS (
-        |  SELECT s.*, ($q331Steps)[cls] AS steps,
-        |    ($q331Bits)[cls] AS bits, ($q331Grp)[cls] AS grp
-        |  FROM slots s),
+    Some(l2SlotCtes + """,
         |smp AS (
         |  SELECT s.doc_id, fx.f, gx.gr, s.sb, s.ch, ix.i, s.cls,
-        |    s.steps,
-        |    CASE s.scfsi
-        |      WHEN 0 THEN (s.doc_id * 7 + s.sb * 11 + s.ch * 3
-        |        + (gx.gr // 4) * 19) % 63
-        |      WHEN 1 THEN (s.doc_id * 7 + s.sb * 11 + s.ch * 3
-        |        + (CASE WHEN gx.gr < 8 THEN 0 ELSE 2 END) * 19) % 63
-        |      WHEN 2 THEN (s.doc_id * 7 + s.sb * 11 + s.ch * 3) % 63
-        |      ELSE (s.doc_id * 7 + s.sb * 11 + s.ch * 3
-        |        + (CASE WHEN gx.gr < 4 THEN 0 ELSE 1 END) * 19) % 63
-        |    END AS scf,
-        |    CASE WHEN s.grp = 1
-        |      THEN ((s.doc_id * 97 + fx.f * 31 + gx.gr * 13 + ix.i * 41
-        |        + s.sb * 17 + (CASE WHEN s.sb >= s.bound AND s.nch = 2
-        |          THEN 0 ELSE s.ch END) * 29) % 65536) % s.steps
-        |      ELSE ((s.doc_id * 97 + fx.f * 31 + gx.gr * 13 + ix.i * 41
-        |        + s.sb * 17 + (CASE WHEN s.sb >= s.bound AND s.nch = 2
-        |          THEN 0 ELSE s.ch END) * 29) % 65536) % (1 << s.bits)
-        |    END AS c
-        |  FROM slots2 s, unnest(range(0, s.nfr)) fx(f),
-        |    unnest(range(0, 12)) gx(gr), unnest(range(0, 3)) ix(i)),
+        |    s.steps,""".stripMargin + l2ScfAndCode + s""",
         |dq AS (
         |  SELECT doc_id, f, gr, sb, ch, i,
         |    (2 * c + 1 - steps) * ($q331Qsf2)[scf * 17 + cls] AS sfp
@@ -1736,11 +1642,12 @@ object MultimodalQueries {
         .orderBy($"doc_id", $"ch", $"t")
     },
     // q332: the PCM tier replayed RELATIONALLY. The d/sbs/smp/dq
-    // prefix is q330's fixture replay verbatim (same generators, same
-    // QSF constants) with the global group index tau = f·12 + t; then
-    // the synthesis becomes a finite convolution: matrixing is a
-    // 64-position × allocated-subband join-free aggregate against the
-    // embedded Nfp integers (shifted >> 16 exactly as the decoder —
+    // prefix is q330's fixture replay (l1FixtureCtes: same generators,
+    // same QSF constants) with the global group index tau = f·12 + t;
+    // then the synthesis (pcmSynthesisCtes) becomes a finite
+    // convolution: matrixing is a 64-position × allocated-subband
+    // join-free aggregate against the embedded Nfp integers (shifted
+    // >> 16 exactly as the decoder —
     // DuckDB's BIGINT >> is arithmetic/floor, verified identical to
     // Java's), and each output group's 16-tap windowed sum reads V
     // generations tau−2m (low half, positions j) and tau−2m−1 (high
@@ -1748,58 +1655,7 @@ object MultimodalQueries {
     // spec's zero-seeded shift register. One row per (clip, channel,
     // group): a one-position misalignment of ANY V generation, window
     // tap or U index shifts every downstream hash.
-    Some(s"""WITH d AS (
-        |  SELECT doc_id, CAST(doc_id % 3 AS INT) AS kind,
-        |    CAST(1 + doc_id % 2 AS INT) AS nfr,
-        |    CAST(CASE WHEN doc_id % 3 = 2 THEN (1 + doc_id % 4) * 4
-        |      ELSE 32 END AS INT) AS bound,
-        |    CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 2 END AS INT)
-        |      AS nch
-        |  FROM documents WHERE doc_id < 40),
-        |sbs AS (
-        |  SELECT doc_id, kind, nfr, bound, nch, sbx.sb,
-        |    CAST(2 + ((doc_id * 5 + sbx.sb * 7) % 8) AS INT) AS nb
-        |  FROM d, unnest(range(0, 32)) sbx(sb)
-        |  WHERE (doc_id + sbx.sb) % 3 <> 0),
-        |smp AS (
-        |  SELECT s.doc_id, fx.f * 12 + tx.t AS tau, s.sb, chx.ch, s.nb,
-        |    CAST((s.doc_id * 7 + s.sb * 11 + chx.ch * 3) % 63 AS INT)
-        |      AS scf,
-        |    CASE WHEN s.sb >= s.bound
-        |      THEN (s.doc_id * 97 + fx.f * 31 + tx.t * 13 + s.sb * 17)
-        |        % (1 << s.nb)
-        |      ELSE (s.doc_id * 97 + fx.f * 31 + tx.t * 13 + s.sb * 17
-        |        + chx.ch * 29) % (1 << s.nb)
-        |    END AS c
-        |  FROM sbs s, unnest(range(0, s.nfr)) fx(f),
-        |    unnest(range(0, 12)) tx(t), unnest(range(0, s.nch)) chx(ch)),
-        |dq AS (
-        |  SELECT doc_id, tau, sb, ch,
-        |    (2 * c + 2 - (1 << nb)) *
-        |      ($q330Qsf)[scf * 8 + nb - 1] AS sfp
-        |  FROM smp),
-        |vg AS (
-        |  SELECT doc_id, ch, tau, ix.i,
-        |    (CAST(sum(($q332Nfp)[ix.i * 32 + sb + 1] * sfp) AS BIGINT)
-        |      >> 16) AS v
-        |  FROM dq, unnest(range(0, 64)) ix(i)
-        |  GROUP BY doc_id, ch, tau, ix.i),
-        |grid AS (
-        |  SELECT d.doc_id, chx.ch, tx.tau, jx.j, mx.m
-        |  FROM d, unnest(range(0, d.nch)) chx(ch),
-        |    unnest(range(0, d.nfr * 12)) tx(tau),
-        |    unnest(range(0, 32)) jx(j), unnest(range(0, 8)) mx(m)),
-        |pcm AS (
-        |  SELECT g.doc_id, g.ch, g.tau, g.j,
-        |    sum(($q332Win)[g.j + 64 * g.m + 1] * COALESCE(va.v, 0)
-        |      + ($q332Win)[g.j + 64 * g.m + 33] * COALESCE(vb.v, 0))
-        |      AS p
-        |  FROM grid g
-        |  LEFT JOIN vg va ON va.doc_id = g.doc_id AND va.ch = g.ch
-        |    AND va.tau = g.tau - 2 * g.m AND va.i = g.j
-        |  LEFT JOIN vg vb ON vb.doc_id = g.doc_id AND vb.ch = g.ch
-        |    AND vb.tau = g.tau - 2 * g.m - 1 AND vb.i = 32 + g.j
-        |  GROUP BY g.doc_id, g.ch, g.tau, g.j)
+    Some(l1PcmOraclePrefix + """
         |SELECT doc_id, CAST(ch AS INT) AS ch, CAST(tau AS INT) AS t,
         |  CAST(sum(abs(p)) AS BIGINT) AS sum_abs_pcm,
         |  CAST(max(abs(p)) AS BIGINT) AS peak_pcm,
@@ -1826,7 +1682,8 @@ object MultimodalQueries {
     // q333: Layer II PCM — q331's symbolic fixture replay (allocation
     // tables, scfsi parts, grouped-codeword digits, 3-B.4 dequant)
     // down to dq, with the global group index tau = f·36 + gr·3 + i,
-    // then q332's relational synthesis convolution verbatim. Subbands
+    // then q332's relational synthesis convolution (both through
+    // pcmSynthesisCtes). Subbands
     // at or above the table's sblimit carry no rows — the decoder
     // zero-pads them into the matrixing, and an absent row sums as 0
     // on this side too.
@@ -1850,82 +1707,15 @@ object MultimodalQueries {
       val mk = udf(l1FixturePayload _)
       val clips = Tables.documents(s, d).filter($"doc_id" < 40)
         .select($"doc_id", mk($"doc_id").as("payload"))
-      val sm = Multimodal.decodeMpeg1PcmSamples(clips, "doc_id",
-        "payload")
-      val y = expr(
-        """transform(
-          |  sequence(0, CAST(size(pcm) div 2 - 2 AS INT)),
-          |  k -> shiftright(element_at(pcm, 2*k+1)
-          |    + element_at(pcm, 2*k+2) + element_at(pcm, 2*k+3)
-          |    + element_at(pcm, 2*k+4), 2))""".stripMargin)
-      sm.select($"id".as("doc_id"), $"ch",
-          size($"pcm").cast("long").as("n_in"), y.as("__y"))
-        .select($"doc_id", $"ch", $"n_in",
-          size($"__y").cast("long").as("n_out"),
-          expr("aggregate(__y, 0L, (a, x) -> a + abs(x))").as("energy"),
-          expr("array_max(transform(__y, x -> abs(x)))").as("peak"),
-          expr("aggregate(zip_with(__y, sequence(1, size(__y)), " +
-            "(v, i) -> shiftright(v, 16) * i), 0L, (a, x) -> a + x)")
-            .as("ord_ck"))
-        .orderBy($"doc_id", $"ch")
+      boxDownsample(Multimodal.decodeMpeg1PcmSamples(clips, "doc_id",
+        "payload"))
     },
     // q334: the q332 replay carried ONE stage further — the synthesis
     // output flattened to a per-channel sample stream (pos = tau·32+j)
     // and pushed through the 4-tap 2:1 box filter exactly as the
     // Spark side's Column arithmetic (>> 2 = floor on both engines),
     // with the order-sensitive checksum pinning sample order.
-    Some(s"""WITH d AS (
-        |  SELECT doc_id, CAST(doc_id % 3 AS INT) AS kind,
-        |    CAST(1 + doc_id % 2 AS INT) AS nfr,
-        |    CAST(CASE WHEN doc_id % 3 = 2 THEN (1 + doc_id % 4) * 4
-        |      ELSE 32 END AS INT) AS bound,
-        |    CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 2 END AS INT)
-        |      AS nch
-        |  FROM documents WHERE doc_id < 40),
-        |sbs AS (
-        |  SELECT doc_id, kind, nfr, bound, nch, sbx.sb,
-        |    CAST(2 + ((doc_id * 5 + sbx.sb * 7) % 8) AS INT) AS nb
-        |  FROM d, unnest(range(0, 32)) sbx(sb)
-        |  WHERE (doc_id + sbx.sb) % 3 <> 0),
-        |smp AS (
-        |  SELECT s.doc_id, fx.f * 12 + tx.t AS tau, s.sb, chx.ch, s.nb,
-        |    CAST((s.doc_id * 7 + s.sb * 11 + chx.ch * 3) % 63 AS INT)
-        |      AS scf,
-        |    CASE WHEN s.sb >= s.bound
-        |      THEN (s.doc_id * 97 + fx.f * 31 + tx.t * 13 + s.sb * 17)
-        |        % (1 << s.nb)
-        |      ELSE (s.doc_id * 97 + fx.f * 31 + tx.t * 13 + s.sb * 17
-        |        + chx.ch * 29) % (1 << s.nb)
-        |    END AS c
-        |  FROM sbs s, unnest(range(0, s.nfr)) fx(f),
-        |    unnest(range(0, 12)) tx(t), unnest(range(0, s.nch)) chx(ch)),
-        |dq AS (
-        |  SELECT doc_id, tau, sb, ch,
-        |    (2 * c + 2 - (1 << nb)) *
-        |      ($q330Qsf)[scf * 8 + nb - 1] AS sfp
-        |  FROM smp),
-        |vg AS (
-        |  SELECT doc_id, ch, tau, ix.i,
-        |    (CAST(sum(($q332Nfp)[ix.i * 32 + sb + 1] * sfp) AS BIGINT)
-        |      >> 16) AS v
-        |  FROM dq, unnest(range(0, 64)) ix(i)
-        |  GROUP BY doc_id, ch, tau, ix.i),
-        |grid AS (
-        |  SELECT d.doc_id, chx.ch, tx.tau, jx.j, mx.m
-        |  FROM d, unnest(range(0, d.nch)) chx(ch),
-        |    unnest(range(0, d.nfr * 12)) tx(tau),
-        |    unnest(range(0, 32)) jx(j), unnest(range(0, 8)) mx(m)),
-        |pcm AS (
-        |  SELECT g.doc_id, g.ch, g.tau, g.j,
-        |    sum(($q332Win)[g.j + 64 * g.m + 1] * COALESCE(va.v, 0)
-        |      + ($q332Win)[g.j + 64 * g.m + 33] * COALESCE(vb.v, 0))
-        |      AS p
-        |  FROM grid g
-        |  LEFT JOIN vg va ON va.doc_id = g.doc_id AND va.ch = g.ch
-        |    AND va.tau = g.tau - 2 * g.m AND va.i = g.j
-        |  LEFT JOIN vg vb ON vb.doc_id = g.doc_id AND vb.ch = g.ch
-        |    AND vb.tau = g.tau - 2 * g.m - 1 AND vb.i = 32 + g.j
-        |  GROUP BY g.doc_id, g.ch, g.tau, g.j),
+    Some(l1PcmOraclePrefix + """,
         |ds AS (
         |  SELECT doc_id, ch, tau * 32 + j AS pos, CAST(p AS BIGINT) AS p
         |  FROM pcm),
@@ -1933,26 +1723,7 @@ object MultimodalQueries {
         |  SELECT d.doc_id, chx.ch, kx.k, d.nfr * 384 AS n_in
         |  FROM d, unnest(range(0, d.nch)) chx(ch),
         |    unnest(range(0, d.nfr * 192 - 1)) kx(k)),
-        |y AS (
-        |  SELECT kg.doc_id, kg.ch, kg.k, kg.n_in,
-        |    ((p0.p + p1.p + p2.p + p3.p) >> 2) AS y
-        |  FROM kg
-        |  JOIN ds p0 ON p0.doc_id = kg.doc_id AND p0.ch = kg.ch
-        |    AND p0.pos = 2 * kg.k
-        |  JOIN ds p1 ON p1.doc_id = kg.doc_id AND p1.ch = kg.ch
-        |    AND p1.pos = 2 * kg.k + 1
-        |  JOIN ds p2 ON p2.doc_id = kg.doc_id AND p2.ch = kg.ch
-        |    AND p2.pos = 2 * kg.k + 2
-        |  JOIN ds p3 ON p3.doc_id = kg.doc_id AND p3.ch = kg.ch
-        |    AND p3.pos = 2 * kg.k + 3)
-        |SELECT doc_id, CAST(ch AS INT) AS ch,
-        |  CAST(n_in AS BIGINT) AS n_in,
-        |  CAST(count(*) AS BIGINT) AS n_out,
-        |  CAST(sum(abs(y)) AS BIGINT) AS energy,
-        |  CAST(max(abs(y)) AS BIGINT) AS peak,
-        |  CAST(sum((y >> 16) * (k + 1)) AS BIGINT) AS ord_ck
-        |FROM y GROUP BY doc_id, ch, n_in
-        |ORDER BY doc_id, ch""".stripMargin)),
+        |""".stripMargin + pcmDownsampleOracle)),
 
     // q334's Layer II twin: the SAME codegen FIR over the Layer II
     // synthesis output (36 groups per frame — n_in = nFrames·1152 per
@@ -1962,30 +1733,14 @@ object MultimodalQueries {
       val mk = udf(l2FixturePayload _)
       val clips = Tables.documents(s, d).filter($"doc_id" < 40)
         .select($"doc_id", mk($"doc_id").as("payload"))
-      val sm = Multimodal.decodeMpeg1L2PcmSamples(clips, "doc_id",
-        "payload")
-      val y = expr(
-        """transform(
-          |  sequence(0, CAST(size(pcm) div 2 - 2 AS INT)),
-          |  k -> shiftright(element_at(pcm, 2*k+1)
-          |    + element_at(pcm, 2*k+2) + element_at(pcm, 2*k+3)
-          |    + element_at(pcm, 2*k+4), 2))""".stripMargin)
-      sm.select($"id".as("doc_id"), $"ch",
-          size($"pcm").cast("long").as("n_in"), y.as("__y"))
-        .select($"doc_id", $"ch", $"n_in",
-          size($"__y").cast("long").as("n_out"),
-          expr("aggregate(__y, 0L, (a, x) -> a + abs(x))").as("energy"),
-          expr("array_max(transform(__y, x -> abs(x)))").as("peak"),
-          expr("aggregate(zip_with(__y, sequence(1, size(__y)), " +
-            "(v, i) -> shiftright(v, 16) * i), 0L, (a, x) -> a + x)")
-            .as("ord_ck"))
-        .orderBy($"doc_id", $"ch")
+      boxDownsample(Multimodal.decodeMpeg1L2PcmSamples(clips, "doc_id",
+        "payload"))
     },
     // q335: q333's Layer II replay carried through q334's downsample
     // suffix — flatten pos = tau·32 + j over the 36-group frames
     // (n_in = nfr·1152 per channel), four positional self-joins,
     // >> 2, order-sensitive checksum.
-    Some(q333OraclePrefix + s""",
+    Some(q333OraclePrefix + """,
         |ds AS (
         |  SELECT doc_id, ch, tau * 32 + j AS pos, CAST(p AS BIGINT) AS p
         |  FROM pcm),
@@ -1993,27 +1748,32 @@ object MultimodalQueries {
         |  SELECT d.doc_id, chx.ch, kx.k, d.nfr * 1152 AS n_in
         |  FROM d, unnest(range(0, d.nch)) chx(ch),
         |    unnest(range(0, d.nfr * 576 - 1)) kx(k)),
-        |y AS (
-        |  SELECT kg.doc_id, kg.ch, kg.k, kg.n_in,
-        |    ((p0.p + p1.p + p2.p + p3.p) >> 2) AS y
-        |  FROM kg
-        |  JOIN ds p0 ON p0.doc_id = kg.doc_id AND p0.ch = kg.ch
-        |    AND p0.pos = 2 * kg.k
-        |  JOIN ds p1 ON p1.doc_id = kg.doc_id AND p1.ch = kg.ch
-        |    AND p1.pos = 2 * kg.k + 1
-        |  JOIN ds p2 ON p2.doc_id = kg.doc_id AND p2.ch = kg.ch
-        |    AND p2.pos = 2 * kg.k + 2
-        |  JOIN ds p3 ON p3.doc_id = kg.doc_id AND p3.ch = kg.ch
-        |    AND p3.pos = 2 * kg.k + 3)
-        |SELECT doc_id, CAST(ch AS INT) AS ch,
-        |  CAST(n_in AS BIGINT) AS n_in,
-        |  CAST(count(*) AS BIGINT) AS n_out,
-        |  CAST(sum(abs(y)) AS BIGINT) AS energy,
-        |  CAST(max(abs(y)) AS BIGINT) AS peak,
-        |  CAST(sum((y >> 16) * (k + 1)) AS BIGINT) AS ord_ck
-        |FROM y GROUP BY doc_id, ch, n_in
-        |ORDER BY doc_id, ch""".stripMargin))
+        |""".stripMargin + pcmDownsampleOracle))
   )
+
+  /** q334/q335's 4-tap 2:1 box filter over decoded PCM sample arrays
+    * (id, ch, pcm), as codegen Column arithmetic: per (doc, ch) the
+    * input and output lengths, energy, peak and the order-sensitive
+    * checksum Σ (y >> 16)·k. */
+  private def boxDownsample(sm: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val y = expr(
+      """transform(
+        |  sequence(0, CAST(size(pcm) div 2 - 2 AS INT)),
+        |  k -> shiftright(element_at(pcm, 2*k+1)
+        |    + element_at(pcm, 2*k+2) + element_at(pcm, 2*k+3)
+        |    + element_at(pcm, 2*k+4), 2))""".stripMargin)
+    sm.select($"id".as("doc_id"), $"ch",
+        size($"pcm").cast("long").as("n_in"), y.as("__y"))
+      .select($"doc_id", $"ch", $"n_in",
+        size($"__y").cast("long").as("n_out"),
+        expr("aggregate(__y, 0L, (a, x) -> a + abs(x))").as("energy"),
+        expr("array_max(transform(__y, x -> abs(x)))").as("peak"),
+        expr("aggregate(zip_with(__y, sequence(1, size(__y)), " +
+          "(v, i) -> shiftright(v, 16) * i), 0L, (a, x) -> a + x)")
+          .as("ord_ck"))
+      .orderBy($"doc_id", $"ch")
+  }
 
   /** q330/q332's SHARED Layer I fixture generator — one function so
     * the subband-tier and PCM-tier queries decode the SAME bytes by
@@ -2117,94 +1877,188 @@ object MultimodalQueries {
       yield graft.functions.Mpeg1Audio.QSF2(scf)(cls).toString)
       .mkString("[", ",", "]")
 
-  /** q333/q335's shared Layer II PCM replay prefix: the q331
-    * symbolic fixture CTEs with tau = f*36 + gr*3 + i, then the q332
-    * relational synthesis convolution, ending at the per-(doc, ch,
-    * tau, j) sample table `pcm`. */
+  /** q330/q332/q334's Layer I fixture in SQL, the generators of
+    * [[l1FixturePayload]]: the clip table `d` (kind, frames, intensity
+    * bound, channels) and the allocated subbands `sbs` with their
+    * sample widths. */
+  private val l1FixtureCtes: String =
+    """WITH d AS (
+      |  SELECT doc_id, CAST(doc_id % 3 AS INT) AS kind,
+      |    CAST(1 + doc_id % 2 AS INT) AS nfr,
+      |    CAST(CASE WHEN doc_id % 3 = 2 THEN (1 + doc_id % 4) * 4
+      |      ELSE 32 END AS INT) AS bound,
+      |    CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 2 END AS INT)
+      |      AS nch
+      |  FROM documents WHERE doc_id < 40),
+      |sbs AS (
+      |  SELECT doc_id, kind, nfr, bound, nch, sbx.sb,
+      |    CAST(2 + ((doc_id * 5 + sbx.sb * 7) % 8) AS INT) AS nb
+      |  FROM d, unnest(range(0, 32)) sbx(sb)
+      |  WHERE (doc_id + sbx.sb) % 3 <> 0)""".stripMargin
+
+  /** q332/q334's shared Layer I PCM replay prefix: [[l1FixtureCtes]]
+    * with the global group index tau = f*12 + t, dequantized with
+    * q330Qsf, then [[pcmSynthesisCtes]] at 12 groups per frame, ending
+    * at the per-(doc, ch, tau, j) sample table `pcm`. */
   // a DEF (not lazy val): interpolates q332Win, which must track an
   // installed window table (see q332Win's comment)
-  private def q333OraclePrefix: String = s"""WITH d AS (
-        |  SELECT doc_id, CAST(doc_id % 3 AS INT) AS kind,
-        |    CAST(doc_id % 4 AS INT) AS v,
-        |    CAST((doc_id // 3) % 4 AS INT) AS ext,
-        |    CAST(1 + doc_id % 2 AS INT) AS nfr,
-        |    CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 2 END AS INT)
-        |      AS nch
-        |  FROM documents WHERE doc_id < 40),
-        |d2 AS (
-        |  SELECT d.*, v AS tab,
-        |    CAST(([27,30,8,12])[v + 1] AS INT) AS sblimit,
-        |    CAST(CASE WHEN kind = 2
-        |      THEN least((ext + 1) * 4, ([27,30,8,12])[v + 1])
-        |      ELSE ([27,30,8,12])[v + 1] END AS INT) AS bound
-        |  FROM d),
-        |slots AS (
-        |  SELECT d2.doc_id, d2.nfr, d2.nch, d2.tab, d2.bound, sbx.sb,
-        |    chx.ch,
-        |    ($q331Cls)[ ($q331Row)[tab * 30 + sbx.sb + 1] * 16
-        |      + 1 + ((doc_id * 5 + sbx.sb * 7 +
-        |          (CASE WHEN sbx.sb >= bound AND nch = 2 THEN 0
-        |            ELSE chx.ch END) * 3)
-        |        % (CASE ($q331Nbal)[tab * 30 + sbx.sb + 1]
-        |            WHEN 2 THEN 2 WHEN 3 THEN 6 ELSE 7 END)) + 1 ]
-        |      AS cls,
-        |    CAST((doc_id * 3 + sbx.sb * 5 + chx.ch * 7) % 4 AS INT)
-        |      AS scfsi
-        |  FROM d2, unnest(range(0, d2.sblimit)) sbx(sb),
-        |    unnest(range(0, d2.nch)) chx(ch)
-        |  WHERE (doc_id + sbx.sb) % 2 = 1),
-        |slots2 AS (
-        |  SELECT s.*, ($q331Steps)[cls] AS steps,
-        |    ($q331Bits)[cls] AS bits, ($q331Grp)[cls] AS grp
-        |  FROM slots s),
+  private def l1PcmOraclePrefix: String = l1FixtureCtes + s""",
+        |smp AS (
+        |  SELECT s.doc_id, fx.f * 12 + tx.t AS tau, s.sb, chx.ch, s.nb,
+        |    CAST((s.doc_id * 7 + s.sb * 11 + chx.ch * 3) % 63 AS INT)
+        |      AS scf,
+        |    CASE WHEN s.sb >= s.bound
+        |      THEN (s.doc_id * 97 + fx.f * 31 + tx.t * 13 + s.sb * 17)
+        |        % (1 << s.nb)
+        |      ELSE (s.doc_id * 97 + fx.f * 31 + tx.t * 13 + s.sb * 17
+        |        + chx.ch * 29) % (1 << s.nb)
+        |    END AS c
+        |  FROM sbs s, unnest(range(0, s.nfr)) fx(f),
+        |    unnest(range(0, 12)) tx(t), unnest(range(0, s.nch)) chx(ch)),
+        |dq AS (
+        |  SELECT doc_id, tau, sb, ch,
+        |    (2 * c + 2 - (1 << nb)) *
+        |      ($q330Qsf)[scf * 8 + nb - 1] AS sfp
+        |  FROM smp),
+        |""".stripMargin + pcmSynthesisCtes(12)
+
+  /** q331/q333/q335's Layer II fixture in SQL, the generators of
+    * [[l2FixturePayload]] against the embedded allocation tables: the
+    * clip table `d`, its table selection `d2`, and the allocated
+    * (doc, sb, ch) `slots` with their quantizer class, scfsi and
+    * (`slots2`) steps, bits and grouping. */
+  private lazy val l2SlotCtes: String =
+    s"""WITH d AS (
+      |  SELECT doc_id, CAST(doc_id % 3 AS INT) AS kind,
+      |    CAST(doc_id % 4 AS INT) AS v,
+      |    CAST((doc_id // 3) % 4 AS INT) AS ext,
+      |    CAST(1 + doc_id % 2 AS INT) AS nfr,
+      |    CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 2 END AS INT)
+      |      AS nch
+      |  FROM documents WHERE doc_id < 40),
+      |d2 AS (
+      |  SELECT d.*, v AS tab,
+      |    CAST(([27,30,8,12])[v + 1] AS INT) AS sblimit,
+      |    CAST(CASE WHEN kind = 2
+      |      THEN least((ext + 1) * 4, ([27,30,8,12])[v + 1])
+      |      ELSE ([27,30,8,12])[v + 1] END AS INT) AS bound
+      |  FROM d),
+      |slots AS (
+      |  SELECT d2.doc_id, d2.nfr, d2.nch, d2.tab, d2.bound, sbx.sb,
+      |    chx.ch,
+      |    ($q331Cls)[ ($q331Row)[tab * 30 + sbx.sb + 1] * 16
+      |      + 1 + ((doc_id * 5 + sbx.sb * 7 +
+      |          (CASE WHEN sbx.sb >= bound AND nch = 2 THEN 0
+      |            ELSE chx.ch END) * 3)
+      |        % (CASE ($q331Nbal)[tab * 30 + sbx.sb + 1]
+      |            WHEN 2 THEN 2 WHEN 3 THEN 6 ELSE 7 END)) + 1 ]
+      |      AS cls,
+      |    CAST((doc_id * 3 + sbx.sb * 5 + chx.ch * 7) % 4 AS INT)
+      |      AS scfsi
+      |  FROM d2, unnest(range(0, d2.sblimit)) sbx(sb),
+      |    unnest(range(0, d2.nch)) chx(ch)
+      |  WHERE (doc_id + sbx.sb) % 2 = 1),
+      |slots2 AS (
+      |  SELECT s.*, ($q331Steps)[cls] AS steps,
+      |    ($q331Bits)[cls] AS bits, ($q331Grp)[cls] AS grp
+      |  FROM slots s)""".stripMargin
+
+  /** The scalefactor and sample-code columns of q331/q333's `smp`, per
+    * (slot, frame, granule, i): the scfsi part's effective scalefactor
+    * and the generator's code, mod steps when grouped. */
+  private val l2ScfAndCode: String =
+    """
+      |    CASE s.scfsi
+      |      WHEN 0 THEN (s.doc_id * 7 + s.sb * 11 + s.ch * 3
+      |        + (gx.gr // 4) * 19) % 63
+      |      WHEN 1 THEN (s.doc_id * 7 + s.sb * 11 + s.ch * 3
+      |        + (CASE WHEN gx.gr < 8 THEN 0 ELSE 2 END) * 19) % 63
+      |      WHEN 2 THEN (s.doc_id * 7 + s.sb * 11 + s.ch * 3) % 63
+      |      ELSE (s.doc_id * 7 + s.sb * 11 + s.ch * 3
+      |        + (CASE WHEN gx.gr < 4 THEN 0 ELSE 1 END) * 19) % 63
+      |    END AS scf,
+      |    CASE WHEN s.grp = 1
+      |      THEN ((s.doc_id * 97 + fx.f * 31 + gx.gr * 13 + ix.i * 41
+      |        + s.sb * 17 + (CASE WHEN s.sb >= s.bound AND s.nch = 2
+      |          THEN 0 ELSE s.ch END) * 29) % 65536) % s.steps
+      |      ELSE ((s.doc_id * 97 + fx.f * 31 + gx.gr * 13 + ix.i * 41
+      |        + s.sb * 17 + (CASE WHEN s.sb >= s.bound AND s.nch = 2
+      |          THEN 0 ELSE s.ch END) * 29) % 65536) % (1 << s.bits)
+      |    END AS c
+      |  FROM slots2 s, unnest(range(0, s.nfr)) fx(f),
+      |    unnest(range(0, 12)) gx(gr), unnest(range(0, 3)) ix(i))""".stripMargin
+
+  /** q333/q335's shared Layer II PCM replay prefix: [[l2SlotCtes]]
+    * with tau = f*36 + gr*3 + i, dequantized with q331Qsf2, then
+    * [[pcmSynthesisCtes]] at 36 groups per frame, ending at the
+    * per-(doc, ch, tau, j) sample table `pcm`. */
+  // a DEF (not lazy val): interpolates q332Win, which must track an
+  // installed window table (see q332Win's comment)
+  private def q333OraclePrefix: String = l2SlotCtes + """,
         |smp AS (
         |  SELECT s.doc_id, fx.f * 36 + gx.gr * 3 + ix.i AS tau, s.sb,
-        |    s.ch, s.cls, s.steps,
-        |    CASE s.scfsi
-        |      WHEN 0 THEN (s.doc_id * 7 + s.sb * 11 + s.ch * 3
-        |        + (gx.gr // 4) * 19) % 63
-        |      WHEN 1 THEN (s.doc_id * 7 + s.sb * 11 + s.ch * 3
-        |        + (CASE WHEN gx.gr < 8 THEN 0 ELSE 2 END) * 19) % 63
-        |      WHEN 2 THEN (s.doc_id * 7 + s.sb * 11 + s.ch * 3) % 63
-        |      ELSE (s.doc_id * 7 + s.sb * 11 + s.ch * 3
-        |        + (CASE WHEN gx.gr < 4 THEN 0 ELSE 1 END) * 19) % 63
-        |    END AS scf,
-        |    CASE WHEN s.grp = 1
-        |      THEN ((s.doc_id * 97 + fx.f * 31 + gx.gr * 13 + ix.i * 41
-        |        + s.sb * 17 + (CASE WHEN s.sb >= s.bound AND s.nch = 2
-        |          THEN 0 ELSE s.ch END) * 29) % 65536) % s.steps
-        |      ELSE ((s.doc_id * 97 + fx.f * 31 + gx.gr * 13 + ix.i * 41
-        |        + s.sb * 17 + (CASE WHEN s.sb >= s.bound AND s.nch = 2
-        |          THEN 0 ELSE s.ch END) * 29) % 65536) % (1 << s.bits)
-        |    END AS c
-        |  FROM slots2 s, unnest(range(0, s.nfr)) fx(f),
-        |    unnest(range(0, 12)) gx(gr), unnest(range(0, 3)) ix(i)),
+        |    s.ch, s.cls, s.steps,""".stripMargin + l2ScfAndCode + s""",
         |dq AS (
         |  SELECT doc_id, tau, sb, ch,
         |    (2 * c + 1 - steps) * ($q331Qsf2)[scf * 17 + cls] AS sfp
         |  FROM smp),
-        |vg AS (
-        |  SELECT doc_id, ch, tau, ix.i,
-        |    (CAST(sum(($q332Nfp)[ix.i * 32 + sb + 1] * sfp) AS BIGINT)
-        |      >> 16) AS v
-        |  FROM dq, unnest(range(0, 64)) ix(i)
-        |  GROUP BY doc_id, ch, tau, ix.i),
-        |grid AS (
-        |  SELECT d.doc_id, chx.ch, tx.tau, jx.j, mx.m
-        |  FROM d, unnest(range(0, d.nch)) chx(ch),
-        |    unnest(range(0, d.nfr * 36)) tx(tau),
-        |    unnest(range(0, 32)) jx(j), unnest(range(0, 8)) mx(m)),
-        |pcm AS (
-        |  SELECT g.doc_id, g.ch, g.tau, g.j,
-        |    sum(($q332Win)[g.j + 64 * g.m + 1] * COALESCE(va.v, 0)
-        |      + ($q332Win)[g.j + 64 * g.m + 33] * COALESCE(vb.v, 0))
-        |      AS p
-        |  FROM grid g
-        |  LEFT JOIN vg va ON va.doc_id = g.doc_id AND va.ch = g.ch
-        |    AND va.tau = g.tau - 2 * g.m AND va.i = g.j
-        |  LEFT JOIN vg vb ON vb.doc_id = g.doc_id AND vb.ch = g.ch
-        |    AND vb.tau = g.tau - 2 * g.m - 1 AND vb.i = 32 + g.j
-        |  GROUP BY g.doc_id, g.ch, g.tau, g.j)""".stripMargin
+        |""".stripMargin + pcmSynthesisCtes(36)
+
+  /** The PCM tier's relational synthesis in SQL, over the dequantized
+    * samples `dq` (doc_id, ch, tau, sb, sfp) and the clips `d`:
+    * matrixing `vg` against the embedded Nfp integers (>> 16 as the
+    * decoder), then each group's 16-tap windowed sum `pcm` over V
+    * generations tau-2m and tau-2m-1, `groupsPerFrame` groups per
+    * frame. */
+  // a DEF: interpolates q332Win
+  private def pcmSynthesisCtes(groupsPerFrame: Int): String =
+    s"""vg AS (
+      |  SELECT doc_id, ch, tau, ix.i,
+      |    (CAST(sum(($q332Nfp)[ix.i * 32 + sb + 1] * sfp) AS BIGINT)
+      |      >> 16) AS v
+      |  FROM dq, unnest(range(0, 64)) ix(i)
+      |  GROUP BY doc_id, ch, tau, ix.i),
+      |grid AS (
+      |  SELECT d.doc_id, chx.ch, tx.tau, jx.j, mx.m
+      |  FROM d, unnest(range(0, d.nch)) chx(ch),
+      |    unnest(range(0, d.nfr * $groupsPerFrame)) tx(tau),
+      |    unnest(range(0, 32)) jx(j), unnest(range(0, 8)) mx(m)),
+      |pcm AS (
+      |  SELECT g.doc_id, g.ch, g.tau, g.j,
+      |    sum(($q332Win)[g.j + 64 * g.m + 1] * COALESCE(va.v, 0)
+      |      + ($q332Win)[g.j + 64 * g.m + 33] * COALESCE(vb.v, 0))
+      |      AS p
+      |  FROM grid g
+      |  LEFT JOIN vg va ON va.doc_id = g.doc_id AND va.ch = g.ch
+      |    AND va.tau = g.tau - 2 * g.m AND va.i = g.j
+      |  LEFT JOIN vg vb ON vb.doc_id = g.doc_id AND vb.ch = g.ch
+      |    AND vb.tau = g.tau - 2 * g.m - 1 AND vb.i = 32 + g.j
+      |  GROUP BY g.doc_id, g.ch, g.tau, g.j)""".stripMargin
+
+  /** q334/q335's 4-tap 2:1 box filter in SQL over the positional
+    * samples `ds` and the output grid `kg`: energy, peak and the
+    * order-sensitive checksum per (doc, ch). */
+  private val pcmDownsampleOracle: String =
+    """y AS (
+      |  SELECT kg.doc_id, kg.ch, kg.k, kg.n_in,
+      |    ((p0.p + p1.p + p2.p + p3.p) >> 2) AS y
+      |  FROM kg
+      |  JOIN ds p0 ON p0.doc_id = kg.doc_id AND p0.ch = kg.ch
+      |    AND p0.pos = 2 * kg.k
+      |  JOIN ds p1 ON p1.doc_id = kg.doc_id AND p1.ch = kg.ch
+      |    AND p1.pos = 2 * kg.k + 1
+      |  JOIN ds p2 ON p2.doc_id = kg.doc_id AND p2.ch = kg.ch
+      |    AND p2.pos = 2 * kg.k + 2
+      |  JOIN ds p3 ON p3.doc_id = kg.doc_id AND p3.ch = kg.ch
+      |    AND p3.pos = 2 * kg.k + 3)
+      |SELECT doc_id, CAST(ch AS INT) AS ch,
+      |  CAST(n_in AS BIGINT) AS n_in,
+      |  CAST(count(*) AS BIGINT) AS n_out,
+      |  CAST(sum(abs(y)) AS BIGINT) AS energy,
+      |  CAST(max(abs(y)) AS BIGINT) AS peak,
+      |  CAST(sum((y >> 16) * (k + 1)) AS BIGINT) AS ord_ck
+      |FROM y GROUP BY doc_id, ch, n_in
+      |ORDER BY doc_id, ch""".stripMargin
 
   /** q332's synthesis constants, interpolated from the decoder's own
     * arrays (the q330Qsf pattern): the 64×32 matrixing integers
@@ -2226,4 +2080,25 @@ object MultimodalQueries {
   private def q332Win: String =
     (0 until 512).map(graft.functions.Mpeg1Audio.windowTable(_).toString)
       .mkString("[", ",", "]")
+
+  /** The FLAC stats readout of q204 and q305 in SQL, over the
+    * replayed samples `alls` (doc_id, f, i, s) and the clip table `d`:
+    * sample count, mean amplitude, RMS, peak and the last sample. */
+  private val flacStatsOracle: String =
+    """m AS (
+      |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_samples,
+      |    avg(CAST(s AS DOUBLE)) AS ma,
+      |    sqrt(avg(CAST(s AS DOUBLE) * s)) AS r,
+      |    CAST(max(abs(s)) AS INT) AS peak
+      |  FROM alls GROUP BY doc_id),
+      |l AS (
+      |  SELECT doc_id, s AS last_sample FROM alls
+      |  QUALIFY row_number() OVER (PARTITION BY doc_id
+      |    ORDER BY f DESC, i DESC) = 1)
+      |SELECT d.doc_id, d.sample_rate, d.nf AS n_frames, m.n_samples,
+      |  floor(ma * 10000 + 0.5) / 10000.0 AS mean_amp,
+      |  floor(r * 10000 + 0.5) / 10000.0 AS rms, m.peak,
+      |  l.last_sample
+      |FROM d JOIN m USING (doc_id) JOIN l USING (doc_id)
+      |ORDER BY doc_id""".stripMargin
 }

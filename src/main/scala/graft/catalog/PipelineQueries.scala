@@ -532,35 +532,7 @@ object PipelineQueries {
       Merge.applyScd2(target, changes, Seq("c_custkey"), Seq("val"),
           "ts", "valid_from", "valid_to")
         .orderBy($"c_custkey", $"valid_from")
-    }, Some(
-      """WITH target AS (
-        |  SELECT c_custkey, c_acctbal AS val,
-        |    CAST(0 AS BIGINT) AS valid_from,
-        |    CAST(NULL AS BIGINT) AS valid_to
-        |  FROM customer),
-        |ch0 AS (
-        |  SELECT CASE WHEN o_orderkey % 100 = 0 THEN o_custkey + 1000000
-        |    ELSE o_custkey END AS c_custkey,
-        |    o_totalprice AS val, o_orderkey AS ts
-        |  FROM orders WHERE o_orderkey % 50 = 0),
-        |ch AS (
-        |  SELECT c_custkey, val, ts FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY c_custkey
-        |      ORDER BY ts DESC) AS rn FROM ch0) WHERE rn = 1),
-        |keep AS (
-        |  SELECT t.c_custkey, t.val, t.valid_from, t.valid_to
-        |  FROM target t LEFT JOIN ch USING (c_custkey)
-        |  WHERE ch.ts IS NULL OR t.val = ch.val),
-        |closed AS (
-        |  SELECT t.c_custkey, t.val, t.valid_from,
-        |    CAST(ch.ts AS BIGINT) AS valid_to
-        |  FROM target t JOIN ch USING (c_custkey)
-        |  WHERE t.val <> ch.val),
-        |ins AS (
-        |  SELECT ch.c_custkey, ch.val, CAST(ch.ts AS BIGINT)
-        |    AS valid_from, CAST(NULL AS BIGINT) AS valid_to
-        |  FROM ch LEFT JOIN target t USING (c_custkey)
-        |  WHERE t.c_custkey IS NULL OR t.val <> ch.val)
+    }, Some(scd2OracleCtes + """
         |SELECT * FROM keep UNION ALL SELECT * FROM closed
         |UNION ALL SELECT * FROM ins
         |ORDER BY c_custkey, valid_from""".stripMargin)),
@@ -583,35 +555,7 @@ object PipelineQueries {
           ($"valid_to".isNull || $"valid_to" > $"__asof"))
         .select($"c_custkey", $"val", $"valid_from")
         .orderBy($"c_custkey")
-    }, Some(
-      """WITH target AS (
-        |  SELECT c_custkey, c_acctbal AS val,
-        |    CAST(0 AS BIGINT) AS valid_from,
-        |    CAST(NULL AS BIGINT) AS valid_to
-        |  FROM customer),
-        |ch0 AS (
-        |  SELECT CASE WHEN o_orderkey % 100 = 0 THEN o_custkey + 1000000
-        |    ELSE o_custkey END AS c_custkey,
-        |    o_totalprice AS val, o_orderkey AS ts
-        |  FROM orders WHERE o_orderkey % 50 = 0),
-        |ch AS (
-        |  SELECT c_custkey, val, ts FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY c_custkey
-        |      ORDER BY ts DESC) AS rn FROM ch0) WHERE rn = 1),
-        |keep AS (
-        |  SELECT t.c_custkey, t.val, t.valid_from, t.valid_to
-        |  FROM target t LEFT JOIN ch USING (c_custkey)
-        |  WHERE ch.ts IS NULL OR t.val = ch.val),
-        |closed AS (
-        |  SELECT t.c_custkey, t.val, t.valid_from,
-        |    CAST(ch.ts AS BIGINT) AS valid_to
-        |  FROM target t JOIN ch USING (c_custkey)
-        |  WHERE t.val <> ch.val),
-        |ins AS (
-        |  SELECT ch.c_custkey, ch.val, CAST(ch.ts AS BIGINT)
-        |    AS valid_from, CAST(NULL AS BIGINT) AS valid_to
-        |  FROM ch LEFT JOIN target t USING (c_custkey)
-        |  WHERE t.c_custkey IS NULL OR t.val <> ch.val),
+    }, Some(scd2OracleCtes + """,
         |v AS (
         |  SELECT * FROM keep UNION ALL SELECT * FROM closed
         |  UNION ALL SELECT * FROM ins),
@@ -1342,37 +1286,10 @@ object PipelineQueries {
         .groupBy($"status").agg(count(lit(1)).as("n_keys"))
         .orderBy($"status")
     },
-    // q136: q92's SCD-2 CTEs verbatim, then two interval snapshots
-    // and the keyed diff — the oracle recomputes the whole history
-    Some(
-      """WITH target AS (
-        |  SELECT c_custkey, c_acctbal AS val,
-        |    CAST(0 AS BIGINT) AS valid_from,
-        |    CAST(NULL AS BIGINT) AS valid_to
-        |  FROM customer),
-        |ch0 AS (
-        |  SELECT CASE WHEN o_orderkey % 100 = 0 THEN o_custkey + 1000000
-        |    ELSE o_custkey END AS c_custkey,
-        |    o_totalprice AS val, o_orderkey AS ts
-        |  FROM orders WHERE o_orderkey % 50 = 0),
-        |ch AS (
-        |  SELECT c_custkey, val, ts FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY c_custkey
-        |      ORDER BY ts DESC) AS rn FROM ch0) WHERE rn = 1),
-        |keep AS (
-        |  SELECT t.c_custkey, t.val, t.valid_from, t.valid_to
-        |  FROM target t LEFT JOIN ch USING (c_custkey)
-        |  WHERE ch.ts IS NULL OR t.val = ch.val),
-        |closed AS (
-        |  SELECT t.c_custkey, t.val, t.valid_from,
-        |    CAST(ch.ts AS BIGINT) AS valid_to
-        |  FROM target t JOIN ch USING (c_custkey)
-        |  WHERE t.val <> ch.val),
-        |ins AS (
-        |  SELECT ch.c_custkey, ch.val, CAST(ch.ts AS BIGINT)
-        |    AS valid_from, CAST(NULL AS BIGINT) AS valid_to
-        |  FROM ch LEFT JOIN target t USING (c_custkey)
-        |  WHERE t.c_custkey IS NULL OR t.val <> ch.val),
+    // q136: the shared SCD-2 CTEs (scd2OracleCtes), then two interval
+    // snapshots and the keyed diff — the oracle recomputes the whole
+    // history
+    Some(scd2OracleCtes + """,
         |hist AS (
         |  SELECT * FROM keep UNION ALL SELECT * FROM closed
         |  UNION ALL SELECT * FROM ins),
@@ -1772,36 +1689,9 @@ object PipelineQueries {
           Fns.roundU(sum($"val"), 2).as("sum_version_val"))
         .orderBy($"on_updated_version")
     },
-    // q170: q92's history rebuild + the interval match per fact
-    Some(
-      """WITH target AS (
-        |  SELECT c_custkey, c_acctbal AS val,
-        |    CAST(0 AS BIGINT) AS valid_from,
-        |    CAST(NULL AS BIGINT) AS valid_to
-        |  FROM customer),
-        |ch0 AS (
-        |  SELECT CASE WHEN o_orderkey % 100 = 0 THEN o_custkey + 1000000
-        |    ELSE o_custkey END AS c_custkey,
-        |    o_totalprice AS val, o_orderkey AS ts
-        |  FROM orders WHERE o_orderkey % 50 = 0),
-        |ch AS (
-        |  SELECT c_custkey, val, ts FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY c_custkey
-        |      ORDER BY ts DESC) AS rn FROM ch0) WHERE rn = 1),
-        |keep AS (
-        |  SELECT t.c_custkey, t.val, t.valid_from, t.valid_to
-        |  FROM target t LEFT JOIN ch USING (c_custkey)
-        |  WHERE ch.ts IS NULL OR t.val = ch.val),
-        |closed AS (
-        |  SELECT t.c_custkey, t.val, t.valid_from,
-        |    CAST(ch.ts AS BIGINT) AS valid_to
-        |  FROM target t JOIN ch USING (c_custkey)
-        |  WHERE t.val <> ch.val),
-        |ins AS (
-        |  SELECT ch.c_custkey, ch.val, CAST(ch.ts AS BIGINT)
-        |    AS valid_from, CAST(NULL AS BIGINT) AS valid_to
-        |  FROM ch LEFT JOIN target t USING (c_custkey)
-        |  WHERE t.c_custkey IS NULL OR t.val <> ch.val),
+    // q170: the shared SCD-2 history rebuild (scd2OracleCtes) + the
+    // interval match per fact
+    Some(scd2OracleCtes + """,
         |hist AS (
         |  SELECT * FROM keep UNION ALL SELECT * FROM closed
         |  UNION ALL SELECT * FROM ins),
@@ -2864,11 +2754,13 @@ object PipelineQueries {
         |FROM j WHERE rn = 1 GROUP BY 1 ORDER BY network""".stripMargin))
   )
 
-  /** Shared SCD-2 fixture for q92 (apply) and q93 (point-in-time read):
-    * customer as the day-0 open snapshot, orders-derived changes
-    * (q49's key remap — %100 keys become brand-new — LWW-collapsed to
-    * one change per key). ONE copy so the write and read sides can
-    * never drift apart; the DuckDB oracles replicate the same CTEs. */
+  /** Shared SCD-2 fixture for q92 (apply), q93 (point-in-time read),
+    * q136 (snapshot diff) and q170 (point-in-time join): customer as
+    * the day-0 open snapshot, orders-derived changes (q49's key remap
+    * — %100 keys become brand-new — LWW-collapsed to one change per
+    * key). ONE copy so the write and read sides can never drift
+    * apart; the DuckDB oracles read the same fixture from
+    * [[scd2OracleCtes]]. */
   private def scd2Fixture(s: SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
     val target = Tables.customer(s, d)
@@ -2884,4 +2776,37 @@ object PipelineQueries {
       .agg(max_by($"val", $"ts").as("val"), max($"ts").as("ts"))
     (target, changes)
   }
+
+  /** [[scd2Fixture]] and its Type-2 apply in SQL, ending at the three
+    * history parts `keep`, `closed` and `ins`: the shared oracle
+    * prefix of q92, q93, q136 and q170. */
+  private val scd2OracleCtes: String =
+    """WITH target AS (
+      |  SELECT c_custkey, c_acctbal AS val,
+      |    CAST(0 AS BIGINT) AS valid_from,
+      |    CAST(NULL AS BIGINT) AS valid_to
+      |  FROM customer),
+      |ch0 AS (
+      |  SELECT CASE WHEN o_orderkey % 100 = 0 THEN o_custkey + 1000000
+      |    ELSE o_custkey END AS c_custkey,
+      |    o_totalprice AS val, o_orderkey AS ts
+      |  FROM orders WHERE o_orderkey % 50 = 0),
+      |ch AS (
+      |  SELECT c_custkey, val, ts FROM (
+      |    SELECT *, row_number() OVER (PARTITION BY c_custkey
+      |      ORDER BY ts DESC) AS rn FROM ch0) WHERE rn = 1),
+      |keep AS (
+      |  SELECT t.c_custkey, t.val, t.valid_from, t.valid_to
+      |  FROM target t LEFT JOIN ch USING (c_custkey)
+      |  WHERE ch.ts IS NULL OR t.val = ch.val),
+      |closed AS (
+      |  SELECT t.c_custkey, t.val, t.valid_from,
+      |    CAST(ch.ts AS BIGINT) AS valid_to
+      |  FROM target t JOIN ch USING (c_custkey)
+      |  WHERE t.val <> ch.val),
+      |ins AS (
+      |  SELECT ch.c_custkey, ch.val, CAST(ch.ts AS BIGINT)
+      |    AS valid_from, CAST(NULL AS BIGINT) AS valid_to
+      |  FROM ch LEFT JOIN target t USING (c_custkey)
+      |  WHERE t.c_custkey IS NULL OR t.val <> ch.val)""".stripMargin
 }

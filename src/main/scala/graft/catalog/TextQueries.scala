@@ -1423,38 +1423,7 @@ object TextQueries {
          |mtl AS (
          |  SELECT map_from_entries(list(struct_pack(
          |    k := a || chr(1) || b, v := rnk))) AS mm FROM mt),
-         |words AS (
-         |  SELECT doc_id, i AS widx, ws[CAST(i AS INT)] AS w
-         |  FROM (SELECT doc_id,
-         |          list_filter(string_split_regex(trim(text), '\s+'),
-         |            x -> x <> '') AS ws
-         |        FROM documents WHERE text IS NOT NULL) d,
-         |    unnest(range(1, len(ws) + 1)) u(i)),
-         |init AS (
-         |  SELECT doc_id, widx,
-         |    list_transform(range(1, length(w) + 1),
-         |      i -> substr(w, CAST(i AS INT), 1)) AS toks
-         |  FROM words),
-         |st AS (
-         |  SELECT doc_id, widx, toks FROM init
-         |  UNION ALL
-         |  SELECT doc_id, widx,
-         |    list_transform(
-         |      list_filter(range(1, len(toks) + 1),
-         |        k -> NOT (k >= 2 AND ma[CAST(k AS INT) - 1])),
-         |      k -> CASE WHEN k < len(toks) AND ma[CAST(k AS INT)]
-         |        THEN toks[CAST(k AS INT)] || toks[CAST(k AS INT) + 1]
-         |        ELSE toks[CAST(k AS INT)] END) AS toks
-         |  FROM (
-         |    SELECT doc_id, widx, toks,
-         |      list_transform(range(1, len(toks)), j ->
-         |        isb[CAST(j AS INT)] AND (j - (1 + coalesce(list_max(
-         |          list_transform(range(1, j),
-         |            k -> CASE WHEN NOT isb[CAST(k AS INT)] THEN k
-         |              ELSE CAST(0 AS BIGINT) END)), 0))) % 2 = 0) AS ma
-         |    FROM (
-         |      SELECT doc_id, widx, toks,
-         |        list_transform(range(1, len(toks)),
+         |""".stripMargin + bpeGreedyPassHead + """
          |          j -> coalesce(mm[toks[CAST(j AS INT)] || chr(1) || toks[CAST(j AS INT) + 1]][1], 999999)
          |            = best) AS isb
          |      FROM (
@@ -3080,38 +3049,7 @@ object TextQueries {
       val bestOf =
         "list_min(list_transform(range(1, len(toks)), j -> " +
           rk("toks[CAST(j AS INT)]", "toks[CAST(j AS INT) + 1]") + "))"
-      s"""WITH RECURSIVE words AS (
-         |  SELECT doc_id, i AS widx, ws[CAST(i AS INT)] AS w
-         |  FROM (SELECT doc_id,
-         |          list_filter(string_split_regex(trim(text), '\\s+'),
-         |            x -> x <> '') AS ws
-         |        FROM documents WHERE text IS NOT NULL) d,
-         |    unnest(range(1, len(ws) + 1)) u(i)),
-         |init AS (
-         |  SELECT doc_id, widx,
-         |    list_transform(range(1, length(w) + 1),
-         |      i -> substr(w, CAST(i AS INT), 1)) AS toks
-         |  FROM words),
-         |st AS (
-         |  SELECT doc_id, widx, toks FROM init
-         |  UNION ALL
-         |  SELECT doc_id, widx,
-         |    list_transform(
-         |      list_filter(range(1, len(toks) + 1),
-         |        k -> NOT (k >= 2 AND ma[CAST(k AS INT) - 1])),
-         |      k -> CASE WHEN k < len(toks) AND ma[CAST(k AS INT)]
-         |        THEN toks[CAST(k AS INT)] || toks[CAST(k AS INT) + 1]
-         |        ELSE toks[CAST(k AS INT)] END) AS toks
-         |  FROM (
-         |    SELECT doc_id, widx, toks,
-         |      list_transform(range(1, len(toks)), j ->
-         |        isb[CAST(j AS INT)] AND (j - (1 + coalesce(list_max(
-         |          list_transform(range(1, j),
-         |            k -> CASE WHEN NOT isb[CAST(k AS INT)] THEN k
-         |              ELSE CAST(0 AS BIGINT) END)), 0))) % 2 = 0) AS ma
-         |    FROM (
-         |      SELECT doc_id, widx, toks,
-         |        list_transform(range(1, len(toks)),
+      "WITH RECURSIVE " + bpeGreedyPassHead + s"""
          |          j -> ${rk("toks[CAST(j AS INT)]",
                               "toks[CAST(j AS INT) + 1]")} = best) AS isb
          |      FROM (
@@ -3283,4 +3221,44 @@ object TextQueries {
         |  (4*c1*btypes) DESC, w1, w2
         |LIMIT 20""".stripMargin))
   )
+
+  /** The greedy BPE pass of q105 and q315 in SQL, up to each query's
+    * rank lookup: every document's words split into characters
+    * (`init`), then the recursive `st` that applies one greedy pass per
+    * step — all non-overlapping lowest-rank pairs, left to right. Ends
+    * inside the pair-rank `list_transform`, where q105 probes its
+    * derived merge map and q315 its literal CASE table. */
+  private val bpeGreedyPassHead: String =
+    """words AS (
+      |  SELECT doc_id, i AS widx, ws[CAST(i AS INT)] AS w
+      |  FROM (SELECT doc_id,
+      |          list_filter(string_split_regex(trim(text), '\s+'),
+      |            x -> x <> '') AS ws
+      |        FROM documents WHERE text IS NOT NULL) d,
+      |    unnest(range(1, len(ws) + 1)) u(i)),
+      |init AS (
+      |  SELECT doc_id, widx,
+      |    list_transform(range(1, length(w) + 1),
+      |      i -> substr(w, CAST(i AS INT), 1)) AS toks
+      |  FROM words),
+      |st AS (
+      |  SELECT doc_id, widx, toks FROM init
+      |  UNION ALL
+      |  SELECT doc_id, widx,
+      |    list_transform(
+      |      list_filter(range(1, len(toks) + 1),
+      |        k -> NOT (k >= 2 AND ma[CAST(k AS INT) - 1])),
+      |      k -> CASE WHEN k < len(toks) AND ma[CAST(k AS INT)]
+      |        THEN toks[CAST(k AS INT)] || toks[CAST(k AS INT) + 1]
+      |        ELSE toks[CAST(k AS INT)] END) AS toks
+      |  FROM (
+      |    SELECT doc_id, widx, toks,
+      |      list_transform(range(1, len(toks)), j ->
+      |        isb[CAST(j AS INT)] AND (j - (1 + coalesce(list_max(
+      |          list_transform(range(1, j),
+      |            k -> CASE WHEN NOT isb[CAST(k AS INT)] THEN k
+      |              ELSE CAST(0 AS BIGINT) END)), 0))) % 2 = 0) AS ma
+      |    FROM (
+      |      SELECT doc_id, widx, toks,
+      |        list_transform(range(1, len(toks)),""".stripMargin
 }

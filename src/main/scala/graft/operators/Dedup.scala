@@ -22,12 +22,6 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** Character n-gram shingle set (distinct). */
-  def charShingles(text: Column, n: Int): Column =
-    array_distinct(transform(
-      sequence(lit(0), greatest(length(text) - n, lit(0))),
-      i => text.substr(i + 1, lit(n))))
-
   /** Word n-gram shingle set (distinct), from whitespace tokens. Native
     * expression ([[graft.functions.WordShingles]]) — the composable form
     * (`array_distinct(transform(sequence(...), i => array_join(slice(

@@ -20,8 +20,6 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
-  def l2norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity — native fused-loop expression (identical
     * accumulation order to the composable zip_with/aggregate form, ~10×
     * faster interpreted; see [[graft.functions.CosineSim]]). */

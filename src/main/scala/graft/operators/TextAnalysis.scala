@@ -13,7 +13,7 @@ object TextAnalysis {
   val StopWords: Seq[String] =
     Seq("the", "a", "an", "and", "of", "to", "in", "is", "it", "that")
 
-  /** The five scalar metrics below all derive from ONE native
+  /** The three scalar metrics below all derive from ONE native
     * single-pass kernel ([[graft.functions.TextQualityStats]] —
     * round 12: the composable forms re-tokenized the document per
     * metric, which made q28 the decade audit's worst row at 4.8×).
@@ -32,11 +32,6 @@ object TextAnalysis {
     * field count, leading/trailing empty fields included). */
   def tokenCountWs(text: Column): Column = stats(text).getField("n_ws")
 
-  /** BPE-ish token count: runs of letters, runs of digits, or runs of
-    * other non-space symbols, each with an optional leading space — the
-    * GPT-2 pre-tokenizer shape without the merges table. */
-  def tokenCountBpe(text: Column): Column = stats(text).getField("n_bpe")
-
   /** Fraction of whitespace tokens that are stopwords. (n_ws == 0 is
     * exactly the old length(trim(text)) == 0 guard: a nonempty trim
     * always yields ≥ 1 split field.) */
@@ -52,14 +47,6 @@ object TextAnalysis {
     when(length(text) === 0, 0.0).otherwise(
       stats(text).getField("n_punct").cast("double") /
         length(text).cast("double"))
-
-  /** Mean word length over whitespace tokens. */
-  def meanWordLen(text: Column): Column = {
-    val st = stats(text)
-    when(st.getField("n_ws") === 0, 0.0)
-      .otherwise(st.getField("sum_wlen").cast("double") /
-        st.getField("n_ws").cast("double"))
-  }
 
   /** Composite quality score in [0, 1]: length sweet-spot, low punctuation,
     * moderate stopword presence. A simple, fully-deterministic heuristic —

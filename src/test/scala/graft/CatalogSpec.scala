@@ -1,7 +1,10 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import java.security.MessageDigest
 
+import scala.io.Source
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -44,5 +47,54 @@ class CatalogSpec extends AnyFunSuite {
       .flatMap(p => Decl.findAllMatchIn(Files.readString(p)).map(_.group(1)))
       .toSeq
     assert(declared.sorted === names.sorted)
+  }
+
+  test("every oracle's text matches its pinned SHA-256") {
+    // the PCM oracles (q332-q335) interpolate the decoder's window
+    // table; the pins hold for the stand-in table
+    assert(!graft.functions.Mpeg1Audio.windowIsSpecTable)
+    val src = Source.fromResource("graft/oracle-sha256.tsv",
+      getClass.getClassLoader)
+    val pinned = try src.getLines().filterNot(_.startsWith("#"))
+      .map(_.split('\t')).map { case Array(k, v) => k -> v }.toMap
+    finally src.close()
+    def sha(s: String) = MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes(UTF_8)).map(b => f"$b%02x").mkString
+    val live = SparkEntry.oracleSql.map { case (k, v) => k -> sha(v) }
+    val differ = (pinned.keySet ++ live.keySet).toSeq.sorted
+      .filter(k => pinned.get(k) != live.get(k))
+    assert(differ.isEmpty, "oracle text differs from its pin: " +
+      differ.mkString(", "))
+  }
+
+  // A stage that several queries share is declared once, as a fragment
+  // in its module. The scan reads the nine query modules line by line,
+  // trimmed, and skips blank lines and lines made only of brackets,
+  // commas, quotes or a bare `|` margin; a window of 12 consecutive
+  // remaining lines that occurs twice is a pasted copy.
+  test("no 12 significant lines of the query modules occur twice") {
+    val skip = """[\s()\[\]{},"'|]*""".r
+    val window = 12
+    val modules = Files.list(Paths.get("src/main/scala/graft/catalog"))
+      .iterator().asScala
+      .filter(_.getFileName.toString.endsWith("Queries.scala"))
+      .toSeq.sortBy(_.toString)
+    val seen = collection.mutable.Map[Seq[String], String]()
+    val copies = collection.mutable.ArrayBuffer[(String, String)]()
+    for (m <- modules) {
+      val lines = Files.readAllLines(m).asScala.zipWithIndex
+        .map { case (l, i) => (s"${m.getFileName}:${i + 1}", l.trim) }
+        .filterNot { case (_, l) => skip.matches(l) }.toSeq
+      var inRun = false
+      for (w <- lines.sliding(window) if w.size == window) {
+        val here = w.head._1
+        val first = seen.getOrElseUpdate(w.map(_._2), here)
+        // name each repeated run once, at its first window
+        if (first != here && !inRun) copies += first -> here
+        inRun = first != here
+      }
+    }
+    if (copies.nonEmpty) fail(s"${copies.size} repeated blocks:\n" +
+      copies.map { case (a, b) => s"  $a = $b" }.mkString("\n"))
   }
 }

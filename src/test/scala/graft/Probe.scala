@@ -34,7 +34,8 @@ import org.apache.spark.sql.graft.TestBridge
   *     tables replicated that many times (see [[replicate]]) to a temp
   *     sf dir, runs each query there once warm and then best of 2, and
   *     prints its wall time, row count, sorted-row digest and growth
-  *     over the previous multiplier
+  *     over the previous multiplier; the first multiplier runs every
+  *     query once more, untimed, before its timed runs
   */
 object Probe {
 
@@ -129,11 +130,15 @@ object Probe {
 
       case Seq("scale", list, mults @ _*) =>
         val prevBest = mutable.Map[String, Double]()
-        for (m <- mults.headOption.fold(Seq(1, 10))(
-            _.split(',').map(_.trim.toInt).toSeq)) {
+        for ((m, i) <- mults.headOption.fold(Seq(1, 10))(
+            _.split(',').map(_.trim.toInt).toSeq).zipWithIndex) {
           val dir = Files.createTempDirectory("graft-scale")
           try {
             replicate(spark, sfDir, m, dir.toString)
+            // the first multiplier also pays the JVM's JIT and codegen
+            // warm-up: one extra untimed pass of every query first
+            if (i == 0)
+              for (q <- names(list)) timed(q, dir.toString)(_.collect())
             for (q <- names(list)) {
               var rows = Array.empty[Row]
               val best = (0 to 2).map(_ => timed(q, dir.toString) { df =>

@@ -47,13 +47,20 @@ object GraftFunctions {
 
   /** Make all graft SQL functions, the custom planner strategy, the
     * optimizer rule and [[Tables.events]]' nanos-as-long read available in
-    * a live session (idempotent — safe to call once per suite). */
+    * a live session, and write its streams' checkpoints through
+    * [[graft.streaming.LocalCheckpointFiles]] unless the session already
+    * names a checkpoint file manager (idempotent — safe to call once per
+    * suite). */
   def register(spark: SparkSession): Unit = {
     builders.foreach { case (name, b) =>
       Bridge.registerTempFunction(spark, name, b)
     }
     graft.plans.TopKPerKey.ensureRegistered(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val manager = "spark.sql.streaming.checkpointFileManagerClass"
+    if (spark.conf.getOption(manager).isEmpty)
+      spark.conf.set(manager,
+        classOf[graft.streaming.LocalCheckpointFiles].getName)
   }
 }
 

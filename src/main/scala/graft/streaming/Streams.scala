@@ -33,17 +33,24 @@ object Streams {
     * `blocksPerTrigger` is the latency/throughput dial: 1 (default)
     * reproduces the reference's per-block cadence (its mailbox hands the
     * parser one block at a time) and pays a fixed per-trigger cost:
-    * source listing, offset and commit logs, the dimension read,
-    * optimising and planning the kept plan, and its 2 Spark jobs — one
-    * scan-and-shuffle job that parses each block once and one result job.
-    * Larger values amortize that cost across blocks, and ≤ 0 removes the
-    * cap entirely (each trigger takes everything available — the backfill
-    * shape).
+    * source listing, the dimension read, optimising and planning the kept
+    * plan, its 2 Spark jobs — one scan-and-shuffle job that parses each
+    * block once and one result job — and three small checkpoint writes
+    * (the file-source log, the offset log and the commit log), about 1 ms
+    * each through [[LocalCheckpointFiles]]. Larger values amortize that
+    * cost across blocks, and ≤ 0 removes the cap entirely (each trigger
+    * takes everything available — the backfill shape).
+    *
+    * `checkpointLocation` is where the stream keeps its offsets and
+    * commits; a stream restarted on the same location resumes after the
+    * last committed batch and re-delivers an uncommitted one with its id.
+    * Unset, Spark picks a fresh location, so nothing resumes.
     */
   def tokenFlowsStream(spark: SparkSession, blocksDir: String,
                        hot: DataFrame, watchlists: DataFrame,
                        prices: DataFrame, blocksPerTrigger: Int = 1,
-                       trigger: Trigger = Trigger.AvailableNow())
+                       trigger: Trigger = Trigger.AvailableNow(),
+                       checkpointLocation: Option[String] = None)
                       (sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val reader = spark.readStream.schema(BlockSchema.block)
     val blocks = (if (blocksPerTrigger > 0)
@@ -55,7 +62,9 @@ object Streams {
     // output attributes, so a plan built over one batch's relation reads
     // any later one.
     var kept: Option[(Rugpull.Dims, LogicalPlan, LogicalPlan)] = None
-    blocks.writeStream
+    val writer = blocks.writeStream
+    checkpointLocation.foreach(writer.option("checkpointLocation", _))
+    writer
       .outputMode(OutputMode.Append())
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>

@@ -17,6 +17,26 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.sql("SELECT isqrt(17L) AS r").head().getLong(0) === 4L)
   }
 
+  private val checkpointFiles = "spark.sql.streaming.checkpointFileManagerClass"
+
+  test("the shared session writes checkpoints through LocalCheckpointFiles; " +
+      "register names it only when the session names no other manager") {
+    assert(spark.conf.get(checkpointFiles) ===
+      "graft.streaming.LocalCheckpointFiles")
+    val bare = spark.newSession()
+    assert(bare.conf.getOption(checkpointFiles).isEmpty)
+    GraftFunctions.register(bare)
+    assert(bare.conf.get(checkpointFiles) ===
+      classOf[graft.streaming.LocalCheckpointFiles].getName)
+
+    val other = spark.newSession()
+    val theirs = "org.apache.spark.sql.execution.streaming.checkpointing." +
+      "FileSystemBasedCheckpointFileManager"
+    other.conf.set(checkpointFiles, theirs)
+    GraftFunctions.register(other)
+    assert(other.conf.get(checkpointFiles) === theirs)
+  }
+
   private def sourcesContaining(root: String, text: String): Seq[String] =
     Files.walk(Paths.get(root)).iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))

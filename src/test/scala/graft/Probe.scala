@@ -25,7 +25,8 @@ import org.apache.spark.sql.graft.TestBridge
   *     one warm run per arm, then `reps` (default 4) measured runs per arm
   *   sbt "Test/runMain graft.Probe explain <outDir> <tag> <queries>"
   *     writes each query's `.explain("formatted")` plan to
-  *     `<outDir>/<query>_<tag>.txt`
+  *     `<outDir>/<query>_<tag>.txt`, with what differs between runs of
+  *     one plan masked or renumbered (see [[stablePlan]])
   *   sbt "Test/runMain graft.Probe load"
   *     the fixed per-query cost: `read.parquet` resolution, DataFrame
   *     build (analysis) and build + execute, for a few cheap queries
@@ -45,6 +46,19 @@ object Probe {
       GraftSession.warmUp(spark, GraftSession.sfDir)
       run(spark, GraftSession.sfDir, args.toSeq)
     } finally spark.stop()
+  }
+
+  /** A formatted plan without what differs between two runs of one plan:
+    * typed operators' lambda object addresses (`$$Lambda$N/0x…@hash`) and
+    * `[plan_id=N]` are masked, and expression ids, which count the
+    * expressions the JVM built before, are renumbered `#1`, `#2`, ... in
+    * order of first appearance, so references still name their column. */
+  def stablePlan(plan: String): String = {
+    val ids = mutable.Map[String, Int]()
+    """#\d+""".r.replaceAllIn(
+      plan.replaceAll("""\$\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+""", """\$\$Lambda""")
+        .replaceAll("""\[plan_id=\d+\]""", "[plan_id=N]"),
+      m => "#" + ids.getOrElseUpdate(m.matched, ids.size + 1))
   }
 
   /** Runs one mode on a live session and leaves the session running. */
@@ -97,7 +111,7 @@ object Probe {
           val out = Paths.get(outDir, s"${q}_$tag.txt")
           try {
             timed(q)(df => Files.writeString(out,
-              df.queryExecution.explainString(FormattedMode)))
+              stablePlan(df.queryExecution.explainString(FormattedMode))))
             println(s"[probe] wrote $out")
           } catch { case e: Throwable =>
             System.err.println(s"[probe] $q FAILED: ${e.getMessage}")

@@ -30,6 +30,17 @@ class ProbeSpec extends SparkSpec {
     assert(!spark.sparkContext.isStopped)
   }
 
+  test("explain prints one plan for two runs of q224, whose typed " +
+      "operators print lambda addresses") {
+    val out = Files.createTempDirectory("graft-probe-det")
+    for (tag <- Seq("a", "b"))
+      Probe.run(spark, sf, Seq("explain", out.toString, tag, "q224_debounce"))
+    val Seq(a, b) = Seq("a", "b").map(t =>
+      Files.readAllBytes(out.resolve(s"q224_debounce_$t.txt")).toSeq)
+    assert(new String(a.toArray, "UTF-8").contains("$$Lambda"))
+    assert(a === b)
+  }
+
   test("scale: 2x tables double every row and key family, and the mode " +
       "prints one line per multiplier and removes its dirs") {
     val out = Files.createTempDirectory("graft-probe-scale").toString

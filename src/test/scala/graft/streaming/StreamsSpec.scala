@@ -1,9 +1,10 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path => JPath}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.SparkSpec
 
@@ -775,6 +776,77 @@ class StreamsSpec extends SparkSpec {
     assert(reused(1), "batch 2 rebuilt its plan")
     assert(reused(2), "batch 3 rebuilt its plan")
     assert(!reused(3), "the changed watch-list kept the old plan")
+  }
+
+  /** One delivery to a flagship sink: batch id, its blocks' timestamps,
+    * its ledger rows. */
+  private case class Delivery(id: Long, blocks: Seq[Long], rows: Seq[String])
+
+  /** Kills the flagship mid-batch and restarts it on the same checkpoint:
+    * five one-block triggers, a sink that throws on batch 2's first
+    * delivery (after recording it, before the commit log is written),
+    * then a restart on that checkpoint. The first run uses Spark's default
+    * checkpoint file manager when `firstRunDefault`. */
+  private def killAndRestart(firstRunDefault: Boolean): Unit = {
+    val dir = Files.createTempDirectory("graft-stream-restart")
+    (0 until 5).foreach { t =>
+      val f = dir.resolve(s"b$t.json")
+      Files.writeString(f, addrBlock(t))
+      // one block per trigger, in block order
+      f.toFile.setLastModified(1700000000000L + t * 1000L)
+    }
+    val hot = (0 until 5).map(t => s"ADDR_$t").toDF("addr")
+    val watchlists = Seq(("BASE_VAULTS", "ADDR_1")).toDF("kind", "addr")
+    val prices = Seq(("ADDR_3", "base", 2.0)).toDF("vault", "side", "price_usd")
+
+    def run(ckpt: JPath, failOn: Option[Long]): (Seq[Delivery], Option[Throwable]) = {
+      var seen = Vector.empty[Delivery]
+      val q = Streams.tokenFlowsStream(spark, dir.toString, hot, watchlists,
+          prices, checkpointLocation = Some(ckpt.toString)) {
+        (df: DataFrame, id: Long) =>
+          val rows = df.collect().toSeq
+          seen :+= Delivery(id, rows.map(_.getAs[Long]("timestamp")).distinct.sorted,
+            rows.map(_.toString).sorted)
+          if (failOn.contains(id))
+            throw new IllegalStateException(s"killed in batch $id")
+      }
+      val failed = try { q.awaitTermination(); None }
+        catch { case e: StreamingQueryException => Some(e.getCause) }
+      (seen, failed)
+    }
+
+    val (clean, none) = run(Files.createTempDirectory("graft-ckpt-clean"), None)
+    assert(none.isEmpty)
+    assert(clean.map(_.id) === (0L until 5L))
+    assert(clean.map(_.blocks) === (0 until 5).map(t => Seq(1700000000L + t)))
+
+    val ckpt = Files.createTempDirectory("graft-ckpt-killed")
+    val manager = "spark.sql.streaming.checkpointFileManagerClass"
+    val ours = spark.conf.get(manager)
+    if (firstRunDefault) spark.conf.unset(manager)
+    val (first, killed) = try run(ckpt, Some(2L))
+      finally spark.conf.set(manager, ours)
+    assert(killed.map(_.getMessage) === Some("killed in batch 2"))
+    // Hadoop's checksummed writer leaves a .crc beside each log file
+    assert(Files.exists(ckpt.resolve("offsets/.2.crc")) === firstRunDefault)
+    assert(!Files.exists(ckpt.resolve("commits/2")))
+
+    val (second, ok) = run(ckpt, None)
+    assert(ok.isEmpty)
+    assert(first.map(_.id) === Seq(0L, 1L, 2L))
+    assert(second.map(_.id) === Seq(2L, 3L, 4L))
+    assert(second.head === first.last) // same id, blocks and ledger
+    assert((first.init ++ second) === clean)
+  }
+
+  test("tokenFlowsStream killed mid-batch resumes from its checkpoint: the " +
+      "uncommitted batch is re-delivered, the ledger equals a clean run's") {
+    killAndRestart(firstRunDefault = false)
+  }
+
+  test("a checkpoint written under Spark's default file manager resumes " +
+      "under LocalCheckpointFiles") {
+    killAndRestart(firstRunDefault = true)
   }
 
   test("streamingDedup drops duplicate keys across micro-batches") {

@@ -43,10 +43,10 @@ object SparkEntry {
 
   /** Every declared query. A query belongs to the first module below
     * whose operator family its build calls; `RelationalQueries` takes the
-    * rest. A def, not a val: the q330/q332/q334 oracles interpolate the
-    * decoder's current window table, which
-    * `Mpeg1Audio.installWindowTable` can replace at run time. */
-  def catalogue: Seq[QueryDef] = QueryDef.catalogue(
+    * rest. Built once per JVM: a query's build and oracle depend only on
+    * constants, including the decoder's window table the PCM oracles
+    * interpolate. */
+  lazy val catalogue: Seq[QueryDef] = QueryDef.catalogue(
     MultimodalQueries.defs ++ ClassifierQueries.defs ++ GraphQueries.defs ++
       AnnQueries.defs ++ DedupQueries.defs ++ TextQueries.defs ++
       PipelineQueries.defs ++ AnalyticsQueries.defs ++ RelationalQueries.defs)

@@ -1900,9 +1900,7 @@ object MultimodalQueries {
     * with the global group index tau = f*12 + t, dequantized with
     * q330Qsf, then [[pcmSynthesisCtes]] at 12 groups per frame, ending
     * at the per-(doc, ch, tau, j) sample table `pcm`. */
-  // a DEF (not lazy val): interpolates q332Win, which must track an
-  // installed window table (see q332Win's comment)
-  private def l1PcmOraclePrefix: String = l1FixtureCtes + s""",
+  private lazy val l1PcmOraclePrefix: String = l1FixtureCtes + s""",
         |smp AS (
         |  SELECT s.doc_id, fx.f * 12 + tx.t AS tau, s.sb, chx.ch, s.nb,
         |    CAST((s.doc_id * 7 + s.sb * 11 + chx.ch * 3) % 63 AS INT)
@@ -1992,9 +1990,7 @@ object MultimodalQueries {
     * with tau = f*36 + gr*3 + i, dequantized with q331Qsf2, then
     * [[pcmSynthesisCtes]] at 36 groups per frame, ending at the
     * per-(doc, ch, tau, j) sample table `pcm`. */
-  // a DEF (not lazy val): interpolates q332Win, which must track an
-  // installed window table (see q332Win's comment)
-  private def q333OraclePrefix: String = l2SlotCtes + """,
+  private lazy val q333OraclePrefix: String = l2SlotCtes + """,
         |smp AS (
         |  SELECT s.doc_id, fx.f * 36 + gx.gr * 3 + ix.i AS tau, s.sb,
         |    s.ch, s.cls, s.steps,""".stripMargin + l2ScfAndCode + s""",
@@ -2010,7 +2006,6 @@ object MultimodalQueries {
     * decoder), then each group's 16-tap windowed sum `pcm` over V
     * generations tau-2m and tau-2m-1, `groupsPerFrame` groups per
     * frame. */
-  // a DEF: interpolates q332Win
   private def pcmSynthesisCtes(groupsPerFrame: Int): String =
     s"""vg AS (
       |  SELECT doc_id, ch, tau, ix.i,
@@ -2073,13 +2068,8 @@ object MultimodalQueries {
       yield graft.functions.Mpeg1Audio.Nfp(i)(k).toString)
       .mkString("[", ",", "]")
 
-  // a DEF on the CURRENT table (not the WindowD literal): if a
-  // deployment installs the real Table 3-B.3 (see
-  // Mpeg1Audio.windowTable), the oracle's literals follow the decoder
-  // automatically — the two engines cannot disagree under any window
-  private def q332Win: String =
-    (0 until 512).map(graft.functions.Mpeg1Audio.windowTable(_).toString)
-      .mkString("[", ",", "]")
+  private lazy val q332Win: String =
+    graft.functions.Mpeg1Audio.WindowD.mkString("[", ",", "]")
 
   /** The FLAC stats readout of q204 and q305 in SQL, over the
     * replayed samples `alls` (doc_id, f, i, s) and the clip table `d`:

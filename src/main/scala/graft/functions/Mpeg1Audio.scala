@@ -72,7 +72,7 @@ import Bytes.{BitReader, BitWriter, ParseEx, bail}
   * of 2^-16, D[0] = 0, peak 75038/2^16 at the center, the half-table
   * symmetry D[512−i] = −D[i] except at i ≡ 0 mod 64): swap the 257
   * half-table values for the spec's and every downstream number is
-  * bit-true ISO output with NO code change. MDCT-class codecs
+  * bit-true ISO output with no other change. MDCT-class codecs
   * (Layer III, AAC) remain out of scope. Everything else — sync
   * walking, header fields, frame sizing, allocation/scfsi/
   * scalefactor/sample bit layout for BOTH layers, intensity bound,
@@ -350,10 +350,14 @@ object Mpeg1Audio {
     * D(512−i) = −D(i) for i ≢ 0 (mod 64), D(512−i) = +D(i) for
     * i ≡ 0 (mod 64). The half-table body is a Hann-windowed sinc at
     * the filterbank's nominal prototype cutoff π/64 — the same filter
-    * class the spec window is a (ripple-optimized) member of. Swap
-    * the 257 half-table values for the spec's and decoder AND oracle
-    * are bit-true ISO (the oracle embeds THIS array, so the two can
-    * never disagree with each other). */
+    * class the spec window is a (ripple-optimized) member of.
+    *
+    * The table is a constant: every decode and every oracle literal
+    * (q332's `q332Win`) read this one array, so the two can never
+    * disagree, and no call replaces it at run time. Bit-true ISO output
+    * is a source change: replace the 257 half-table values with the
+    * spec's; decoder and oracle follow together, and the q332–q335
+    * rows of `oracle-sha256.tsv` change with them. */
   val WindowD: Array[Long] = {
     val d = new Array[Long](512)
     var i = 0
@@ -373,62 +377,6 @@ object Mpeg1Audio {
     }
     d
   }
-
-  /** Deployment hook for the REAL ISO Table 3-B.3 (round-13 verdict:
-    * the literal values are unobtainable in this offline build, but a
-    * deployment that HAS them should get bit-true PCM without a
-    * rebuild). The override is installed from the system property
-    * `graft.audio.windowTablePath` at class-init time — one integer
-    * per line, 512 lines of the table's 2^16 fixed-point values; on a
-    * cluster, set it on every executor via
-    * `spark.executor.extraJavaOptions` (the decode runs executor-side
-    * and this object initializes per-JVM). [[installWindowTable]] is
-    * the programmatic form (tests, notebooks). Validation enforces
-    * the structural invariants the headroom proof and the oracle rely
-    * on: 512 values, D(0) = 0, |D| < 2^17, and the spec's symmetry
-    * classes — an array that fails them is rejected loudly, never
-    * half-installed. [[windowIsSpecTable]] is the machine-visible
-    * conformance marker the round-13 advice asked for: `false` means
-    * PCM output is the documented internally-consistent stand-in
-    * domain, NOT bit-true ISO; code that needs conformance asserts on
-    * it instead of parsing prose. */
-  @volatile private var windowOverride: Option[Array[Long]] = None
-
-  /** The window table every synthesis (and every oracle literal) uses:
-    * the installed ISO table if present, else the [[WindowD]]
-    * stand-in. Capture it ONCE per decode ([[SynthState]] does) so a
-    * concurrent install can never tear a stream mid-clip. */
-  def windowTable: Array[Long] = windowOverride.getOrElse(WindowD)
-
-  /** True iff a deployment installed the real Table 3-B.3 — i.e. PCM
-    * output is bit-true ISO rather than the documented stand-in
-    * domain. */
-  def windowIsSpecTable: Boolean = windowOverride.isDefined
-
-  def installWindowTable(values: Array[Long]): Unit = {
-    require(values.length == 512,
-      s"window table must have 512 values, got ${values.length}")
-    require(values(0) == 0L, "Table 3-B.3 has D(0) = 0")
-    require(values.forall(v => math.abs(v) < (1L << 17)),
-      "window values exceed the |D| < 2^17 headroom bound")
-    for (i <- 1 until 256) {
-      val want = if (i % 64 == 0) values(i) else -values(i)
-      require(values(512 - i) == want,
-        s"symmetry violated at D(${512 - i}): expected $want, " +
-          s"got ${values(512 - i)}")
-    }
-    windowOverride = Some(values.clone())
-  }
-
-  def loadWindowTable(path: String): Unit =
-    installWindowTable(
-      scala.io.Source.fromFile(path).getLines()
-        .map(_.trim).filter(_.nonEmpty).map(_.toLong).toArray)
-
-  /** Revert to the stand-in (test hygiene). */
-  def clearWindowTable(): Unit = windowOverride = None
-
-  sys.props.get("graft.audio.windowTablePath").foreach(loadWindowTable)
 
   /** Per-channel synthesis state: the spec's 1024-value V shift
     * register. [[processGroup]] is §2.4.3.2.2 verbatim in exact
@@ -450,7 +398,6 @@ object Mpeg1Audio {
     */
   final class SynthState {
     private val v = new Array[Long](1024)
-    private val d = windowTable // captured once; see windowOverride doc
     def processGroup(s: Array[Long], out: Array[Long]): Unit = {
       System.arraycopy(v, 0, v, 64, 960)
       var i = 0
@@ -467,8 +414,8 @@ object Mpeg1Audio {
         var acc = 0L
         var m = 0
         while (m < 8) {
-          acc += d(j + 64 * m) * v(128 * m + j)
-          acc += d(j + 64 * m + 32) * v(128 * m + 96 + j)
+          acc += WindowD(j + 64 * m) * v(128 * m + j)
+          acc += WindowD(j + 64 * m + 32) * v(128 * m + 96 + j)
           m += 1
         }
         out(j) = acc

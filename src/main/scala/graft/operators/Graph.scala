@@ -200,22 +200,21 @@ object Graph {
       //  1. repartition(col) without a number is REPARTITION_BY_COL,
       //     whose partition count AQE may coalesce — pin it to
       //     spark.sql.shuffle.partitions so it matches what every
-      //     frontier join's other side exchanges to;
+      //     frontier join's other side exchanges to (REPARTITION_BY_NUM,
+      //     which AQE never coalesces);
       //  2. a localCheckpoint built UNDER AQE records no usable output
       //     partitioning at all (the adaptive plan hides the final
       //     exchange's partitioning from LogicalRDD), so EnsureRequirements
       //     re-exchanges the checkpointed side in every consumer join.
-      //     Building this one query with AQE off restores the recorded
-      //     hash(key, n) and the consumer joins move only the frontier.
-      val sess = doubled.sparkSession
-      val nShuffle = sess.sessionState.conf.numShufflePartitions
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val adj = if (keyPartitionInMemory) {
-        val prevAqe = sess.conf.get(aqeKey)
-        sess.conf.set(aqeKey, "false")
-        try doubled.repartition(nShuffle, col(keyCol)).localCheckpoint()
-        finally sess.conf.set(aqeKey, prevAqe)
-      } else doubled.localCheckpoint()
+      //     The checkpoint therefore DECLARES hash(key, n) on its
+      //     LogicalRDD, and the consumer joins move only the frontier —
+      //     under the caller's own AQE setting, no session conf touched.
+      val nShuffle = spark.sessionState.conf.numShufflePartitions
+      val adj = if (keyPartitionInMemory)
+        Bridge.declareHashPartitioned(
+          doubled.repartition(nShuffle, col(keyCol)).localCheckpoint(),
+          keyCol, nShuffle)
+      else doubled.localCheckpoint()
       PlannedAdj(adj, adj.count(), None, 0L)
     }
   }

@@ -39,6 +39,29 @@ object Bridge {
       case _ =>
     }
 
+  /** A `localCheckpoint`ed Dataset re-wrapped so its LogicalRDD declares
+    * `hashpartitioning(key, n)`: a checkpoint built under AQE records no
+    * output partitioning, so every consumer join would exchange it again.
+    * Sound only for rows already laid out by `repartition(n, key)` (which
+    * AQE never coalesces); the claim is made only when the RDD has
+    * exactly `n` partitions, else `df` comes back unchanged. The
+    * checkpoint's statistics are kept for join selection. */
+  def declareHashPartitioned(df: org.apache.spark.sql.DataFrame,
+      key: String, n: Int): org.apache.spark.sql.DataFrame =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD
+          if lr.rdd.getNumPartitions == n =>
+        lr.output.find(_.name == key).fold(df) { k =>
+          val session = df.sparkSession
+            .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+          ofRows(session, lr.copy(outputPartitioning =
+            org.apache.spark.sql.catalyst.plans.physical
+              .HashPartitioning(Seq(k), n))(
+            session, Some(lr.computeStats()), Some(lr.constraints)))
+        }
+      case _ => df
+    }
+
   /** True iff the session's CacheManager holds no cached plan — the
     * no-leak assertion operators that once persisted internally are
     * spec-pinned against (sharedState is `private[sql]`). */

@@ -48,11 +48,11 @@ class GraftSessionSpec extends SparkSpec {
       Seq("GraftSession.scala"))
   }
 
-  // session conf is set where a session is set up (register), plus
-  // Graph's scoped AQE toggle; a query that sets conf changes every
-  // later query on the session
-  test("src/main sets session conf only in GraftExtensions and Graph") {
+  // session conf is set only where a session is set up (register); a
+  // query that sets conf changes every later and every concurrent query
+  // on the session
+  test("src/main sets session conf only in GraftExtensions") {
     assert(sourcesContaining("src/main", "conf." + "set(") ===
-      Seq("GraftExtensions.scala", "Graph.scala"))
+      Seq("GraftExtensions.scala"))
   }
 }

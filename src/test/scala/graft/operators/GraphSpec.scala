@@ -296,6 +296,60 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("bfsHops/ssspHops round joins move only the frontier: the " +
+      "adjacency checkpoint declares hash(key, n); AQE stays on") {
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    // children through AQE wrappers, query stages and reused exchanges
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case other => other.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+    // the adjacency scan is the checkpoint carrying the neighbour column
+    // __n; one flag per scan below `p` short of a nested join: true iff
+    // an exchange lies between
+    def adjScans(p: SparkPlan, moved: Boolean): Seq[Boolean] = p match {
+      case r: RDDScanExec if r.output.exists(_.name == "__n") => Seq(moved)
+      case _: BaseJoinExec => Nil
+      case _ => kids(p).flatMap(adjScans(_,
+        moved || p.isInstanceOf[Exchange] || p.isInstanceOf[ReusedExchangeExec]))
+    }
+    val edges = (0 until 64).flatMap(i => Seq(
+        (s"n$i", s"n${(i + 1) % 64}", 1L + i % 5),
+        (s"n$i", s"n${(i + 7) % 64}", 3L)))
+      .toDF("src", "dst", "w")
+    val seeds = Seq("n0").toDF("node")
+    spark.listenerManager.register(listener)
+    try {
+      assert(Graph.bfsHops(edges, "src", "dst", seeds, "node", 3)
+        .count() > 1)
+      assert(Graph.ssspHops(edges, "src", "dst", "w", seeds, "node", 3)
+        .count() > 1)
+      org.apache.spark.sql.graft.TestBridge.drainListeners(spark)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val roundJoins = plans.asScala.toSeq.flatMap(nodes).collect {
+      case j: BaseJoinExec => j.children.flatMap(adjScans(_, false))
+    }.filter(_.nonEmpty)
+    // three rounds per traversal, each joining the frontier onto adj
+    assert(roundJoins.size >= 6, s"${roundJoins.size} round joins")
+    assert(roundJoins.forall(!_.contains(true)),
+      "the adjacency was exchanged again in a round join")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
+  }
+
   test("ssspHops: relaxation beats the direct edge; hop cap binds") {
     // a-b direct costs 10, but a-c-b costs 2 — the cheap route needs
     // 2 hops, so maxHops=1 must report 10 and maxHops>=2 report 2.

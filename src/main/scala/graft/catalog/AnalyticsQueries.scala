@@ -256,7 +256,10 @@ object AnalyticsQueries {
       // the deviation pass derives its bounds from it — |v − med| is
       // in [0, max(hi − med, med − lo)] and the counts are unchanged
       // (prices are finite non-null, so |v − med| is too; the wider
-      // range is exactness-safe per the statsHint contract).
+      // range is exactness-safe per the statsHint contract). NaN is
+      // excluded as exactMedian excludes it; the hint claims no ±Inf
+      // band (__nneg = __npos = 0), so an infinite price fails the
+      // query by name instead of skewing both medians.
       val stats0 = li
         .filter($"l_extendedprice".isNotNull &&
           !isnan($"l_extendedprice"))
@@ -264,6 +267,11 @@ object AnalyticsQueries {
         .agg(min($"l_extendedprice").cast("double").as("__lo"),
           max($"l_extendedprice").cast("double").as("__hi"),
           count(lit(1)).as("__n"))
+        .withColumn("__lo", when($"__lo" === Double.NegativeInfinity ||
+            $"__hi" === Double.PositiveInfinity,
+          raise_error(concat(lit("q122_mad_outliers: l_extendedprice " +
+            "holds an infinite value (return flag "), $"__g", lit(")"))))
+          .otherwise($"__lo"))
         .withColumn("__nneg", lit(0L)).withColumn("__npos", lit(0L))
         .transform(scoped)
       val med = Percentiles.exactMedian(li, "l_returnflag",

@@ -479,25 +479,6 @@ object FlacAudio {
     }
   }
 
-  /** FIXTURE: CONSTANT subframes — one 16-bit value per frame. */
-  def encodeConstant(sampleRate: Int, blockSize: Int, nFrames: Int,
-                     value: Int => Int): Array[Byte] =
-    encodeStream(sampleRate, blockSize, nFrames) { (bw, f) =>
-      bw.writeBits(0, 1); bw.writeBits(0, 6); bw.writeBits(0, 1)
-      bw.writeBits(value(f).toLong & 0xffff, 16)
-    }
-
-  /** FIXTURE: VERBATIM subframes — raw 16-bit samples, no prediction. */
-  def encodeVerbatim(sampleRate: Int, blockSize: Int, nFrames: Int,
-                     sample: (Int, Int) => Int): Array[Byte] =
-    encodeStream(sampleRate, blockSize, nFrames) { (bw, f) =>
-      bw.writeBits(0, 1); bw.writeBits(1, 6); bw.writeBits(0, 1)
-      var t = 0
-      while (t < blockSize) {
-        bw.writeBits(sample(f, t).toLong & 0xffff, 16); t += 1
-      }
-    }
-
   /** Shared container/frame writer: "fLaC" + STREAMINFO + `nFrames`
     * frames whose subframe bits come from `body` (which must write ALL
     * `channels` subframes), CRC-8/16 computed for real over exactly
@@ -563,7 +544,8 @@ object FlacAudio {
     out.toByteArray
   }
 
-  private def encodeStream(sampleRate: Int, blockSize: Int, nFrames: Int)
+  private[functions] def encodeStream(sampleRate: Int, blockSize: Int,
+                                      nFrames: Int)
                           (body: (BitWriter, Int) => Unit): Array[Byte] =
     encodeStreamCh(sampleRate, blockSize, nFrames, 1, 0)(body)
 

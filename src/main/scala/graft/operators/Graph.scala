@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{BinaryType, LongType}
+import org.apache.spark.sql.types.{BinaryType, LongType, StructField, StructType}
 
 /** Distributed graph analytics over edge DataFrames.
   *
@@ -14,7 +14,10 @@ import org.apache.spark.sql.types.{BinaryType, LongType}
   * each iteration is hash joins + hash aggregates on the edge
   * partitioning, lineage is truncated with `localCheckpoint` on a fixed
   * cadence so a 50-iteration run doesn't compile a 50-deep plan, and
-  * nothing ever collects to the driver.
+  * nothing ever collects to the driver. A round that needs the size of
+  * what it checkpoints takes it from [[Bridge.countedCheckpoint]]: the
+  * count job is the one that materialises the checkpoint, so no frame
+  * is checkpointed and then counted (or `isEmpty`-tested) again.
   */
 object Graph {
 
@@ -118,8 +121,9 @@ object Graph {
     * distinct shuffle behind `doubled` is computed once (the gate's
     * pre-count) and its shuffle files are reused by the write, so
     * nothing is resident twice. Returns (adjacency frame, row count,
-    * scratch dir to delete when the traversal finishes). */
-  /** `keyPartitionInMemory`: the traversals keep the in-memory
+    * scratch dir to delete when the traversal finishes).
+    *
+    * `keyPartitionInMemory`: the traversals keep the in-memory
     * checkpoint hash-partitioned on the probe key (their join's other
     * side is a small frontier, so the graph never moving again is the
     * win). pageRank passes FALSE — a measured refutation (round-14
@@ -210,14 +214,34 @@ object Graph {
       //     LogicalRDD, and the consumer joins move only the frontier —
       //     under the caller's own AQE setting, no session conf touched.
       val nShuffle = spark.sessionState.conf.numShufflePartitions
+      val (ck, rows) = Bridge.countedCheckpoint(
+        if (keyPartitionInMemory) doubled.repartition(nShuffle, col(keyCol))
+        else doubled)
       val adj = if (keyPartitionInMemory)
-        Bridge.declareHashPartitioned(
-          doubled.repartition(nShuffle, col(keyCol)).localCheckpoint(),
-          keyCol, nShuffle)
-      else doubled.localCheckpoint()
-      PlannedAdj(adj, adj.count(), None, 0L)
+        Bridge.declareHashPartitioned(ck, keyCol, nShuffle)
+      else ck
+      PlannedAdj(adj, rows, None, 0L)
     }
   }
+
+  /** An undirected edge list with each edge once, as (`lo`, `hi`) in
+    * value order: self-loops dropped, parallel and reversed copies
+    * merged. */
+  private def undirected(edges: DataFrame, srcCol: String, dstCol: String,
+      lo: String = "__lo", hi: String = "__hi"): DataFrame =
+    edges.select(
+        least(col(srcCol), col(dstCol)).as(lo),
+        greatest(col(srcCol), col(dstCol)).as(hi))
+      .filter(col(lo) =!= col(hi))
+      .distinct()
+
+  /** Both orientations of `norm`'s (__lo, __hi) rows as (`from`, `to`),
+    * each carrying `extra` unchanged. */
+  private def bothWays(norm: DataFrame, from: String, to: String,
+      extra: Column*): DataFrame =
+    norm.select(col("__lo").as(from) +: col("__hi").as(to) +: extra: _*)
+      .unionAll(norm.select(
+        col("__hi").as(from) +: col("__lo").as(to) +: extra: _*))
 
   /** Best-effort: this runs in `finally` blocks, and a filesystem
     * delete is most likely to throw in EXACTLY the executor-loss /
@@ -331,12 +355,11 @@ object Graph {
     // IS the sink marker (NULL __deg), replacing the three-shuffle
     // distinct ∪ + groupBy + left-join build. Degree rides the rank
     // table so the per-iteration join is ranks⋈edges only.
-    val base = e.select(col("__src").as("node"), lit(1L).as("__s"))
-      .unionAll(e.select(col("__dst").as("node"), lit(0L).as("__s")))
-      .groupBy(col("node"))
-      .agg(when(sum(col("__s")) > 0, sum(col("__s"))).as("__deg"))
-      .localCheckpoint()
-    val nN = base.count()
+    val (base, nN) = Bridge.countedCheckpoint(
+      e.select(col("__src").as("node"), lit(1L).as("__s"))
+        .unionAll(e.select(col("__dst").as("node"), lit(0L).as("__s")))
+        .groupBy(col("node"))
+        .agg(when(sum(col("__s")) > 0, sum(col("__s"))).as("__deg")))
     var ranks = base.withColumn("rank", lit(1.0 / nN))
     // each round's checkpoint is freed once the NEXT round has
     // materialized (localCheckpoint is eager): Dataset.unpersist only
@@ -361,14 +384,13 @@ object Graph {
             lit(damping) * (coalesce(col("__in"), lit(0.0)) +
               col("__dm") / nN)).as("rank"))
         .localCheckpoint()
-      if (prevCk != null)
-        org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(prevCk)
+      if (prevCk != null) Bridge.unpersistCheckpoint(prevCk)
       prevCk = ranks
     }
     // the loop no longer references the inputs; only the FINAL rank
     // checkpoint (the return value, caller-owned) stays resident
-    org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(e)
-    org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(base)
+    Bridge.unpersistCheckpoint(e)
+    Bridge.unpersistCheckpoint(base)
     ranks.select(col("node"), col("rank"))
     } finally {
       scratch.foreach(dir => deleteScratch(e, dir))
@@ -386,10 +408,11 @@ object Graph {
     *
     * Per round: one degree aggregate, one semi-join of edges onto the
     * surviving-node set per endpoint — all hash-partitioned on node
-    * keys; the surviving edge set is localCheckpoint'ed each round
+    * keys; the surviving edge set is a counted checkpoint each round
     * (the [[pageRank]] lineage discipline — a lazy chain would
-    * re-derive round r from scratch 2^r times), and each round frees
-    * the previous round's checkpoint blocks. The loop exits as soon
+    * re-derive round r from scratch 2^r times; the edge count the
+    * fixed-point test reads comes with it), and each round frees the
+    * previous round's checkpoint blocks. The loop exits as soon
     * as a round removes nothing; if the fixed point is not reached
     * within `maxIters` the operator THROWS rather than return a
     * plausible-looking non-core (a path graph peels one layer per
@@ -408,16 +431,8 @@ object Graph {
     // Degree = out-degree in the doubled form, and peeling both
     // endpoint sides keeps the doubling invariant. Self-loops are
     // dropped here rather than trusted away.
-    val norm = edges.select(
-        least(col(srcCol), col(dstCol)).as("__lo"),
-        greatest(col(srcCol), col(dstCol)).as("__hi"))
-      .filter(col("__lo") =!= col("__hi"))
-      .distinct()
-    var e = norm.select(col("__lo").as("__src"), col("__hi").as("__dst"))
-      .unionAll(norm.select(col("__hi").as("__src"),
-        col("__lo").as("__dst")))
-      .localCheckpoint()
-    var prevEdges = e.count()
+    var (e, prevEdges) = Bridge.countedCheckpoint(
+      bothWays(undirected(edges, srcCol, dstCol), "__src", "__dst"))
     var done = prevEdges == 0L
     var i = 0
     while (!done && i < maxIters) {
@@ -425,17 +440,15 @@ object Graph {
         .agg(count(lit(1)).as("__deg"))
         .filter(col("__deg") >= k)
         .select(col("__n"))
-      val next = e
+      val (next, n) = Bridge.countedCheckpoint(e
         .join(keep.withColumnRenamed("__n", "__src"), Seq("__src"),
           "left_semi")
         .join(keep.withColumnRenamed("__n", "__dst"), Seq("__dst"),
-          "left_semi")
-        .localCheckpoint()
-      val n = next.count()
+          "left_semi"))
       // free the previous round's checkpoint blocks (Bridge, not
       // unpersist — see pageRank); next is already materialized so
       // nothing can recompute through the truncated lineage
-      org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(e)
+      Bridge.unpersistCheckpoint(e)
       e = next
       done = n == prevEdges || n == 0L
       prevEdges = n
@@ -488,12 +501,7 @@ object Graph {
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
              maxIters: Int = 50): DataFrame = {
     require(k >= 3 && maxIters >= 1)
-    val norm = edges.select(
-        least(col(srcCol), col(dstCol)).as("a"),
-        greatest(col(srcCol), col(dstCol)).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    val e = norm.localCheckpoint()
+    val e = undirected(edges, srcCol, dstCol, "a", "b").localCheckpoint()
     // ONE triangle enumeration (the adaptive [[triangles]] plan),
     // then the peel works off the checkpointed set — re-enumerating
     // per round was measured 56 s at sf0.1 (the survivor set stays
@@ -503,7 +511,7 @@ object Graph {
     // materializes anyway — checkpointed and partitioned, nothing
     // driver-side.
     val tri = triangles(e).localCheckpoint()
-    org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(e)
+    Bridge.unpersistCheckpoint(e)
     // The peel is a DRIVER-COORDINATED CASCADE. Profiling killed two
     // earlier shapes: the classic loop (full 3·|tri| support
     // re-aggregate + triangle re-checkpoint per round) floored at
@@ -546,21 +554,21 @@ object Graph {
         struct(col("b").as("a"), col("c").as("b")))).as("__e"))
       .groupBy(col("__e.a").as("a"), col("__e.b").as("b"))
       .agg(count(lit(1)).as("support"))
-    val sup0 = supportAgg(tri).localCheckpoint()
+    val (sup0, sup0N) = Bridge.countedCheckpoint(supportAgg(tri))
     val spark = tri.sparkSession
     val aF = sup0.schema("a"); val bF = sup0.schema("b")
-    def pairSchema(extra: org.apache.spark.sql.types.StructField*) =
-      org.apache.spark.sql.types.StructType(
-        Seq(aF.copy(name = "a"), bF.copy(name = "b")) ++ extra)
+    def pairSchema(extra: StructField*) =
+      StructType(Seq(aF.copy(name = "a"), bF.copy(name = "b")) ++ extra)
     // local rows as a relation: tiny sets inline (LocalRelation),
     // bigger ones ride an RDD so the optimizer never copies the rows
-    def localDf(rows: Seq[org.apache.spark.sql.Row],
-                schema: org.apache.spark.sql.types.StructType): DataFrame =
+    def localDf(rows: Seq[Row], schema: StructType): DataFrame =
       if (rows.length <= 4096) {
         import scala.jdk.CollectionConverters._
         spark.createDataFrame(rows.asJava, schema)
       } else spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema)
+    def pairDf(es: IterableOnce[(Any, Any)]): DataFrame =
+      localDf(es.iterator.map(e => Row(e._1, e._2)).toSeq, pairSchema())
     // classic all-shuffle peel: the scale fallback, and the round-for
     // -round shape a cluster run degrades to past the driver caps.
     // `sup0First` seeds round 0 with an ALREADY-materialized support
@@ -591,8 +599,8 @@ object Graph {
             .join(rem.select(col("a").as("b"), col("b").as("c")),
               Seq("b", "c"), "left_anti")
             .localCheckpoint()
-          org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(t)
-          org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(supAll)
+          Bridge.unpersistCheckpoint(t)
+          Bridge.unpersistCheckpoint(supAll)
           t = tNext
         }
         i += 1
@@ -609,9 +617,10 @@ object Graph {
     // edge's base support is known up front — the per-round
     // base-support FETCH jobs below never fire (measured 1.7 s of
     // fixed job latency per q307 run at sf0.1). Past the budget,
-    // the demand-paged path is exactly as before.
-    val supAll0 = sup0.limit(1000001).collect()
-    val fullSup = supAll0.length <= 1000000
+    // the demand-paged path is exactly as before. The checkpoint's own
+    // count decides, so an oversized table is never collected.
+    val fullSup = sup0N <= 1000000L
+    val supAll0 = if (fullSup) sup0.collect() else Array.empty[Row]
     val weak0 = if (fullSup) supAll0.filter(_.getLong(2) < k - 2)
       else sup0.filter(col("support") < k - 2)
         .limit(1000001).collect()
@@ -631,8 +640,7 @@ object Graph {
     // peel's actual working set. Truncation/skip-safe: prefetch only
     // ADDS knowledge — fewer paged edges just means more probes
     // later, never a wrong answer.
-    val fragile0 = if (weak0.length > 1000000) Array.empty[
-      org.apache.spark.sql.Row]
+    val fragile0 = if (weak0.length > 1000000) Array.empty[Row]
     else {
       val hist: Map[Long, Long] = if (fullSup)
         supAll0.iterator.map(_.getLong(2))
@@ -651,7 +659,7 @@ object Graph {
         cum += hist.getOrElse((k - 2 + delta).toLong, 0L)
         delta += 1
       }
-      if (delta == 0) Array.empty[org.apache.spark.sql.Row]
+      if (delta == 0) Array.empty[Row]
       else if (fullSup) supAll0.filter(r =>
         r.getLong(2) >= k - 2 && r.getLong(2) < k - 2 + delta)
       else sup0.filter(col("support") >= k - 2 &&
@@ -741,8 +749,7 @@ object Graph {
           // retirement below still runs over the DYING edges only
           val probeRows = probeSet ++ pageSet
           pageSet.clear()
-          val remRel = localDf(probeRows.map(e =>
-            org.apache.spark.sql.Row(e._1, e._2)).toSeq, pairSchema())
+          val remRel = pairDf(probeRows)
           // ONE broadcast, not three: the round-12 profile put probe 1
           // at 1.8-2.0 s, and the three same-relation probes (left
           // join per edge position) each built their OWN broadcast of
@@ -776,8 +783,7 @@ object Graph {
             // touched-triangle volume outgrew the driver budget:
             // rebuild the live triangle set (minus everything removed
             // so far) and finish on the all-shuffle path
-            val remAll = localDf(removedAt.keysIterator.map(e =>
-              org.apache.spark.sql.Row(e._1, e._2)).toSeq, pairSchema())
+            val remAll = pairDf(removedAt.keysIterator)
             val liveTri = tri
               .join(broadcast(remAll), Seq("a", "b"), "left_anti")
               .join(broadcast(remAll.select(col("a"),
@@ -788,8 +794,8 @@ object Graph {
             // the escape re-aggregates from liveTri: the cascade's
             // sup0 and the full triangle checkpoint are dead weight
             // from here (the round-10 advice leak on this path)
-            org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(sup0)
-            org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(tri)
+            Bridge.unpersistCheckpoint(sup0)
+            Bridge.unpersistCheckpoint(tri)
             escaped = peelShuffle(liveTri)
           } else {
             val fresh = mutable.ArrayBuffer.empty[(Any, Any, Any)]
@@ -807,8 +813,7 @@ object Graph {
             val unknown = fresh.iterator.flatMap(edgesOf)
               .filterNot(baseSup.contains).toSet.toSeq
             if (unknown.nonEmpty) {
-              val uRel = localDf(unknown.map(e =>
-                org.apache.spark.sql.Row(e._1, e._2)), pairSchema())
+              val uRel = pairDf(unknown)
               sup0.join(broadcast(uRel), Seq("a", "b")).collect()
                 .foreach { r =>
                   baseSup((r.get(0), r.get(1))) = r.getLong(2)
@@ -833,27 +838,23 @@ object Graph {
         s"kTruss(k=$k) did not reach a fixed point in $maxIters " +
           "rounds; raise maxIters for deep-peeling graphs")
       else {
-        val removedRows = removedAt.keysIterator.map(e =>
-          org.apache.spark.sql.Row(e._1, e._2)).toSeq
         val decRows = decOf.iterator
           .filter { case (e, _) => !removedAt.contains(e) }
-          .map { case ((x, y), dd) =>
-            org.apache.spark.sql.Row(x, y, dd) }.toSeq
-        val afterRm = if (removedRows.isEmpty) sup0 else sup0
-          .join(broadcast(localDf(removedRows, pairSchema())
+          .map { case ((x, y), dd) => Row(x, y, dd) }.toSeq
+        val afterRm = if (removedAt.isEmpty) sup0 else sup0
+          .join(broadcast(pairDf(removedAt.keysIterator)
             .withColumn("__rm", lit(true))), Seq("a", "b"), "left")
           .filter(col("__rm").isNull)
         val folded = if (decRows.isEmpty) afterRm else afterRm
           .join(broadcast(localDf(decRows, pairSchema(
-            org.apache.spark.sql.types.StructField("__dec",
-              org.apache.spark.sql.types.LongType, nullable = false)))),
+            StructField("__dec", LongType, nullable = false)))),
             Seq("a", "b"), "left")
           .select(col("a"), col("b"),
             (col("support") - coalesce(col("__dec"), lit(0L)))
               .as("support"))
         // the output references only sup0's checkpoint — the triangle
         // set is free to go
-        org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(tri)
+        Bridge.unpersistCheckpoint(tri)
         folded.select(col("a"), col("b"), col("support"))
       }
     }
@@ -974,6 +975,120 @@ object Graph {
     }
   }
 
+  /** The level-synchronous loop behind [[bfsHops]] and [[ssspHops]].
+    * Plans `doubled` (probe key `key`, neighbour `__n`) through
+    * [[planAdjacency]] and seeds the per-node state with `seed`
+    * (`node` plus the operator's value column); round 0's frontier IS
+    * that state. Each round joins the frontier onto the adjacency,
+    * `relax(probed, state, h)` turns the probe into round h's frontier
+    * (`state` carries the shuffle_hash hint while it is provably
+    * hash-table-sized), and `update(state, frontier, h)` folds a
+    * non-empty frontier into the next state.
+    *
+    * Both are checkpointed per round and the previous round's blocks
+    * are freed through the Bridge ([[pageRank]] discipline). The
+    * frontier is a counted checkpoint ([[Bridge.countedCheckpoint]]):
+    * the job that materialises it also yields the size that gates the
+    * loop, the Bloom pushdown and the hint, so a round runs the
+    * frontier's jobs and the state's one checkpoint job and no
+    * separate count. The loop exits early once a frontier comes back
+    * empty. */
+  private def frontierLoop(doubled: DataFrame, key: String, seed: DataFrame,
+      maxHops: Int)(relax: (DataFrame, DataFrame, Int) => DataFrame)(
+      update: (DataFrame, DataFrame, Int) => DataFrame): DataFrame = {
+    val PlannedAdj(adj, adjRows, disk, nBuckets) =
+      planAdjacency(doubled, key)
+    var (state, frontierN) = Bridge.countedCheckpoint(seed)
+    var frontier = state
+    // upper bound on |state| for the hint gate: the state gains at most
+    // the frontier's rows per round
+    var stateN = frontierN
+    var h = 1
+    try {
+      while (frontierN > 0L && h <= maxHops) {
+        // shuffle_hash on the frontier: once the frontier outgrows the
+        // broadcast threshold (measured at the 100× probe decade) Spark
+        // would otherwise SORT-MERGE this join — i.e. sort the full
+        // cached adjacency EVERY round (17.6× on the second probe
+        // decade). The hint builds a hash table of the (small) frontier
+        // per partition and streams adj in place — adj is already
+        // hash-partitioned on the key from before its checkpoint, so
+        // only the frontier moves. The state join keeps the same hint
+        // only while the state is provably hash-table-sized
+        // (HashHintMaxRows); past that it reverts to sort-merge, whose
+        // spill path is the correct behavior for an O(V) build side —
+        // and THAT is where the FRONTIER BLOOM PUSHDOWN engages: a
+        // 2%-fpp filter over the frontier's keys probed inside the
+        // adjacency scan, cutting the sort-merge's adjacency-side sort
+        // input from Θ(|E|) to the frontier's neighborhood. In the hash
+        // regime the filter is measured pure overhead (see [[BloomForceKey]])
+        // — the hinted join already probes an O(1) hash per row.
+        // Exactness is untouched either way: false positives only leak
+        // rows into the exact join behind the filter.
+        val sortMergeRegime = stateN > HashHintMaxRows
+        val probed = if (disk.isDefined) {
+          // disk-bucketed regime: join on (__bk, key) with the frontier's
+          // bucket set pushed into the scan as a STATIC partition filter
+          // (round-14 plan-assertion finding: the r12 design leaned on
+          // DPP, but Spark's PartitionPruning rule only injects the
+          // runtime filter when the probe side carries a selective
+          // predicate — a checkpointed frontier never does, so the
+          // shipped path full-scanned every round. The frontier is
+          // already materialized and bounded, so its distinct bucket ids
+          // — at most min(frontierN, buckets) values — are one tiny
+          // collect, and the resulting IN filter prunes the FILE LISTING
+          // deterministically, no optimizer heuristics involved.)
+          val fB = frontier
+            .withColumn("__bk",
+              pmod(xxhash64(col("node")), lit(nBuckets)).cast("int"))
+            .withColumnRenamed("node", key)
+          if (frontierN <= BloomMaxItems) {
+            val bks = fB.select(col("__bk")).distinct()
+              .collect().map(_.getInt(0))
+            // a frontier that covers every bucket prunes nothing — skip
+            // the degenerate IN(all) filter
+            val pruned = if (bks.length < nBuckets)
+              adj.filter(col("__bk").isin(bks.map(Int.box): _*))
+            else adj
+            pruned.join(broadcast(fB), Seq("__bk", key))
+          } else adj.join(fB, Seq("__bk", key))
+        } else {
+          val fAdj = if ((sortMergeRegime || bloomForced(adj)) &&
+              frontierN <= BloomMaxItems && frontierN * 4 <= adjRows)
+            adj.filter(frontierBloomFilter(frontier, "node", frontierN,
+              col(key)))
+          else adj
+          fAdj.join(frontier.withColumnRenamed("node", key)
+            .hint("shuffle_hash"), Seq(key))
+        }
+        val stateSide =
+          if (sortMergeRegime) state else state.hint("shuffle_hash")
+        val (next, nextN) =
+          Bridge.countedCheckpoint(relax(probed, stateSide, h))
+        if (frontier ne state) Bridge.unpersistCheckpoint(frontier)
+        frontier = next
+        frontierN = nextN
+        if (frontierN > 0L) {
+          val ns = update(state, frontier, h).localCheckpoint()
+          Bridge.unpersistCheckpoint(state)
+          state = ns
+          stateN += frontierN
+        }
+        h += 1
+      }
+      if (disk.isEmpty) Bridge.unpersistCheckpoint(adj)
+      if (frontier ne state) Bridge.unpersistCheckpoint(frontier)
+      // the final state checkpoint is the return value, caller-owned
+      state
+    } finally {
+      // the returned state is checkpointed per round, so the scratch
+      // layout is droppable the moment the loop exits — and it must
+      // not LEAK if the loop throws (job cancellation, executor loss),
+      // hence the finally (round-12 advice item)
+      disk.foreach(dir => deleteScratch(adj, dir))
+    }
+  }
+
   /** Multi-source BFS hop distance over an UNDIRECTED edge list:
     * returns `(node, hops)` for every node reachable from `seeds`
     * within `maxHops` hops (seeds themselves at hops 0; unreachable
@@ -982,129 +1097,25 @@ object Graph {
     * frontier onto the adjacency list plus one anti-join against the
     * visited set, all partitioned on the node key, so a round's cost
     * is proportional to the edges TOUCHED by the frontier, never the
-    * whole graph. The frontier and visited set are localCheckpoint'ed
-    * per round and the previous round's blocks are freed through the
-    * Bridge ([[pageRank]] discipline); the loop exits early once a
-    * frontier comes back empty. Bounded `maxHops` keeps the result
-    * oracle-checkable (a recursive SQL walk with the same cap) and is
-    * the honest cluster contract: unbounded BFS on a 100 TB graph is
-    * a diameter-length chain of barriers.
+    * whole graph. The rounds run in [[frontierLoop]] (a counted
+    * frontier checkpoint, early exit on an empty one). Bounded
+    * `maxHops` keeps the result oracle-checkable (a recursive SQL walk
+    * with the same cap) and is the honest cluster contract: unbounded
+    * BFS on a 100 TB graph is a diameter-length chain of barriers.
     */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
               seeds: DataFrame, seedCol: String,
               maxHops: Int): DataFrame = {
     require(maxHops >= 1)
-    val norm = edges.select(
-        least(col(srcCol), col(dstCol)).as("__lo"),
-        greatest(col(srcCol), col(dstCol)).as("__hi"))
-      .filter(col("__lo") =!= col("__hi"))
-      .distinct()
-    // hash-partition the doubled adjacency on the probe key BEFORE the
-    // checkpoint: LogicalRDD keeps the partitioning, so when a round's
-    // frontier is too big to broadcast the join reuses this layout and
-    // only the frontier shuffles — the graph never moves again
-    val doubled = norm
-      .select(col("__lo").as("__w"), col("__hi").as("__n"))
-      .unionAll(norm.select(col("__hi").as("__w"),
-        col("__lo").as("__n")))
-    val PlannedAdj(adj, adjRows, disk, nBuckets) =
-      planAdjacency(doubled, "__w")
-    var frontier = seeds.select(col(seedCol).as("node")).distinct()
-      .localCheckpoint()
-    var frontierN = frontier.count()
-    var visited = frontier.withColumn("hops", lit(0)).localCheckpoint()
-    var visitedN = frontierN
-    var h = 1
-    var done = frontierN == 0L
-    try {
-    while (!done && h <= maxHops) {
-      // shuffle_hash on the frontier: once the frontier outgrows the
-      // broadcast threshold (measured at the 100× probe decade) Spark
-      // would otherwise SORT-MERGE this join — i.e. sort the full
-      // cached adjacency EVERY round (17.6× on the second probe
-      // decade). The hint builds a hash table of the (small) frontier
-      // per partition and streams adj in place — adj is already
-      // hash-partitioned on __w from before its checkpoint, so only
-      // the frontier moves. The visited anti-join keeps the same hint
-      // only while visited is provably hash-table-sized
-      // (HashHintMaxRows); past that it reverts to sort-merge, whose
-      // spill path is the correct behavior for an O(V) build side —
-      // and THAT is where the FRONTIER BLOOM PUSHDOWN engages: a
-      // 2%-fpp filter over the frontier's keys probed inside the
-      // adjacency scan, cutting the sort-merge's adjacency-side sort
-      // input from Θ(|E|) to the frontier's neighborhood. In the hash
-      // regime the filter is measured pure overhead (see [[BloomForceKey]])
-      // — the hinted join already probes an O(1) hash per row.
-      // Exactness is untouched either way: false positives only leak
-      // rows into the exact join behind the filter.
-      val sortMergeRegime = visitedN > HashHintMaxRows
-      val vis = visited.select(col("node"))
-      val visSide = if (!sortMergeRegime) vis.hint("shuffle_hash")
-        else vis
-      val probed = if (disk.isDefined) {
-        // disk-bucketed regime: join on (__bk, __w) with the frontier's
-        // bucket set pushed into the scan as a STATIC partition filter
-        // (round-14 plan-assertion finding: the r12 design leaned on
-        // DPP, but Spark's PartitionPruning rule only injects the
-        // runtime filter when the probe side carries a selective
-        // predicate — a checkpointed frontier never does, so the
-        // shipped path full-scanned every round. The frontier is
-        // already materialized and bounded, so its distinct bucket ids
-        // — at most min(frontierN, buckets) values — are one tiny
-        // collect, and the resulting IN filter prunes the FILE LISTING
-        // deterministically, no optimizer heuristics involved.)
-        val fB = frontier
-          .withColumn("__bk",
-            pmod(xxhash64(col("node")), lit(nBuckets)).cast("int"))
-          .withColumnRenamed("node", "__w")
-        if (frontierN <= BloomMaxItems) {
-          val bks = fB.select(col("__bk")).distinct()
-            .collect().map(_.getInt(0))
-          // a frontier that covers every bucket prunes nothing — skip
-          // the degenerate IN(all) filter
-          val pruned = if (bks.length < nBuckets)
-            adj.filter(col("__bk").isin(bks.map(Int.box): _*))
-          else adj
-          pruned.join(broadcast(fB), Seq("__bk", "__w"))
-        } else adj.join(fB, Seq("__bk", "__w"))
-      } else {
-        val fAdj = if ((sortMergeRegime || bloomForced(adj)) &&
-            frontierN <= BloomMaxItems && frontierN * 4 <= adjRows)
-          adj.filter(frontierBloomFilter(frontier, "node", frontierN,
-            col("__w")))
-        else adj
-        fAdj.join(frontier.withColumnRenamed("node", "__w")
-          .hint("shuffle_hash"), Seq("__w"))
-      }
-      val next = probed
-        .select(col("__n").as("node")).distinct()
-        .join(visSide, Seq("node"), "left_anti")
-        .localCheckpoint()
-      org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(frontier)
-      frontier = next
-      frontierN = frontier.count()
-      if (frontierN == 0L) { done = true }
-      else {
-        val nv = visited
-          .unionAll(frontier.withColumn("hops", lit(h)))
-          .localCheckpoint()
-        org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(visited)
-        visited = nv
-        visitedN += frontierN
-      }
-      h += 1
-    }
-    if (disk.isEmpty)
-      org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(adj)
-    org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(frontier)
-    // the final visited checkpoint is the return value, caller-owned
-    visited
-    } finally {
-      // the returned visited table is checkpointed per round, so the
-      // scratch layout is droppable the moment the loop exits — and
-      // it must not LEAK if the loop throws (job cancellation,
-      // executor loss), hence the finally (round-12 advice item)
-      disk.foreach(dir => deleteScratch(visited, dir))
+    frontierLoop(
+      bothWays(undirected(edges, srcCol, dstCol), "__w", "__n"), "__w",
+      seeds.select(col(seedCol).as("node")).distinct()
+        .withColumn("hops", lit(0)),
+      maxHops) { (probed, visited, _) =>
+      probed.select(col("__n").as("node")).distinct()
+        .join(visited.select(col("node")), Seq("node"), "left_anti")
+    } { (visited, frontier, h) =>
+      visited.unionAll(frontier.withColumn("hops", lit(h)))
     }
   }
 
@@ -1117,8 +1128,8 @@ object Graph {
     * distance table) onto the adjacency, takes the per-node min of the
     * proposals, and keeps only strict improvements — so a round's cost
     * is proportional to edges touched by still-improving nodes, and
-    * the loop exits early once nothing improves. Same checkpoint/free
-    * discipline as [[bfsHops]]; the hop cap is the honest cluster
+    * the loop exits early once nothing improves. Same rounds as
+    * [[bfsHops]] ([[frontierLoop]]); the hop cap is the honest cluster
     * contract (and what makes a recursive-walk SQL oracle finite).
     */
   def ssspHops(edges: DataFrame, srcCol: String, dstCol: String,
@@ -1132,91 +1143,21 @@ object Graph {
       .filter(col("__lo") =!= col("__hi") && col("__w") >= 0)
       .groupBy(col("__lo"), col("__hi"))
       .agg(min(col("__w")).as("__w")) // parallel edges: cheapest wins
-    val doubled = norm
-      .select(col("__lo").as("__s"), col("__hi").as("__n"), col("__w"))
-      .unionAll(norm.select(col("__hi").as("__s"),
-        col("__lo").as("__n"), col("__w")))
-    // opt-in disk-bucketed adjacency — see [[AdjScratchKey]]/bfsHops
-    val PlannedAdj(adj, adjRows, disk, nBuckets) =
-      planAdjacency(doubled, "__s")
-    var dist = seeds.select(col(seedCol).as("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint()
-    var frontier = dist
-    var frontierN = frontier.count()
-    // upper bound on |dist| for the hint gate: dist gains at most the
-    // frontier's rows per round (improved rows replace, new rows add)
-    var distN = frontierN
-    var h = 1
-    var done = frontierN == 0L
-    try {
-    while (!done && h <= maxHops) {
+    frontierLoop(bothWays(norm, "__s", "__n", col("__w")), "__s",
+      seeds.select(col(seedCol).as("node")).distinct()
+        .withColumn("dist", lit(0L)),
+      maxHops) { (probed, dist, _) =>
       // proposals from the frontier only; min per node, then keep
-      // strict improvements vs the current distance table.
-      // Gated shuffle_hash + sort-merge-regime Bloom: see [[bfsHops]]
-      // — while dist fits a per-partition hash table the hinted plan
-      // is measured best (a bloom there was +23% at the 10× probe);
-      // past the gate the plan reverts to spill-safe sort-merge and
-      // the frontier Bloom cuts the adjacency-side sort input to the
-      // frontier's neighborhood (false positives only leak rows into
-      // the exact join).
-      val sortMergeRegime = distN > HashHintMaxRows
-      val distSide = if (!sortMergeRegime)
-        dist.hint("shuffle_hash") else dist
-      val probed = if (disk.isDefined) {
-        // static bucket-set partition filter — see [[bfsHops]]'s disk
-        // branch for why this replaces the DPP assumption
-        val fB = frontier
-          .withColumn("__bk",
-            pmod(xxhash64(col("node")), lit(nBuckets)).cast("int"))
-          .withColumnRenamed("node", "__s")
-        if (frontierN <= BloomMaxItems) {
-          val bks = fB.select(col("__bk")).distinct()
-            .collect().map(_.getInt(0))
-          val pruned = if (bks.length < nBuckets)
-            adj.filter(col("__bk").isin(bks.map(Int.box): _*))
-          else adj
-          pruned.join(broadcast(fB), Seq("__bk", "__s"))
-        } else adj.join(fB, Seq("__bk", "__s"))
-      } else {
-        val fAdj = if ((sortMergeRegime || bloomForced(adj)) &&
-            frontierN <= BloomMaxItems && frontierN * 4 <= adjRows)
-          adj.filter(frontierBloomFilter(frontier, "node", frontierN,
-            col("__s")))
-        else adj
-        fAdj.join(frontier.withColumnRenamed("node", "__s")
-          .hint("shuffle_hash"), Seq("__s"))
-      }
-      val next = probed
+      // strict improvements vs the current distance table
+      probed
         .groupBy(col("__n").as("node"))
         .agg(min(col("dist") + col("__w")).as("__cand"))
-        .join(distSide, Seq("node"), "left")
+        .join(dist, Seq("node"), "left")
         .filter(col("dist").isNull || col("__cand") < col("dist"))
         .select(col("node"), col("__cand").as("dist"))
-        .localCheckpoint()
-      if (frontier ne dist)
-        org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(frontier)
-      frontier = next
-      frontierN = frontier.count()
-      if (frontierN == 0L) { done = true }
-      else {
-        val nd = dist.join(frontier.select(col("node")), Seq("node"),
-            "left_anti")
-          .unionAll(frontier)
-          .localCheckpoint()
-        org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(dist)
-        dist = nd
-        distN += frontierN
-      }
-      h += 1
-    }
-    if (disk.isEmpty)
-      org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(adj)
-    if (frontier ne dist)
-      org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(frontier)
-    dist
-    } finally {
-      // scratch must not leak when the loop throws — see bfsHops
-      disk.foreach(dir => deleteScratch(dist, dir))
+    } { (dist, frontier, _) =>
+      dist.join(frontier.select(col("node")), Seq("node"), "left_anti")
+        .unionAll(frontier)
     }
   }
 
@@ -1236,8 +1177,9 @@ object Graph {
     * one is bounded by |roots| × |nodes| per round regardless of path
     * structure. Each round is one hash join (frontier ⋈ edges on the
     * node key — the same partitioning every round, so the exchange
-    * reuses) + one hash aggregate; frontiers are localCheckpoint'ed
-    * and freed on the [[pageRank]] discipline.
+    * reuses) + one hash aggregate; each frontier is a counted
+    * checkpoint (its size ends the loop, with no job of its own) and
+    * is freed on the [[pageRank]] discipline.
     *
     * THROWS if `maxDepth` rounds leave a non-empty frontier: on a DAG
     * that means the depth bound is too small; on a cyclic input the
@@ -1255,37 +1197,35 @@ object Graph {
       .localCheckpoint()
     val r = roots.select(col(rootCol).as("__root")).distinct()
     // fixed column order throughout: unionAll is position-based
-    var frontier = e
+    var (frontier, frontierN) = Bridge.countedCheckpoint(e
       .join(broadcast(r), col("__p") === col("__root"), "left_semi")
       .groupBy(col("__p").as("root"), col("__c").as("node"))
       .agg(sum(col("__q")).as("mult"), count(lit(1)).as("n_paths"))
       .select(col("root"), col("node"), col("mult"),
-        lit(1).as("depth"), col("n_paths"))
-      .localCheckpoint()
+        lit(1).as("depth"), col("n_paths")))
     var acc = frontier
     var depth = 1
-    while (!frontier.isEmpty && depth < maxDepth) {
-      val next = frontier
+    while (frontierN > 0L && depth < maxDepth) {
+      val (next, nextN) = Bridge.countedCheckpoint(frontier
         .join(e, col("node") === col("__p"))
         .groupBy(col("root"), col("__c").as("__node"))
         .agg(sum(col("mult") * col("__q")).as("mult"),
           sum(col("n_paths")).as("n_paths"))
         .select(col("root"), col("__node").as("node"), col("mult"),
-          lit(depth + 1).as("depth"), col("n_paths"))
-        .localCheckpoint()
+          lit(depth + 1).as("depth"), col("n_paths")))
       // round 1 aliases acc and frontier — freeing the shared blocks
       // here would yank them out from under the accumulator's union
-      if (frontier ne acc)
-        org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(frontier)
+      if (frontier ne acc) Bridge.unpersistCheckpoint(frontier)
       frontier = next
-      if (!frontier.isEmpty) {
+      frontierN = nextN
+      if (frontierN > 0L) {
         val na = acc.unionAll(frontier).localCheckpoint()
-        org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(acc)
+        Bridge.unpersistCheckpoint(acc)
         acc = na
       }
       depth += 1
     }
-    if (!frontier.isEmpty) throw new IllegalStateException(
+    if (frontierN > 0L) throw new IllegalStateException(
       s"bomExplode did not exhaust the DAG in $maxDepth rounds; " +
         "raise maxDepth (or the input has a cycle — the closure of a " +
         "cyclic graph is infinite)")
@@ -1323,8 +1263,8 @@ object Graph {
     * (not Bellman-Ford's improved-only frontier): on a DAG the round
     * count is the hop depth, and re-proposals from non-final values
     * are monotonically absorbed by the final per-node max — one hash
-    * join + one hash aggregate per round, frontiers checkpointed and
-    * freed on the [[pageRank]] discipline, nothing on the driver.
+    * join + one hash aggregate per round, each frontier a counted
+    * checkpoint (its size ends the loop), nothing on the driver.
     *
     * THROWS if `maxDepth` rounds leave a non-empty frontier — on a
     * cyclic input the longest path is infinite and a partial answer
@@ -1336,9 +1276,8 @@ object Graph {
                    edges: DataFrame, predCol: String, succCol: String,
                    maxDepth: Int = 64): DataFrame = {
     require(maxDepth >= 1)
-    val n = nodes.select(col(nodeCol).as("node"),
-        col(durCol).cast("long").as("dur"))
-      .localCheckpoint()
+    val (n, nCount) = Bridge.countedCheckpoint(nodes.select(
+      col(nodeCol).as("node"), col(durCol).cast("long").as("dur")))
     // one edge table for both passes, successor duration riding along:
     // forward adds __cd on arrival at __c, backward adds __cd leaving __c
     val e = edges.select(col(predCol).as("__p"), col(succCol).as("__c"))
@@ -1361,21 +1300,21 @@ object Graph {
       // 4.4 s → 2.5 s. The union of k checkpointed frontiers has
       // lineage depth 1, so nothing re-derives.
       val rounds = collection.mutable.ListBuffer.empty[DataFrame]
-      var frontier = start.localCheckpoint()
+      var (frontier, frontierN) = Bridge.countedCheckpoint(start)
       rounds += frontier
       var depth = 1
-      while (!frontier.isEmpty && depth < maxDepth) {
-        val next = frontier
+      while (frontierN > 0L && depth < maxDepth) {
+        val (next, nextN) = Bridge.countedCheckpoint(frontier
           .withColumnRenamed("node", fromCol)
           .join(e, Seq(fromCol))
           .groupBy(col(toCol).as("node"))
-          .agg(max(col("len") + col("__cd")).as("len"))
-          .localCheckpoint()
+          .agg(max(col("len") + col("__cd")).as("len")))
         frontier = next
-        if (!frontier.isEmpty) rounds += frontier
+        frontierN = nextN
+        if (frontierN > 0L) rounds += frontier
         depth += 1
       }
-      if (!frontier.isEmpty) throw new IllegalStateException(
+      if (frontierN > 0L) throw new IllegalStateException(
         s"criticalPath did not exhaust the DAG in $maxDepth rounds; " +
           "raise maxDepth (or the input has a cycle — the longest " +
           "path of a cyclic graph is infinite)")
@@ -1412,9 +1351,8 @@ object Graph {
     // drop its nodes — a plausible-looking partial answer. Every node
     // of a true DAG lies on a source→sink path, so ef/lt covering
     // fewer nodes than the input is proof of a source-less (or
-    // sink-less) cycle. Three 1-row count jobs over checkpointed
-    // frames — driver-side constants, not data movement.
-    val nCount = n.count()
+    // sink-less) cycle. n's count came with its checkpoint; ef and lt
+    // are two 1-row count jobs — driver-side constants, not data movement.
     val efCount = ef.count()
     val ltCount = lt.count()
     if (efCount < nCount || ltCount < nCount) throw new IllegalStateException(
@@ -1472,10 +1410,10 @@ object Graph {
           least(col("label"), coalesce(col("__nl"), col("label")))
             .as("label"))
         .localCheckpoint()
-      org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(prevCk)
+      Bridge.unpersistCheckpoint(prevCk)
       prevCk = labels
     }
-    org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(e)
+    Bridge.unpersistCheckpoint(e)
     labels
   }
 }

@@ -42,8 +42,8 @@ import org.apache.spark.sql.functions._
   *    documented structural stand-in — see
   *    [[graft.functions.Mpeg1Audio.WindowD]]). Only motion-
   *    compensated/perceptual TRANSFORM codecs (H.264/VP9, MP3/AAC)
-  *    keep the DETERMINISTIC FAKE tier (clearly marked `fake*` below):
-  *    features derived from xxhash64 of the payload. The surrounding plumbing —
+  *    have no decoder; specs stand them in with deterministic fakes
+  *    derived from xxhash64 of the payload. The surrounding plumbing —
   *    binary representation, schemas, batch shapes, per-partition codec
   *    lifecycle ([[decodePartitions]]) — is the real contract a
   *    JNI/ffmpeg-backed codec drops into unchanged.
@@ -53,27 +53,6 @@ object Multimodal {
   /** Pack a string column into the opaque binary payload representation
     * (stand-in for raw image/audio bytes at rest in parquet). */
   def toPayload(c: Column): Column = c.cast("binary")
-
-  /** STUB — deterministic fake of an image-header decode. A real
-    * implementation replaces the hash arithmetic with an actual codec
-    * call per row (mapPartitions, batch-local); the output schema is the
-    * contract. */
-  def fakeDecodeImageMeta(payload: Column): Column =
-    struct(
-      (pmod(xxhash64(payload), lit(1920L)) + 1).cast("int").as("width"),
-      (pmod(xxhash64(lit(1), payload), lit(1080L)) + 1).cast("int")
-        .as("height"),
-      (pmod(xxhash64(lit(2), payload), lit(3L)) + 1).cast("int")
-        .as("channels"),
-      octet_length(payload).as("n_bytes"))
-
-  /** STUB — deterministic fake feature extraction: a `dim`-length float
-    * vector derived from seeded hashes of the payload. Real impl: model
-    * inference over payload batches; same schema, same partitioning. */
-  def fakeFeatures(payload: Column, dim: Int): Column =
-    transform(sequence(lit(0), lit(dim - 1)),
-      i => (pmod(xxhash64(i, payload), lit(2000L)).cast("double") / 1000.0
-        - 1.0).cast("float"))
 
   /** Frame sampling: slice `n` fixed-offset windows out of the payload —
     * the Spark-side shape of video frame extraction (array-of-binary per
@@ -604,16 +583,5 @@ object Multimodal {
           RouteRow(id, "rle8",
             f.nFrames.toLong * f.width * f.height, f.meanVal)))
     }
-  }
-
-  /** STUB codec for environments without media libraries: deterministic
-    * header fake from the payload bytes. */
-  def stubCodec(bytes: Array[Byte]): (Int, Int, Int) = {
-    var h = 1125899906842597L
-    var i = 0
-    while (i < bytes.length) { h = 31L * h + bytes(i); i += 1 }
-    (math.floorMod(h, 1920L).toInt + 1,
-      math.floorMod(h * 31L, 1080L).toInt + 1,
-      math.floorMod(h * 7L, 3L).toInt + 1)
   }
 }

@@ -39,6 +39,21 @@ object Bridge {
       case _ =>
     }
 
+  /** `df` local-checkpointed, with its row count, from one pass: the
+    * checkpoint is taken lazily and its own RDD is counted, and that
+    * count job is the one that materialises the blocks and cuts the
+    * lineage. `localCheckpoint()` then `count()` runs the checkpoint's
+    * job and then a second query over the checkpoint (two more jobs
+    * under AQE). The count job runs outside any SQL execution; the
+    * checkpoint's own execution still reaches QueryExecutionListeners. */
+  def countedCheckpoint(df: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, Long) = {
+    val ck = df.localCheckpoint(eager = false)
+    // a checkpoint's plan is always the one LogicalRDD over its RDD
+    (ck, ck.queryExecution.analyzed
+      .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.count())
+  }
+
   /** A `localCheckpoint`ed Dataset re-wrapped so its LogicalRDD declares
     * `hashpartitioning(key, n)`: a checkpoint built under AQE records no
     * output partitioning, so every consumer join would exchange it again.
@@ -61,13 +76,6 @@ object Bridge {
         }
       case _ => df
     }
-
-  /** True iff the session's CacheManager holds no cached plan — the
-    * no-leak assertion operators that once persisted internally are
-    * spec-pinned against (sharedState is `private[sql]`). */
-  def cacheIsEmpty(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager.isEmpty
 
   /** Wrap a custom logical plan in a DataFrame (Dataset.ofRows is
     * `private[sql]`) — the entry point for library-defined operators that

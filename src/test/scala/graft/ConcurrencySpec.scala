@@ -13,12 +13,14 @@ class ConcurrencySpec extends SparkSpec {
   private val sf =
     Paths.get(GraftSession.sfDir).resolveSibling("sf0.001").toString
 
-  // traversals (the checkpointed adjacency), triangles, pageRank, dedup,
+  // traversals (the checkpointed adjacency), triangles, pageRank, the
+  // critical path (two driver threads inside one query), dedup,
   // percentiles, ANN and the MPEG-1 PCM decoder (the window table)
   private val names = Seq("q149_bfs_hops", "q166_sssp", "q131_triangles",
-    "q121_pagerank", "q22_dedup_exact", "q65_dedup_survivorship",
-    "q33_percentiles", "q50_quantiles", "q27_embed_ann_ivf",
-    "q96_ann_two_level", "q333_mpeg1_l2_pcm", "q01_pricing_summary")
+    "q121_pagerank", "q255_critical_path", "q22_dedup_exact",
+    "q65_dedup_survivorship", "q33_percentiles", "q50_quantiles",
+    "q27_embed_ann_ivf", "q96_ann_two_level", "q333_mpeg1_l2_pcm",
+    "q01_pricing_summary")
 
   /** Row count and SHA-256 of the sorted rows. */
   private def digest(name: String): (Int, String) = {

@@ -1332,7 +1332,7 @@ class PlanShapeSpec extends SparkSpec {
     // ever moves the full candidate table
     assert("WindowGroupLimit".r.findAllIn(finalSection).length >= 8,
       s"rank filters no longer push as WindowGroupLimit partials:\n$s")
-    assert(org.apache.spark.sql.graft.Bridge.cacheIsEmpty(spark),
+    assert(org.apache.spark.sql.graft.TestBridge.cacheIsEmpty(spark),
       "marginMine must not leave cached tables")
   }
 }

@@ -192,8 +192,8 @@ class DecodeGoldenSpec extends AnyFunSuite {
           (f, j) => f * 100 + j * 7 + s, (f, t) => (t * 13 + f + s) % 41 - 20)
         case 1 => FlacAudio.encodeLpc(rate, bs, nf, Array(3, -2, 1), 6, 2, 4,
           (f, j) => f * 50 + j + s, (f, t) => (t * 5 + f + s) % 31 - 15)
-        case 2 => FlacAudio.encodeConstant(rate, bs, nf, f => f * 300 - s)
-        case 3 => FlacAudio.encodeVerbatim(rate, bs, nf, (f, t) => t * 97 + f - s)
+        case 2 => FlacFixtures.encodeConstant(rate, bs, nf, f => f * 300 - s)
+        case 3 => FlacFixtures.encodeVerbatim(rate, bs, nf, (f, t) => t * 97 + f - s)
         case 4 => FlacAudio.encodeMultiVerbatim(rate, bs, nf, 1 + k % 4,
           (c, f, t) => c * 1000 + t * 11 + f + s)
         case 5 => FlacAudio.encodeDepthVerbatim(rate, bs, nf,

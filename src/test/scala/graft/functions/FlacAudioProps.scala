@@ -211,10 +211,10 @@ object FlacAudioProps extends Properties("graft.flac") {
       // floorMod keeps the synthetic samples inside int16 (Scala's %
       // of a negative would leave the valid range)
       def cv(f: Int) = math.floorMod(v + f, 65536) - 32768
-      val c = FlacAudio.decode(FlacAudio.encodeConstant(8000, bs, nf, cv))
+      val c = FlacAudio.decode(FlacFixtures.encodeConstant(8000, bs, nf, cv))
       def sm(f: Int, t: Int) =
         math.floorMod(v + f * 31 + t * 17, 65536) - 32768
-      val vb = FlacAudio.decode(FlacAudio.encodeVerbatim(8000, bs, nf, sm))
+      val vb = FlacAudio.decode(FlacFixtures.encodeVerbatim(8000, bs, nf, sm))
       val cAll = (0 until nf).flatMap(f => Seq.fill(bs)(cv(f)))
       val vAll = (0 until nf).flatMap(f => (0 until bs).map(sm(f, _)))
       c.exists(statsMatch(_, cAll, 8000, nf)) &&

@@ -350,6 +350,26 @@ class GraphSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.adaptive.enabled") === "true")
   }
 
+  test("bfsHops and bomExplode job counts: each round's frontier size " +
+      "comes with its checkpoint") {
+    // pinned at the counted checkpoint; a separate count() or isEmpty
+    // per round adds jobs on top (AQE runs every query stage as a job)
+    val path = (0 until 6).map(i => (s"p$i", s"p${i + 1}"))
+    val tri = Seq(("t0", "t1"), ("t1", "t2"), ("t0", "t2"))
+    val edges = (path ++ tri).toDF("src", "dst")
+    val seeds = Seq("p0").toDF("node")
+    val bfs = org.apache.spark.sql.graft.TestBridge.recorded(spark)(
+      Graph.bfsHops(edges, "src", "dst", seeds, "node", 4).collect())
+    assert(bfs.value.length === 5)
+    val bom = Seq(("A", "B", 2L), ("A", "C", 3L), ("B", "D", 5L),
+      ("C", "D", 7L), ("D", "E", 1L)).toDF("parent", "child", "qty")
+    val exploded = org.apache.spark.sql.graft.TestBridge.recorded(spark)(
+      Graph.bomExplode(bom, "parent", "child", "qty",
+        Seq("A").toDF("r"), "r").collect())
+    assert(exploded.value.length === 4)
+    assert((bfs.jobs, exploded.jobs) === ((25, 17)))
+  }
+
   test("ssspHops: relaxation beats the direct edge; hop cap binds") {
     // a-b direct costs 10, but a-c-b costs 2 — the cheap route needs
     // 2 hops, so maxHops=1 must report 10 and maxHops>=2 report 2.

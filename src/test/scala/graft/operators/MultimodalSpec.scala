@@ -19,19 +19,19 @@ class MultimodalSpec extends SparkSpec {
 
   test("decodePartitions runs the injected codec per row, batch-local") {
     val metas = Multimodal.decodePartitions(df, "id", "payload")(
-      Multimodal.stubCodec).collect().sortBy(_.id)
+      MultimodalStubs.stubCodec).collect().sortBy(_.id)
     assert(metas.length === 2)
     assert(metas.forall(m => m.width >= 1 && m.width <= 1920))
     assert(metas.forall(m => m.channels >= 1 && m.channels <= 3))
     assert(metas(0).n_bytes === 11)
     // deterministic: same payload → same fake header
     val again = Multimodal.decodePartitions(df, "id", "payload")(
-      Multimodal.stubCodec).collect().sortBy(_.id)
+      MultimodalStubs.stubCodec).collect().sortBy(_.id)
     assert(metas.toSeq === again.toSeq)
   }
 
   test("expression-form fake decode matches its schema contract") {
-    val m = df.select(Multimodal.fakeDecodeImageMeta($"payload").as("m"))
+    val m = df.select(MultimodalStubs.fakeDecodeImageMeta($"payload").as("m"))
       .select($"m.width", $"m.height", $"m.channels", $"m.n_bytes")
     assert(m.schema.fieldNames.toSeq ===
       Seq("width", "height", "channels", "n_bytes"))
@@ -49,7 +49,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("fakeFeatures emits a dim-length float vector in [-1, 1]") {
-    val v = df.select(Multimodal.fakeFeatures($"payload", 8).as("v"))
+    val v = df.select(MultimodalStubs.fakeFeatures($"payload", 8).as("v"))
       .collect()(0).getAs[collection.Seq[Float]]("v")
     assert(v.length === 8)
     assert(v.forall(x => x >= -1.0f && x <= 1.0f))
@@ -261,7 +261,7 @@ class MultimodalSpec extends SparkSpec {
     val corpus = (1L to 40L).map(i => (i, s"payload number $i body"))
       .toDF("id", "txt")
       .withColumn("payload", Multimodal.toPayload($"txt"))
-      .withColumn("vec", Multimodal.fakeFeatures($"payload", 8))
+      .withColumn("vec", MultimodalStubs.fakeFeatures($"payload", 8))
     val queries = corpus.filter($"id" <= 2)
     val top = Similarity.bruteForceTopK(corpus, "id", "vec",
       queries, "id", "vec", k = 3)

@@ -572,7 +572,7 @@ class OperatorsSpec extends SparkSpec with TableDrivenPropertyChecks {
     // round-13 verdict item: marginMine must not leak a cached table
     // into a long-lived session — the exchange-reuse form caches
     // nothing at all
-    assert(org.apache.spark.sql.graft.Bridge.cacheIsEmpty(spark),
+    assert(org.apache.spark.sql.graft.TestBridge.cacheIsEmpty(spark),
       "marginMine left a cached table behind")
   }
 

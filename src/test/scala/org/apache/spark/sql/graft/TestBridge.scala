@@ -17,6 +17,13 @@ object TestBridge {
   def optimizerRules(ext: SparkSessionExtensions, spark: SparkSession) =
     ext.buildOptimizerRules(spark)
 
+  /** True iff the session's CacheManager holds no cached plan — the
+    * no-leak assertion operators that once persisted internally are
+    * spec-pinned against (sharedState is `private[sql]`). */
+  def cacheIsEmpty(spark: SparkSession): Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
+
   /** Blocks until every posted listener event has been delivered
     * (`listenerBus` is private[spark]). */
   def drainListeners(spark: SparkSession): Unit =

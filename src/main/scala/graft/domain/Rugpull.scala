@@ -3,11 +3,10 @@ package graft.domain
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, Literal, SubqueryExpression, UserDefinedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType}
+import org.apache.spark.sql.types.DataType
 
 import graft.operators.Tagging
 
@@ -66,10 +65,19 @@ object Rugpull {
     *    non-empty (O25);
     *  - signature = blockTime-txIdx-1 (O26).
     *
+    * The plan is one generator per block, [[LedgerKernel]], which folds
+    * each transaction in plain Scala (the rules above up to O25), then a
+    * distinct, which emits a block that arrives twice in one batch once,
+    * and the enrichment. It holds no join and no object-hash or sort
+    * aggregate; over a file scan it runs one shuffle (the distinct's)
+    * and two jobs.
+    *
     * The three dimensions are read to the driver once per call and enter
-    * the plan as literal lookups, so each must be broadcast-sized: one
-    * whose planner estimate passes `spark.sql.maxBroadcastTableSize` is
-    * refused before any job runs.
+    * the plan as lookups: the hot set and the prices as hash tables,
+    * broadcast past 64 KiB instead of riding in every task, the tags as
+    * IN-sets. Each must be broadcast-sized: one whose planner estimate
+    * passes `spark.sql.maxBroadcastTableSize` is refused before any job
+    * runs.
     *
     * @param blocks      parsed block DataFrame (schema [[BlockSchema.block]])
     * @param hot         watch-list dimension: column `addr`
@@ -101,24 +109,52 @@ object Rugpull {
 
   private[graft] object Dims {
     def read(hot: DataFrame, watchlists: DataFrame, prices: DataFrame)
-        : Dims = {
+        : Dims = reader(hot, watchlists, prices)()
+
+    /** Reads the three dimensions on every call, except that a constant
+      * one is read on the first call only and kept: every leaf of its
+      * analysed plan is a local relation and every expression is
+      * deterministic, with no UDF, subquery or leaf other than a column
+      * or a literal, so nothing it reads can change. Every other
+      * dimension is re-read on every call (O9). */
+    def reader(hot: DataFrame, watchlists: DataFrame, prices: DataFrame)
+        : () => Dims = {
       // a NULL key never matched a join: drop the row
       def keyed(rows: Seq[Row], keys: Int) =
         rows.filter(r => (0 until keys).forall(!r.isNullAt(_)))
       def addrs(rows: Seq[Row], i: Int) =
         rows.map(_.getString(i)).distinct.sorted
-      val tagRows = keyed(collect("watchlists", watchlists, "kind", "addr"), 2)
-      val priceRows =
+      val readHot = once(hot)(
+        addrs(keyed(collect("hot", hot, "addr"), 1), 0))
+      val readTags = once(watchlists)(
+        keyed(collect("watchlists", watchlists, "kind", "addr"), 2)
+          .groupBy(_.getString(0))
+          .map { case (kind, rs) => kind -> addrs(rs, 1) })
+      val readPrices = once(prices)(
         keyed(collect("prices", prices, "vault", "side", "price_usd"), 2)
-      Dims(
-        addrs(keyed(collect("hot", hot, "addr"), 1), 0),
-        tagRows.groupBy(_.getString(0))
-          .map { case (kind, rs) => kind -> addrs(rs, 1) },
-        priceRows.groupBy(_.getString(1)).map { case (side, rs) =>
-          side -> rs.groupBy(_.getString(0))
-            .map { case (vault, ps) => vault -> ps.map(_.get(2)).asJava }
-        },
-        prices.schema("price_usd").dataType)
+          .groupBy(_.getString(1)).map { case (side, rs) =>
+            side -> rs.groupBy(_.getString(0))
+              .map { case (vault, ps) => vault -> ps.map(_.get(2)).asJava }
+          })
+      val priceType = prices.schema("price_usd").dataType
+      () => Dims(readHot(), readTags(), readPrices(), priceType)
+    }
+
+    private def once[T](dim: DataFrame)(read: => T): () => T =
+      if (constant(dim)) {
+        lazy val kept = read
+        () => kept
+      } else () => read
+
+    private def constant(dim: DataFrame): Boolean = {
+      val plan = dim.queryExecution.analyzed
+      def varies(e: Expression): Boolean = e match {
+        case _: Attribute | _: Literal => false
+        case _: UserDefinedExpression | _: SubqueryExpression => true
+        case _ => !e.deterministic || e.children.isEmpty
+      }
+      plan.collectLeaves().forall(_.isInstanceOf[LocalRelation]) &&
+        !plan.exists(_.expressions.exists(_.exists(varies)))
     }
 
     /** `cols` of `dim` on the driver, refused before any job runs when the
@@ -141,114 +177,48 @@ object Rugpull {
 
   /** [[tokenFlows]] over dimensions already read. */
   private[graft] def tokenFlows(blocks: DataFrame, dims: Dims): DataFrame = {
-    // One pass per block: the scan feeds a single chain of generators, a
-    // hot-address filter and two aggregates sharing one shuffle. The
-    // dimensions are literals in the plan: no join, no broadcast.
+    // One pass per block: the scan feeds one generator, the per-block
+    // ledger kernel, which folds each transaction in plain Scala; a
+    // distinct and the enrichment follow. The dimensions are lookups in
+    // the plan: no join, no broadcast join.
     //
     // Per-block identity: blockTime alone is NOT unique (Solana emits
-    // multiple blocks per second at second resolution). Without it, two
-    // blocks sharing a blockTime would merge their tx0/tx1/... into one
-    // group — fused balances. A content hash of the parsed struct
-    // (xxhash64, no to_json of multi-MB blocks) keeps the grouping keys
-    // deterministic; two byte-identical blocks in one batch collapse into
-    // one group, and the set-based fold below turns them into the single
-    // block's ledger — idempotent re-ingest. It is computed before the
-    // transactions are exploded: in a select holding a generator the
-    // other expressions run after it, once per transaction.
+    // multiple blocks per second at second resolution), so the distinct
+    // keys on a content hash of the parsed struct (xxhash64, no to_json
+    // of multi-MB blocks). (txIdx, wallet, mint) is unique within a
+    // block, so the distinct drops only the copies of a block that
+    // arrives twice in one batch — idempotent re-ingest. The hash and
+    // the block time are projected before the kernel: in a select
+    // holding a generator the other expressions run after it, once per
+    // generated row, and the kernel (not code-generated) would copy the
+    // whole block into each of its rows to read them there.
     // The surrogate signature stays blockTime-txIdx-1 (reference
-    // behavior, which tolerates signature collisions) but grouping keys
-    // include __block_id.
-    val noAddrs = array().cast("array<string>")
-    val txs = blocks
-      .withColumn("__block_id", xxhash64(col("result.blockTime"),
-        col("result.transactions")))
-      .select(
-        col("__block_id"),
+    // behavior, which tolerates signature collisions).
+    val spark = blocks.sparkSession
+    val rows = blocks
+      .select(xxhash64(col("result.blockTime"), col("result.transactions"))
+          .as("__block_id"),
         col("result.blockTime").as("timestamp"),
-        posexplode(col("result.transactions")).as(Seq("txIdx", "tx")))
-
-    // Hot filter + positional lookup in ONE pass: explode addresses with
-    // their index (the balance arrays ride along), keep the hot ones (an
-    // IN-set test per address), and fold the hits back into a pos→addr map
-    // per tx. Transactions with no hit disappear at the filter — the
-    // reference's early-exit filter, distributed. collect_set keeps a
-    // re-ingested block's positions unique. Every row of a group carries
-    // the same tx's balance arrays, so first() is exact.
-    val hotTxs = txs
-      .select(col("__block_id"), col("timestamp"), col("txIdx"),
-        col("tx.meta.preTokenBalances").as("pre"),
-        col("tx.meta.postTokenBalances").as("post"),
-        posexplode(concat(
-          coalesce(col("tx.transaction.message.accountKeys"), noAddrs),
-          coalesce(col("tx.meta.loadedAddresses.writable"), noAddrs),
-          coalesce(col("tx.meta.loadedAddresses.readonly"), noAddrs)))
-          .as(Seq("pos", "addr")))
-      .filter(col("addr").isin(dims.hot: _*))
-      .groupBy(col("__block_id"), col("timestamp"), col("txIdx"))
-      .agg(map_from_entries(collect_set(struct(col("pos"), col("addr"))))
-          .as("hotAt"),
-        first(col("pre")).as("pre"), first(col("post")).as("post"))
-
-    // Side-tagged balance entries with their within-array position (the
-    // LWW ordering key). Missing uiAmountString ⇒ null ⇒ treated like the
-    // reference's empty string.
-    def side(s: String, arr: Column): Column =
-      coalesce(transform(arr, (b, i) => struct(
-        lit(s).as("side"), i.as("entryIdx"),
-        b.getField("accountIndex").as("accountIndex"),
-        b.getField("mint").as("mint"),
-        b.getField("owner").as("owner"),
-        b.getField("uiTokenAmount").getField("uiAmountString").as("bal"))),
-        array().cast(
-          "array<struct<side:string,entryIdx:int,accountIndex:int," +
-            "mint:string,owner:string,bal:string>>"))
-
-    val entries = hotTxs.select(col("__block_id"), col("timestamp"),
-        col("txIdx"), col("hotAt"),
-        explode(concat(side("pre", col("pre")), side("post", col("post"))))
-          .as("e"))
-      .select(col("__block_id"), col("timestamp"), col("txIdx"),
-        Tagging.coalesceKey(col("hotAt")(col("e.accountIndex")),
-          col("e.owner")).as("wallet"),
-        col("e.mint").as("mint"), col("e.side").as("side"),
-        col("e.entryIdx").as("entryIdx"), col("e.bal").as("bal"))
-      .filter(col("wallet").isNotNull)
-
-    // O24: last-write-wins pre/post pivot — one aggregate (no window
-    // sort, no join). Its keys extend the per-tx fold's, whose shuffle
-    // already clusters them, so it adds no exchange.
-    val merged = entries
-      .groupBy(col("__block_id"), col("timestamp"), col("txIdx"),
-        col("wallet"), col("mint"))
-      .agg(
-        max_by(when(col("side") === "pre", coalesce(col("bal"), lit(""))),
-          when(col("side") === "pre", col("entryIdx"))).as("pre_raw"),
-        max_by(when(col("side") === "post", coalesce(col("bal"), lit(""))),
-          when(col("side") === "post", col("entryIdx"))).as("post_raw"))
-      .withColumn("pre_balance", Tagging.emptyToNull(col("pre_raw")))
-      .withColumn("post_balance", Tagging.emptyToNull(col("post_raw")))
-      .filter(col("pre_balance").isNotNull || col("post_balance").isNotNull)
-      .withColumn("signature", Tagging.surrogateKey(col("timestamp"),
-        col("txIdx"), lit("1")))
+        col("result.transactions").as("__txs"))
+      .select(col("__block_id"), col("timestamp"),
+        LedgerKernel.column(spark, col("__txs"), dims.hot)
+          .as(LedgerKernel.rowSchema.fieldNames.toSeq))
+      .distinct()
 
     // Enrichment (O29/O30): four membership tags, each an IN-set test,
-    // and two price lookups in a vault → prices map literal typed like the
-    // dimension's price_usd. explode_outer gives a wallet without a price
-    // one row with a NULL price, and one with several prices a row each.
+    // and two hashed price lookups typed like the dimension's price_usd.
+    // explode_outer gives a wallet without a price one row with a NULL
+    // price, and one with several prices a row each.
     def tag(kind: String, key: String): Column =
       Tagging.isinTag(col(key), dims.tags.getOrElse(kind, Nil))
+    def price(side: String): Column =
+      explode_outer(PriceLookup.column(spark, col("wallet"),
+        dims.prices.getOrElse(side, Map.empty), dims.priceType))
 
-    val priceMap = MapType(StringType, ArrayType(dims.priceType))
-    def price(sideName: String): Column = {
-      val byVault = dims.prices.getOrElse(sideName, Map.empty)
-        .map { case (vault, ps) => vault -> ps.asScala.toSeq }
-      explode_outer(try_element_at(Bridge.column(Literal(
-        CatalystTypeConverters.createToCatalystConverter(priceMap)(byVault),
-        priceMap)), col("wallet")))
-    }
-
-    merged
-      .select(col("timestamp"), col("wallet"), col("signature"),
+    rows
+      .select(col("timestamp"), col("wallet"),
+        Tagging.surrogateKey(col("timestamp"), col("txIdx"), lit("1"))
+          .as("signature"),
         col("mint"), col("pre_balance"), col("post_balance"),
         tag("BASE_VAULTS", "wallet").as("baseVault"),
         tag("QUOTE_VAULTS", "wallet").as("quoteVault"),

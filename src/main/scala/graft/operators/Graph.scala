@@ -1264,7 +1264,9 @@ object Graph {
     * count is the hop depth, and re-proposals from non-final values
     * are monotonically absorbed by the final per-node max — one hash
     * join + one hash aggregate per round, each frontier a counted
-    * checkpoint (its size ends the loop), nothing on the driver.
+    * checkpoint (its size ends the loop), nothing on the driver. Each
+    * pass's final per-node max is one more counted checkpoint, whose
+    * count feeds the cycle guard and which the returned plan reads.
     *
     * THROWS if `maxDepth` rounds leave a non-empty frontier — on a
     * cyclic input the longest path is infinite and a partial answer
@@ -1291,7 +1293,7 @@ object Graph {
     // node along `fromCol`→`toCol`, accumulating every round's
     // arrivals; final answer = max per node over all rounds
     def closure(start: DataFrame, fromCol: String, toCol: String,
-                outCol: String): DataFrame = {
+                outCol: String): (DataFrame, Long) = {
       // each round's frontier is checkpointed once and BUFFERED; the
       // final answer unions the flat buffer in one pass instead of
       // re-checkpointing a growing accumulator every round (which
@@ -1318,8 +1320,8 @@ object Graph {
         s"criticalPath did not exhaust the DAG in $maxDepth rounds; " +
           "raise maxDepth (or the input has a cycle — the longest " +
           "path of a cyclic graph is infinite)")
-      rounds.reduce(_ unionAll _)
-        .groupBy(col("node")).agg(max(col("len")).as(outCol))
+      Bridge.countedCheckpoint(rounds.reduce(_ unionAll _)
+        .groupBy(col("node")).agg(max(col("len")).as(outCol)))
     }
 
     // the two passes are INDEPENDENT (shared state is only the
@@ -1342,8 +1344,8 @@ object Graph {
           Seq("node"), "left_anti")
         .select(col("node"), lit(0L).as("len")),
       "__c", "__p", "lt"))
-    val ef = Await.result(efF, Duration.Inf)
-    val lt = Await.result(ltF, Duration.Inf)
+    val (ef, efCount) = Await.result(efF, Duration.Inf)
+    val (lt, ltCount) = Await.result(ltF, Duration.Inf)
     // CYCLE GUARD, part two: the in-loop maxDepth throw only fires for
     // cycles REACHABLE from a source/sink. A component with no source
     // at all (A→B plus B→A) never enters either start frontier, both
@@ -1351,10 +1353,7 @@ object Graph {
     // drop its nodes — a plausible-looking partial answer. Every node
     // of a true DAG lies on a source→sink path, so ef/lt covering
     // fewer nodes than the input is proof of a source-less (or
-    // sink-less) cycle. n's count came with its checkpoint; ef and lt
-    // are two 1-row count jobs — driver-side constants, not data movement.
-    val efCount = ef.count()
-    val ltCount = lt.count()
+    // sink-less) cycle. Every count came with its checkpoint.
     if (efCount < nCount || ltCount < nCount) throw new IllegalStateException(
       s"criticalPath input is not a DAG: ${nCount - math.min(efCount, ltCount)} " +
         "node(s) unreachable from any source/sink — a source-less or " +
@@ -1362,7 +1361,7 @@ object Graph {
         "cyclic graph is infinite")
     // project duration: 1-row aggregate, broadcast onto every node
     val t = ef.agg(max(col("ef")).as("__t"))
-    // n and e stay checkpointed — the returned plan still reads n, and
+    // n, e, ef and lt stay checkpointed — the returned plan reads them, and
     // truncated lineage cannot rebuild dropped blocks; the session-level
     // cache clear (Bench/Verify per query) reclaims them
     n.join(ef, Seq("node")).join(lt, Seq("node"))

@@ -25,17 +25,7 @@ object Tagging {
     if (members.isEmpty) lit(null).cast("string")
     else when(col.isin(members: _*), col)
 
-  /** Empty/blank string → NULL coercion (the reference appends SQL NULL when
-    * a balance string_view is empty; we preserve that semantic rule). */
-  def emptyToNull(c: Column): Column =
-    when(length(c) === 0 || c.isNull, lit(null).cast("string")).otherwise(c)
-
   /** Surrogate key: dash-joined parts (blockTime-txIdx-datacenter in the
     * reference). */
   def surrogateKey(parts: Column*): Column = concat_ws("-", parts: _*)
-
-  /** Coalesced row key: positional hot-address override if present, else the
-    * record's own owner; rows with neither are dropped by the caller. */
-  def coalesceKey(preferred: Column, fallback: Column): Column =
-    coalesce(emptyToNull(preferred), emptyToNull(fallback))
 }

@@ -24,22 +24,29 @@ object Streams {
     * run the flagship query per micro-batch, hand each batch to `sink`.
     * Dimensions are re-read per batch via the closure — the stream–static
     * join semantics of the reference (dims re-fetched every chunk, O9).
+    * A constant dimension (every leaf a local relation, every expression
+    * deterministic and UDF-free) cannot change, so it is read on the
+    * first trigger only.
     *
     * The flagship is planned once per stream: each trigger reads the
-    * dimensions into lookups (no job for local ones) and, while they are
-    * unchanged, swaps its batch relation into the analysed plan of the
-    * batch that first saw them; changed dimensions rebuild that plan.
+    * dimensions into lookups and, while they are unchanged, swaps its
+    * batch relation into the analysed plan of the batch that first saw
+    * them; changed dimensions rebuild that plan. A batch of one
+    * partition (one block file) is declared `SinglePartition`, so the
+    * ledger's distinct runs without an exchange.
     *
     * `blocksPerTrigger` is the latency/throughput dial: 1 (default)
     * reproduces the reference's per-block cadence (its mailbox hands the
     * parser one block at a time) and pays a fixed per-trigger cost:
-    * source listing, the dimension read, optimising and planning the kept
-    * plan, its 2 Spark jobs — one scan-and-shuffle job that parses each
-    * block once and one result job — and three small checkpoint writes
-    * (the file-source log, the offset log and the commit log), about 1 ms
-    * each through [[LocalCheckpointFiles]]. Larger values amortize that
-    * cost across blocks, and ≤ 0 removes the cap entirely (each trigger
-    * takes everything available — the backfill shape).
+    * source listing, reading the dimensions that can change (no job for
+    * local ones), optimising and planning the kept plan, one Spark job
+    * that parses the block and runs the per-block ledger kernel, and
+    * three small checkpoint writes (the file-source log, the offset log
+    * and the commit log), about 1 ms each through
+    * [[LocalCheckpointFiles]]. A batch of several partitions adds a
+    * shuffle of its ledger rows and a second job. Larger values amortize
+    * that cost across blocks, and ≤ 0 removes the cap entirely (each
+    * trigger takes everything available — the backfill shape).
     *
     * `checkpointLocation` is where the stream keeps its offsets and
     * commits; a stream restarted on the same location resumes after the
@@ -62,20 +69,23 @@ object Streams {
     // output attributes, so a plan built over one batch's relation reads
     // any later one.
     var kept: Option[(Rugpull.Dims, LogicalPlan, LogicalPlan)] = None
+    val readDims = Rugpull.Dims.reader(hot, watchlists, prices)
     val writer = blocks.writeStream
     checkpointLocation.foreach(writer.option("checkpointLocation", _))
     writer
       .outputMode(OutputMode.Append())
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val dims = Rugpull.Dims.read(hot, watchlists, prices)
-        val rel = batch.queryExecution.analyzed
+        val dims = readDims()
+        // a one-file batch is one partition: its distinct runs in place
+        val one = Bridge.declareSinglePartition(batch)
+        val rel = one.queryExecution.analyzed
         val ledger = kept match {
           case Some((d, r, plan)) if d == dims && r.output == rel.output =>
             Bridge.ofAnalyzed(batch.sparkSession,
               plan.transform { case p if p eq r => rel })
           case _ =>
-            val df = Rugpull.tokenFlows(batch, dims)
+            val df = Rugpull.tokenFlows(one, dims)
             val plan = df.queryExecution.analyzed
             // kept only when the batch relation, which the swap replaces,
             // is the plan's one leaf

@@ -66,16 +66,36 @@ object Bridge {
     df.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD
           if lr.rdd.getNumPartitions == n =>
-        lr.output.find(_.name == key).fold(df) { k =>
-          val session = df.sparkSession
-            .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-          ofRows(session, lr.copy(outputPartitioning =
-            org.apache.spark.sql.catalyst.plans.physical
-              .HashPartitioning(Seq(k), n))(
-            session, Some(lr.computeStats()), Some(lr.constraints)))
-        }
+        lr.output.find(_.name == key).fold(df)(k => declare(df, lr,
+          org.apache.spark.sql.catalyst.plans.physical
+            .HashPartitioning(Seq(k), n)))
       case _ => df
     }
+
+  /** An RDD-backed Dataset (a checkpoint, a foreachBatch batch) re-wrapped
+    * so its LogicalRDD declares `SinglePartition` when its RDD has exactly
+    * one partition: one partition is clustered on every key, so an
+    * aggregate over it needs no exchange. Any other `df` comes back
+    * unchanged. Statistics and constraints are kept. */
+  def declareSinglePartition(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD
+          if lr.rdd.getNumPartitions == 1 =>
+        declare(df, lr,
+          org.apache.spark.sql.catalyst.plans.physical.SinglePartition)
+      case _ => df
+    }
+
+  private def declare(df: org.apache.spark.sql.DataFrame,
+      lr: org.apache.spark.sql.execution.LogicalRDD,
+      partitioning: org.apache.spark.sql.catalyst.plans.physical.Partitioning)
+      : org.apache.spark.sql.DataFrame = {
+    val session = df.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    ofRows(session, lr.copy(outputPartitioning = partitioning)(
+      session, Some(lr.computeStats()), Some(lr.constraints)))
+  }
 
   /** Wrap a custom logical plan in a DataFrame (Dataset.ofRows is
     * `private[sql]`) — the entry point for library-defined operators that

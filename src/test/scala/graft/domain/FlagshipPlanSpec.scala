@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.{ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.graft.TestBridge
@@ -11,7 +12,8 @@ import org.apache.spark.sql.graft.TestBridge
 import graft.SparkSpec
 
 /** Guards the executed plan of the flagship per micro-batch: each block's
-  * JSON is scanned once, the ledger needs one shuffle, and the dimension
+  * JSON is scanned once, the ledger needs one shuffle, the per-block
+  * kernel leaves no object-hash or sort aggregate, and the dimension
   * tables enter as driver-side lookups — no join and no broadcast, so a
   * batch runs the scan-and-shuffle job and the result job only. */
 class FlagshipPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
@@ -36,5 +38,9 @@ class FlagshipPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan)
     assert(collect(plan) { case b: BroadcastExchangeExec => b }.isEmpty, plan)
     assert(run.jobs <= 2, s"${run.jobs} jobs")
+    // the per-block kernel folds each transaction: no object-hash or
+    // sort aggregate (collect_set, first, max_by) is left
+    assert(collect(plan) { case a: ObjectHashAggregateExec => a }.isEmpty, plan)
+    assert(collect(plan) { case a: SortAggregateExec => a }.isEmpty, plan)
   }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.TestBridge
-import org.apache.spark.sql.types.{DecimalType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.SparkSpec
 
@@ -143,6 +143,38 @@ class RugpullSpec extends SparkSpec {
       "baseMint", "quoteMint", "base_price", "quote_price"))
   }
 
+  test("the ledger's StructType, nullability included, is unchanged") {
+    // recorded at the parent of the per-block kernel
+    def field(name: String, t: DataType, nullable: Boolean = true) =
+      StructField(name, t, nullable)
+    assert(ledger.schema === StructType(Seq(field("timestamp", LongType),
+      field("wallet", StringType), field("signature", StringType, false),
+      field("mint", StringType), field("pre_balance", StringType),
+      field("post_balance", StringType), field("baseVault", StringType),
+      field("quoteVault", StringType), field("baseMint", StringType),
+      field("quoteMint", StringType), field("base_price", DoubleType),
+      field("quote_price", DoubleType))))
+  }
+
+  test("a negative accountIndex and one past the end fall back to the " +
+      "owner") {
+    // VAULT_A at position 0 of two addresses: -1 and 2 name no address
+    val blk = s"""{"result":{"blockTime":1700000100,"transactions":[${
+      tx(Seq("VAULT_A", "X1"), Nil, Nil,
+        s"[${bal(-1, "MINT_B", "W5", Some("5"))},${
+          bal(0, "MINT_Q", "W7", Some("8"))}]",
+        s"[${bal(2, "MINT_B", "W6", Some("6"))},${
+          bal(-1, "MINT_B", "W5", Some("9"))}]")}]}}"""
+    // the rows of the parent of the per-block kernel
+    assert(flows(blk).collect().map(_.toString).sorted.toSeq === Seq(
+      "[1700000100,VAULT_A,1700000100-0-1,MINT_Q,8,null,VAULT_A,null,null," +
+        "MINT_Q,1.25,null]",
+      "[1700000100,W5,1700000100-0-1,MINT_B,5,9,null,null,MINT_B,null,null," +
+        "null]",
+      "[1700000100,W6,1700000100-0-1,MINT_B,null,6,null,null,MINT_B,null," +
+        "null,null]"))
+  }
+
   test("withDecimalBalances: exact beyond double precision") {
     // 18-fractional-digit amount at a magnitude where a double has
     // already lost the tail: the decimal path must keep every digit
@@ -251,6 +283,20 @@ class RugpullSpec extends SparkSpec {
         else Seq("null")), k)
       assert(rs.forall(_.isNullAt(11)), k) // no VAULT_Q wallet row
     }
+  }
+
+  test("a price dimension past the inline bound is broadcast and prices " +
+      "the same rows") {
+    val (hot, watchlists, prices) = fixtureDims
+    val many = prices.union((0 until 20000).map(i => (s"VAULT_X$i", "base",
+      i.toDouble)).toDF("vault", "side", "price_usd"))
+    val out = Rugpull.tokenFlows(blocksOf(blockJson), hot, watchlists, many)
+    val tables = out.queryExecution.analyzed.flatMap(_.expressions)
+      .flatMap(_.collect { case p: PriceLookup => p.table })
+    // the base table is broadcast, the one-vault quote table is not
+    assert(tables.map(_.broadcasted).sorted === Seq(false, true))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(out) === rows(ledger))
   }
 
   test("a dimension estimated past the broadcast limit is refused before " +

@@ -8,20 +8,6 @@ import graft.SparkSpec
 class OperatorsSpec extends SparkSpec with TableDrivenPropertyChecks {
   import spark.implicits._
 
-  test("Tagging.emptyToNull: empty string becomes NULL, others pass") {
-    val r = Seq("", "x", " ").toDF("c")
-      .select(Tagging.emptyToNull($"c").as("c")).collect().map(_.getString(0))
-    assert(r.toSeq === Seq(null, "x", " "))
-  }
-
-  test("Tagging.coalesceKey prefers non-empty preferred, falls back") {
-    val r = Seq(("", "fb"), ("p", "fb"), ("", ""))
-      .toDF("a", "b")
-      .select(Tagging.coalesceKey($"a", $"b").as("k"))
-      .collect().map(_.getString(0))
-    assert(r.toSeq === Seq("fb", "p", null))
-  }
-
   test("Joins.semiFilter keeps only watch-listed keys") {
     val fact = Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v")
     val watch = Seq(1, 3).toDF("wk")

@@ -778,6 +778,96 @@ class StreamsSpec extends SparkSpec {
     assert(!reused(3), "the changed watch-list kept the old plan")
   }
 
+  test("tokenFlowsStream: a one-file trigger runs one job and no shuffle") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.graft.TestBridge
+    object plans extends AdaptiveSparkPlanHelper
+    val dir = Files.createTempDirectory("graft-stream-onejob").toFile
+    val hot = Seq("ADDR_0", "ADDR_1").toDF("addr")
+    val watchlists = Seq(("BASE_VAULTS", "ADDR_1")).toDF("kind", "addr")
+    val prices = Seq(("ADDR_1", "base", 2.0)).toDF("vault", "side", "price_usd")
+    // per trigger: (jobs, shuffle exchanges, ledger rows)
+    var runs = Vector.empty[(Int, Int, Int)]
+    val q = Streams.tokenFlowsStream(spark, dir.getAbsolutePath, hot,
+        watchlists, prices,
+        trigger = org.apache.spark.sql.streaming.Trigger
+          .ProcessingTime("50 milliseconds")) { (df: DataFrame, _: Long) =>
+      val run = TestBridge.recorded(spark)(df.collect())
+      val shuffles = plans.collect(df.queryExecution.executedPlan) {
+        case s: ShuffleExchangeExec => s }.length
+      runs :+= ((run.jobs, shuffles, run.value.length))
+    }
+    try (0 until 2).foreach { t =>
+      dropFile(dir, s"b$t.json", addrBlock(t)); q.processAllAvailable()
+    } finally q.stop()
+    // the first trigger builds the plan, the second reuses it
+    assert(runs === Vector((1, 0, 1), (1, 0, 1)))
+  }
+
+  test("tokenFlowsStream: one trigger holding the same block in two files " +
+      "yields its ledger once") {
+    import graft.domain.Rugpull
+    val dir = Files.createTempDirectory("graft-stream-twice")
+    val once = Files.createTempDirectory("graft-stream-once")
+    Seq(dir.resolve("b0.json"), dir.resolve("b0-again.json"),
+      once.resolve("b0.json")).foreach(Files.writeString(_, addrBlock(0)))
+    val hot = Seq("ADDR_0").toDF("addr")
+    val watchlists = Seq(("BASE_VAULTS", "ADDR_0")).toDF("kind", "addr")
+    val prices = Seq(("ADDR_0", "base", 2.0)).toDF("vault", "side", "price_usd")
+    var batches = Vector.empty[Seq[String]]
+    val q = Streams.tokenFlowsStream(spark, dir.toString, hot, watchlists,
+        prices, blocksPerTrigger = 0) { (df: DataFrame, _: Long) =>
+      batches :+= df.collect().map(_.toString).sorted.toSeq
+    }
+    q.awaitTermination(60000)
+    val single = Rugpull.tokenFlows(Rugpull.parseBlocks(spark, once.toString),
+      hot, watchlists, prices).collect().map(_.toString).sorted.toSeq
+    assert(single.length === 1)
+    assert(batches === Vector(single))
+  }
+
+  test("tokenFlowsStream reads constant dimensions once: later triggers " +
+      "start no SQL execution for them") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.graft.TestBridge
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Files.createTempDirectory("graft-stream-constdims").toFile
+    val hot = (0 until 3).map(t => s"ADDR_$t").toDF("addr")
+    val watchlists = Seq(("BASE_VAULTS", "ADDR_1")).toDF("kind", "addr")
+    val prices = Seq(("ADDR_2", "base", 2.0)).toDF("vault", "side", "price_usd")
+    // executions whose every leaf is a local relation: dimension reads
+    val reads = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
+          reads.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    // per trigger: (dimension reads so far, ledger rows)
+    var seen = Vector.empty[(Int, Seq[(String, String, Any)])]
+    spark.listenerManager.register(listener)
+    val q = Streams.tokenFlowsStream(spark, dir.getAbsolutePath, hot,
+        watchlists, prices,
+        trigger = org.apache.spark.sql.streaming.Trigger
+          .ProcessingTime("50 milliseconds")) { (df: DataFrame, _: Long) =>
+      val rows = df.collect().toSeq.map(r => (r.getAs[String]("wallet"),
+        r.getAs[String]("baseVault"), r.getAs[Any]("base_price")))
+      TestBridge.drainListeners(spark)
+      seen :+= ((reads.get, rows))
+    }
+    try (0 until 3).foreach { t =>
+      dropFile(dir, s"b$t.json", addrBlock(t)); q.processAllAvailable()
+    } finally {
+      q.stop()
+      spark.listenerManager.unregister(listener)
+    }
+    assert(seen === Vector((3, Seq(("ADDR_0", null, null))),
+      (3, Seq(("ADDR_1", "ADDR_1", null))), (3, Seq(("ADDR_2", null, 2.0)))))
+  }
+
   /** One delivery to a flagship sink: batch id, its blocks' timestamps,
     * its ledger rows. */
   private case class Delivery(id: Long, blocks: Seq[Long], rows: Seq[String])
